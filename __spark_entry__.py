@@ -8,9 +8,9 @@ identically on both sides; double aggregates are rounded to 2 decimals on
 both sides, and order-dependent money sums accumulate as exact
 DECIMAL(30,6) in BOTH engines (functions.dsum/davg/exact_money_summary)
 so the rounding never straddles an engine-dependent boundary — policed by
-tools/margin_audit.py; see carbondata_spark/queries.py. Iteration order
-of ``queries()`` is the driver-priority order derived from
-driver_ledger.json (changed/red/never-verified queries first).
+tools/margin_audit.py; see carbondata_spark/queries.py. ``queries()``
+lists the headline queries first, then the rest, each group in
+registration order.
 """
 
 from __future__ import annotations

@@ -10,12 +10,6 @@ turn the standing multimodal `weak` into tested decode paths with
 closed-form fixtures (synth_ppm / synth_wav) that a SQL oracle can
 recompute exactly (query_defs/media_q.py).
 
-This lives in its own module (not multimodal.py) deliberately: the
-ledger's closure digests (carbondata_spark/ledger.py) track result
-machinery per module, and multimodal.py sits inside the closure of
-every pipeline.py driver row — landing NEW kernels there would dirty 40
-unrelated rows' digests for a change that cannot affect their results.
-
 Binary payload model (same as multimodal.py):
 
     media: struct fields (doc_id, media_type, content: binary,

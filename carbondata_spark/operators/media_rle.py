@@ -1,4 +1,4 @@
-"""REAL RLE-compressed media decode kernel (staged r17 → registers r18).
+"""REAL RLE-compressed media decode kernel.
 
 The three codec-free kernels in operators/media_codecs.py (PPM / WAV /
 24-bit BMP) all read FIXED-stride payloads: the byte position of every
@@ -14,24 +14,12 @@ needs no external codec: the full decoder is ~60 lines of stdlib+NumPy
 an RLE dialect is the one compressed format class implementable
 deterministically in pure NumPy).
 
-This lives in its OWN module (not media_codecs.py) deliberately: the
-ledger's closure digests (carbondata_spark/ledger.py) track result
-machinery per module, and media_codecs.py sits inside the closures of
-the four driver-green p_media_* rows — landing a NEW kernel there would
-dirty them for a change that cannot affect their results, and r17's
-blast budget is already fully committed to the bloom+sql core edit
-(driver_debt.json). Nothing existing imports this module; its query row
-(query_defs/media_rle_q.py) stages unregistered until r18's absorption
-round per the sequencing math in BENCH_NOTES_r17.
-
 Reference provenance: the payload model mirrors the reference's
 multimodal ingestion surface (binary content column + typed codec
 metadata); the RLE8 wire format is the public Windows BITMAPINFOHEADER
 / BI_RLE8 spec, same family as media_codecs.decode_bmp's BI_RGB.
 
-Binary payload model (same struct as multimodal.py / media_codecs.py —
-the constant is REDEFINED here, not imported, to keep this module's
-closure decoupled from theirs):
+Binary payload model (same struct as multimodal.py / media_codecs.py):
 
     media: struct fields (doc_id, media_type, content: binary,
            meta: struct<codec string, n_bytes long>)
@@ -45,10 +33,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, content binary, "
-    "meta struct<codec string, n_bytes long>"
-)
+from carbondata_spark.operators.media_codecs import MEDIA_SCHEMA
 
 BMP_RLE8_DECODED_SCHEMA = (
     "doc_id long, width int, height int, bits int, "

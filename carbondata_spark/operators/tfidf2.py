@@ -1,9 +1,7 @@
 """Round-13 rewrite of TF-IDF top-terms — the LIVE implementation behind
 the ``p_text_tfidf`` headline query (query_defs/olap3.py delegates here;
 ``text.tfidf_top_terms`` remains as the v1 API and the equivalence
-oracle in tests/test_tfidf2.py). The swap went through the query_defs
-layer rather than text.py so the text.py closure (43 registry rows)
-stayed untouched within the round's driver-prefix budget.
+oracle in tests/test_tfidf2.py).
 
 What changes vs the v1 plan (text.py:110-180):
 

@@ -51,36 +51,24 @@ def register(
     doc: str = "",
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]) -> Callable:
+        if name in _REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
         _REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, headline=headline, doc=doc)
         return fn
 
     return deco
 
 
-# The driver's correctness harness checks a bounded PREFIX of the
-# registry (round 1: exactly the first 50 of 66 in iteration order, the
-# rest silently unchecked). Iteration order is therefore part of the
-# driver contract. Rounds 1-3 maintained the priority block by hand and
-# twice leaked a post-verification rewrite past the prefix; the order is
-# now DERIVED from driver_ledger.json (see carbondata_spark/ledger.py):
-# queries whose source closure changed since their last driver row (or
-# that never had one) come first, then the rest oldest-driver-row first.
-
-
 def registry() -> dict[str, Query]:
+    """Every registered query: headline rows first, then the rest, each
+    group in registration order."""
     # Import side-effect modules that register additional queries.
     import carbondata_spark.query_defs  # noqa: F401
 
-    try:
-        from carbondata_spark.ledger import priority_order
-
-        order = priority_order(
-            {n: (q.fn.__module__, q.fn.__name__) for n, q in _REGISTRY.items()},
-            headline={n for n, q in _REGISTRY.items() if q.headline},
-        )
-    except Exception:
-        order = list(_REGISTRY)  # never let ordering break the contract
-    return {n: _REGISTRY[n] for n in order}
+    return {
+        q.name: q
+        for q in sorted(_REGISTRY.values(), key=lambda q: not q.headline)
+    }
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

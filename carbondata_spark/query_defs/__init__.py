@@ -4,10 +4,6 @@ Importing this package registers every query into
 ``carbondata_spark.queries._REGISTRY``.
 """
 
-# olap first: insertion order is the within-bucket tie-break for the
-# ledger-derived driver priority, and the headline OLAP family should win
-# tail slots of the driver's bounded checked prefix over peripheral
-# queries with the same staleness rank.
 import carbondata_spark.query_defs.olap  # noqa: F401
 import carbondata_spark.query_defs.events_q  # noqa: F401
 import carbondata_spark.query_defs.olap2  # noqa: F401
@@ -32,7 +28,6 @@ import carbondata_spark.query_defs.scalars  # noqa: F401
 import carbondata_spark.query_defs.store_q  # noqa: F401
 import carbondata_spark.query_defs.olap100  # noqa: F401
 import carbondata_spark.query_defs.refsuites_q  # noqa: F401
-
-# AFTER pipeline: media_q re-registers p_media_decode (last-write-wins)
-# over the r1 stub row — see media_q's module docstring.
-import carbondata_spark.query_defs.media_q  # noqa: E402,F401
+import carbondata_spark.query_defs.media_q  # noqa: F401
+import carbondata_spark.query_defs.media_rle_q  # noqa: F401
+import carbondata_spark.query_defs.restructure_q  # noqa: F401

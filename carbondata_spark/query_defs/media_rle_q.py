@@ -1,19 +1,7 @@
-"""RLE-compressed media decode driver row — STAGED in r17, registers r18.
+"""RLE-compressed media decode driver row.
 
-This module is deliberately NOT imported by query_defs/__init__.py yet.
-r17's driver prefix is fully committed to the bloom+sql core-edit blast
-(89 changed rows, 39 declared debt — driver_debt.json): registering a
-new never-verified row now would displace a 40th row and invalidate the
-declaration's exactness (ledger.budget_report requires the debt to name
-EXACTLY the displaced set). Per the sequencing math in BENCH_NOTES_r17,
-r18 is the absorption round with ~11 free prefix slots for NEW
-self-contained rows — flipping this row on there is ONE import line in
-query_defs/__init__.py, which sits in no query's closure (verified: no
-module imports the package __init__), so the flip dirties zero existing
-rows. Until then the full chain is certified by tests/test_media_rle.py:
-kernel round-trip + malformed-payload + escape-semantics tests
-in-process, and the exact registered-form oracle parity re-verified in a
-fresh interpreter against DuckDB.
+Besides this row's oracle check, tests/test_media_rle.py covers the
+kernel round-trip, malformed payloads and escape semantics.
 
 The chain itself (operators/media_rle.py) is the repo's first
 COMPRESSED-format decode kernel: variable-length RLE8 packet walk +
@@ -57,7 +45,7 @@ from carbondata_spark.queries import register, t
            CAST(sum(CASE WHEN i < w THEN val END) AS BIGINT) AS top_row_sum
     FROM v GROUP BY doc_id, w, h
     """,
-    doc="REAL compressed-image decode (staged r17, registers r18): one "
+    doc="REAL compressed-image decode: one "
     "RLE8 BMP per document — run-encoded packets, word-padded absolute "
     "packets, EOL/EOD escapes, a position-delta escape on every "
     "doc_id%4==0 payload, and a 256-entry three-ramp color palette, all "

@@ -44,6 +44,8 @@ segment scan → Spark SQL semantics.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from carbondata_spark.query_defs._tmpdirs import mkdtemp
@@ -192,6 +194,8 @@ def _golden(
     scale: int = 2,
     doc: str = "",
 ) -> None:
+    if not os.path.exists(CSV_PATH):  # the reference checkout is optional
+        return
     register(
         name,
         oracle=f"{ORACLE_VIEW} {oracle_body}",

@@ -1,13 +1,6 @@
 """Second OLAP batch: subqueries, disjunctive predicates, pivot,
 percentiles, array functions, multi-join volume queries — rounding out
 the SELECT surface the reference delegates to Spark (SURVEY.md §2.2-2.8).
-
-Stale-tail rotation (r11): this module's rows were last driver-verified
-in r5-r7 — the oldest certifications in the tree, and q19_disjunctive /
-q_approx_distinct are exactly the semantics (disjunctive pushdown,
-HLL sketches) that rot silently if a dependency shifts. This docstring
-edit deliberately re-enters the closure into the driver prefix so every
-row here gets a fresh hard signal this round.
 """
 
 from __future__ import annotations

@@ -9,10 +9,6 @@ Scale notes are per-query; the common rules: no forced broadcast of
 anything that grows with the fact table, aggregates pushed below joins
 where the shape allows (Q17, Q20, Q21 pre-aggregate lineitem before
 joining), deterministic tiebreaks on every top-k.
-
-Stale-tail rotation (r11): rows here were last driver-verified in r5-r6;
-this docstring edit deliberately re-enters the closure into the driver
-prefix for a fresh hard signal (oldest-certification refresh).
 """
 
 from __future__ import annotations

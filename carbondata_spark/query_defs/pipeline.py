@@ -26,10 +26,6 @@ def _hex4_sql(expr: str, offset: int = 1) -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-def _hex2_sql(expr: str, offset: int) -> str:
-    return f"({_hex_digit_sql(expr, offset)} * 16 + {_hex_digit_sql(expr, offset + 1)})"
-
-
 # shared oracle CTE: distinct 3-gram shingles per doc
 _SHINGLES_CTE = r"""
 words AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
@@ -417,28 +413,8 @@ def p_sim_cosine_pairs(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal
+# Deduplication: near-duplicate keep-best
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "p_media_decode",
-    oracle=f"""
-    SELECT doc_id,
-           'image' AS media_type,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           CAST({_hex2_sql("md5(text)", 1)} + 1 AS INT) AS width,
-           CAST({_hex2_sql("md5(text)", 3)} + 1 AS INT) AS height,
-           md5(text) AS checksum
-    FROM documents
-    """,
-    doc="Multimodal plumbing: binary media column decoded via mapInPandas "
-    "(deterministic STUB kernel; real codec drops in per-batch).",
-)
-def p_media_decode(spark, sf_dir):
-    from carbondata_spark.operators.multimodal import decode_media, documents_as_media
-
-    return decode_media(documents_as_media(t(spark, sf_dir, "documents")))
 
 
 @register(

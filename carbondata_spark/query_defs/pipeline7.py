@@ -75,7 +75,7 @@ def p_bm25_topk(spark: SparkSession, sf_dir: str):
 
 @register(
     "p_dup_weight",
-    oracle="""
+    oracle=r"""
     SELECT doc_id, CAST(n AS BIGINT) AS dup_count, round(1.0 / n, 6) AS weight
     FROM (
       SELECT doc_id, count(*) OVER (

@@ -20,6 +20,8 @@ typed parse + segment roundtrip end-to-end.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -58,20 +60,6 @@ def _cube(spark: SparkSession):
     return cs
 
 
-@register(
-    "q_ref_typed_cube_load",
-    oracle=f"""
-    SELECT strftime(strptime(doj, '%d-%m-%Y'), '%Y-%m-%d %H:%M:%S') AS doj,
-           strftime(strptime(projectenddate, '%d-%m-%Y'), '%Y-%m-%d %H:%M:%S')
-             AS projectenddate
-    FROM read_csv('{DATA_CSV}', header=true, all_varchar=true)
-    """,
-    doc="Reference typed-suite shape: measure-less 3-timestamp cube "
-    "loaded from the 14-column data.csv by header name under the "
-    "harness's dd-MM-yyyy property; certifies header-by-name "
-    "projection + timestamp parse + segment roundtrip. [verbatim: "
-    "sortexpr/TimestampDataTypeTestCase.scala]",
-)
 def q_ref_typed_cube_load(spark: SparkSession, sf_dir: str):
     df = _cube(spark).sql("select doj, projectenddate from timestamptypecube")
     return df.select(
@@ -80,3 +68,21 @@ def q_ref_typed_cube_load(spark: SparkSession, sf_dir: str):
             "projectenddate"
         ),
     )
+
+
+# Registered only where the reference checkout provides the fixture.
+if os.path.exists(DATA_CSV):
+    register(
+        "q_ref_typed_cube_load",
+        oracle=f"""
+        SELECT strftime(strptime(doj, '%d-%m-%Y'), '%Y-%m-%d %H:%M:%S') AS doj,
+               strftime(strptime(projectenddate, '%d-%m-%Y'), '%Y-%m-%d %H:%M:%S')
+                 AS projectenddate
+        FROM read_csv('{DATA_CSV}', header=true, all_varchar=true)
+        """,
+        doc="Reference typed-suite shape: measure-less 3-timestamp cube "
+        "loaded from the 14-column data.csv by header name under the "
+        "harness's dd-MM-yyyy property; certifies header-by-name "
+        "projection + timestamp parse + segment roundtrip. [verbatim: "
+        "sortexpr/TimestampDataTypeTestCase.scala]",
+    )(q_ref_typed_cube_load)

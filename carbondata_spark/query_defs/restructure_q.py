@@ -1,4 +1,4 @@
-"""ALTER CUBE restructure driver row — STAGED in r17, registers r18.
+"""ALTER CUBE restructure driver row.
 
 Upgrades the one SURVEY §2.10 item whose correctness column still reads
 "local" (VERDICT r16: "ALTER CUBE restructure — yes — local") to a full
@@ -6,12 +6,8 @@ driver-oracle row: the reference's restructure statement driven through
 the SQL front door end-to-end, with the post-restructure scan checked
 against a closed-form DuckDB oracle.
 
-Staged unregistered for the same reason as media_rle_q (see that
-module's docstring): r17's driver prefix is fully committed to the
-bloom+sql blast's 39-row debt declaration; r18's absorption round flips
-this row on with a one-line query_defs/__init__ import that sits in no
-existing closure. Until then the exact registered form is verified in a
-fresh interpreter by tests/test_restructure_q.py.
+tests/test_restructure_q.py checks the restructure semantics the row
+relies on (dropped column gone from reads, default-filled column).
 
 Reference provenance: ALTER CUBE grammar CarbonSqlParser.scala:731-776;
 restructure default-fill over pre-ALTER segments RestructureUtil.java:128;
@@ -23,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from carbondata_spark.queries import register, t  # noqa: F401  (t unused; parity w/ siblings)
+from carbondata_spark.queries import register
 from carbondata_spark.query_defs._tmpdirs import mkdtemp
 
 _BUILT: dict[tuple, str] = {}

@@ -1,12 +1,7 @@
 """Third batch: scalar-function surface depth — math, string, datetime,
 null-handling, decimal-exact aggregation (SURVEY.md §2.8: the reference
 evaluates ALL of these via Spark; the oracle pins our expression of the
-semantics cross-engine).
-
-Stale-tail rotation (r11): q_decimal_exact / q_null_handling were last
-driver-verified in r5 — decimal and null edge semantics are the classic
-silent-rot queries, so this docstring edit deliberately re-enters the
-closure into the driver prefix for a fresh hard signal."""
+semantics cross-engine)."""
 
 from __future__ import annotations
 

@@ -14,6 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, in whole GiB (at least 1g).
+
+    In local mode the driver JVM is also the only executor, so its heap
+    must leave room for the Python workers and the OS page cache; a heap
+    allowed to outgrow physical memory fails by OOM kill, not by spill.
+    """
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "4g"
+    return f"{max(1, phys // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "carbondata_spark",
     master: str | None = None,
@@ -56,7 +70,10 @@ def get_spark(
         # session it removes per-query driver compile stalls the same
         # way. Scale-independent (keyed on generated source, not data).
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         # Parquet write defaults: row groups ≈ reference "blocklets"
         # (BLOCKLET_SIZE_DEFAULT_VAL=120k rows, CarbonCommonConstants.java:182);

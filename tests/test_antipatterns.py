@@ -26,7 +26,7 @@ ARROW_BATCH_ALLOWED = {
     # per-payload Python, Arrow-batched through the same mapInPandas
     # plumbing as multimodal.py; embarrassingly parallel, no shuffle
     "operators/media_codecs.py",
-    # r17: the RLE8 BMP kernel (staged r18 row) — same class: decode is
+    # r17: the RLE8 BMP kernel — same class: decode is
     # inherently per-payload sequential, Arrow-batched, no shuffle
     "operators/media_rle.py",
     "streaming/ingest.py",

@@ -27,9 +27,8 @@ HOSTILE_TZ_QUERIES = [
     "q01_pricing_summary", # timestamp-literal filter + exact money
     "q_sessionize",        # event-time gaps over TIMESTAMP_NTZ parquet
     "q_funnel",            # ordered event steps
-    # date-heavy members of the round-6 driver prefix (the full 50-query
-    # prefix passed a one-shot hostile-session sweep in round 6; these
-    # keep the most TZ-sensitive shapes covered on every suite run)
+    # date-heavy shapes (tools/hostile_sweep.py sweeps every row; these
+    # keep the most TZ-sensitive ones covered on every suite run)
     "q04_order_priority",    # date-range filter + exists subquery
     "q12_shipmode_buckets",  # multi-column date comparisons
     "q_retention_cohorts",   # event-ts cohort bucketing

@@ -1,19 +1,10 @@
-"""RLE8 BMP decode kernel (operators/media_rle.py) — staged r18 row.
-
-In-process tests exercise ONLY the operator module (importing the staged
-query_defs/media_rle_q.py here would register its row into the shared
-test process's _REGISTRY and invalidate the ledger/budget tests that
-enumerate the registry — the row must stay out of the r17 prefix, see
-the module docstring). The registered form itself is verified in a
-FRESH interpreter by test_registered_form_matches_oracle_fresh_process,
-the same isolation the driver has.
-"""
+"""RLE8 BMP decode kernel (operators/media_rle.py) and its registered
+row (query_defs/media_rle_q.py)."""
 
 from __future__ import annotations
 
+import os
 import struct
-import subprocess
-import sys
 
 import pytest
 
@@ -176,33 +167,18 @@ def test_random_images_decode_via_independent_encoder():
         assert got == want, (got, want)
 
 
-def test_registered_form_matches_oracle_fresh_process(sf_dir):
-    """Run the STAGED row's exact registered form — media_rle_q.p_media_rle
-    plus its DuckDB oracle — in a fresh interpreter (the staging module
-    must not be imported into this process's registry; see module doc).
-    This is the same check the driver will run when r18 flips the row on."""
-    script = """
-import sys
-sys.path.insert(0, {repo!r})
-from carbondata_spark.session import get_spark
-from carbondata_spark.oracle import compare, duckdb_connection
-import carbondata_spark.query_defs.media_rle_q  # registers p_media_rle
-from carbondata_spark.queries import _REGISTRY
+def test_registered_form_matches_oracle(spark, sf_dir):
+    """The registered row's exact form — p_media_rle plus its DuckDB
+    oracle — at sf0.001."""
+    from carbondata_spark.oracle import compare, duckdb_connection
+    from carbondata_spark.queries import registry
 
-q = _REGISTRY["p_media_rle"]
-spark = get_spark(app_name="media_rle_stage_check", shuffle_partitions=4)
-con = duckdb_connection({sf_dir!r})
-res = compare(q.name, q.fn(spark, {sf_dir!r}).toPandas(), con.execute(q.oracle).fetchdf())
-print("RESULT", res.ok, res.spark_rows, res.oracle_rows, res.detail)
-sys.exit(0 if res.ok and res.spark_rows > 0 else 1)
-"""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_DRIVER_MEM="4g", SPARK_GRAFT_CPUS="4")
-    proc = subprocess.run(
-        [sys.executable, "-c", script.format(repo=repo, sf_dir="/root/testdata/sf0.001")],
-        capture_output=True, text=True, timeout=600, env=env,
-    )
-    assert proc.returncode == 0, f"stdout={proc.stdout[-2000:]}\nstderr={proc.stderr[-2000:]}"
-    assert "RESULT True" in proc.stdout
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    q = registry()["p_media_rle"]
+    con = duckdb_connection(sf)
+    try:
+        res = compare(q.name, q.fn(spark, sf).toPandas(), con.execute(q.oracle).fetchdf())
+    finally:
+        con.close()
+    assert res.ok, res.detail
+    assert res.spark_rows > 0

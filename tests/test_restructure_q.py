@@ -1,63 +1,46 @@
-"""Staged ALTER CUBE restructure row (query_defs/restructure_q.py).
-
-Runs in a FRESH interpreter for the same reason as
-tests/test_media_rle.py's registered-form check: importing the staged
-module here would register its row into the shared test process's
-_REGISTRY and perturb the ledger/budget tests that enumerate the
-registry. One subprocess covers both the oracle parity of the exact
-registered form and the restructure semantics the row relies on
-(dropped column gone from reads, default-filled column present).
-"""
+"""ALTER CUBE restructure row (query_defs/restructure_q.py): oracle
+parity of the exact registered form, and the restructure semantics the
+row relies on (dropped column gone from reads, default-filled column
+present)."""
 
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
 
-
-def test_registered_form_and_restructure_semantics_fresh_process():
-    script = """
-import sys
-sys.path.insert(0, __REPO__)
-from carbondata_spark.session import get_spark
-from carbondata_spark.oracle import compare, duckdb_connection
-import carbondata_spark.query_defs.restructure_q as rq
-from carbondata_spark.queries import _REGISTRY
-
-sf = "/root/testdata/sf0.001"
-q = _REGISTRY["q_alter_cube_restructure"]
-spark = get_spark(app_name="restructure_stage_check", shuffle_partitions=4)
-con = duckdb_connection(sf)
-res = compare(q.name, q.fn(spark, sf).toPandas(), con.execute(q.oracle).fetchdf())
-assert res.ok and res.spark_rows > 0, res.detail
-
-# restructure semantics on the SAME built cube: the dropped measure must
-# be gone from reads of every segment (pre- and post-ALTER alike)...
-from carbondata_spark.sql import CarbonSession
-from carbondata_spark.store import CarbonStore
-key = (sf, spark.sparkContext.applicationId, "alter_cube")
-cs = CarbonSession(spark, CarbonStore(spark, rq._BUILT[key]))
-cols = cs.store.table("cust_cube").columns
-assert "c_acctbal" not in cols, cols
-# ...and the added measure is double-typed (int_measures_as_double
-# coercion applies to restructure-added measures too)
-typ = dict(cs.store.table("cust_cube").dtypes)["c_nationkey"]
-assert typ == "double", typ
-# the pre-ALTER segment is default-filled: exactly half of all rows
-# carry the declared default -1
 from pyspark.sql import functions as F
-counts = cs.store.table("cust_cube").groupBy(
-    (F.col("c_nationkey") == -1).alias("is_default")).count().collect()
-by = {r.is_default: r["count"] for r in counts}
-assert by.get(True) == by.get(False), by
-print("RESTRUCTURE STAGE OK")
-"""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_DRIVER_MEM="4g", SPARK_GRAFT_CPUS="4")
-    proc = subprocess.run(
-        [sys.executable, "-c", script.replace("__REPO__", repr(repo))],
-        capture_output=True, text=True, timeout=600, env=env,
-    )
-    assert proc.returncode == 0, f"stdout={proc.stdout[-2000:]}\nstderr={proc.stderr[-2000:]}"
-    assert "RESTRUCTURE STAGE OK" in proc.stdout
+
+
+def test_registered_form_and_restructure_semantics(spark, sf_dir):
+    import carbondata_spark.query_defs.restructure_q as rq
+    from carbondata_spark.oracle import compare, duckdb_connection
+    from carbondata_spark.queries import registry
+    from carbondata_spark.sql import CarbonSession
+    from carbondata_spark.store import CarbonStore
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    q = registry()["q_alter_cube_restructure"]
+    con = duckdb_connection(sf)
+    try:
+        res = compare(q.name, q.fn(spark, sf).toPandas(), con.execute(q.oracle).fetchdf())
+    finally:
+        con.close()
+    assert res.ok and res.spark_rows > 0, res.detail
+
+    # restructure semantics on the SAME built cube: the dropped measure
+    # must be gone from reads of every segment (pre- and post-ALTER
+    # alike)...
+    key = (sf, spark.sparkContext.applicationId, "alter_cube")
+    cs = CarbonSession(spark, CarbonStore(spark, rq._BUILT[key]))
+    cols = cs.store.table("cust_cube").columns
+    assert "c_acctbal" not in cols, cols
+    # ...and the added measure is double-typed (int_measures_as_double
+    # coercion applies to restructure-added measures too)
+    typ = dict(cs.store.table("cust_cube").dtypes)["c_nationkey"]
+    assert typ == "double", typ
+    # the pre-ALTER segment is default-filled: exactly half of all rows
+    # carry the declared default -1
+    counts = cs.store.table("cust_cube").groupBy(
+        (F.col("c_nationkey") == -1).alias("is_default")
+    ).count().collect()
+    by = {r.is_default: r["count"] for r in counts}
+    assert by.get(True) == by.get(False), by

@@ -95,45 +95,6 @@ def test_catalog_cache_bounded():
 
 
 # ---------------------------------------------------------------------------
-# self-expiring optimization-round declaration (r18 ADVICE medium item)
-# ---------------------------------------------------------------------------
-
-
-def test_round_mode_declaration_self_expires(tmp_path):
-    import json
-
-    from carbondata_spark import ledger as L
-
-    p = tmp_path / "driver_round_mode.json"
-    # matching round -> suspended
-    p.write_text(json.dumps({"round": 19, "mode": "optimization"}))
-    assert L.round_mode_status(str(p), active_round=19)[0] == "suspended"
-    # any other round -> expired (hard-fail in consumers), never a bypass
-    assert L.round_mode_status(str(p), active_round=20)[0] == "expired"
-    assert L.round_mode_status(str(p), active_round=18)[0] == "expired"
-    # non-optimization or missing -> absent (gates armed)
-    p.write_text(json.dumps({"round": 19, "mode": "build"}))
-    assert L.round_mode_status(str(p), active_round=19)[0] == "absent"
-    assert L.round_mode_status(str(tmp_path / "nope.json"), 19)[0] == "absent"
-    # malformed round -> expired, not a crash and not a bypass
-    p.write_text(json.dumps({"round": "nineteen", "mode": "optimization"}))
-    assert L.round_mode_status(str(p), active_round=19)[0] == "expired"
-
-
-def test_active_round_tracks_bench_artifacts():
-    from carbondata_spark import ledger as L
-
-    # the repo's own artifacts: active round == latest BENCH_rN + 1, and
-    # the committed declaration matches it (suspended, not expired)
-    state, _mode, active = L.round_mode_status()
-    assert active == L.latest_completed_round() + 1
-    assert state == "suspended", (
-        "driver_round_mode.json must name the active round; if this fails "
-        "the declaration went stale — delete or update it"
-    )
-
-
-# ---------------------------------------------------------------------------
 # MERGE r19 shape: row-granular zone pruning + observe-detection commit
 # ---------------------------------------------------------------------------
 

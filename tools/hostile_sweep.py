@@ -1,17 +1,14 @@
-"""Pre-flight: oracle-diff the driver-prefix queries on a HOSTILE session.
+"""Oracle-diff every registered query on a HOSTILE session.
 
 The driver runs queries()[name] on ITS OWN SparkSession — any timezone,
 none of our pinned confs — so `ensure_session_confs` must re-pin what
 matters on every query entry. The suite spot-checks that for the most
 TZ-sensitive queries (tests/test_correctness.py::HOSTILE_TZ_QUERIES);
-this tool sweeps the ENTIRE current driver prefix (the changed block,
-i.e. exactly the rows the driver will verify this round) from a fresh
-process on an America/New_York session, mirroring the driver's
-conditions as closely as the sandbox allows.
+this tool sweeps EVERY registry() row from a fresh process on an
+America/New_York session, mirroring the driver's conditions.
 
 Usage: python tools/hostile_sweep.py [sf_dir]   (default sf0.01)
-Exit 0 iff every prefix query matches its oracle. Run it before the
-round ends; takes ~10 min at sf0.01 on local[32].
+Exit 0 iff every query matches its oracle.
 """
 
 from __future__ import annotations
@@ -25,18 +22,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     from pyspark.sql import SparkSession
 
-    from carbondata_spark.ledger import DRIVER_PREFIX_BUDGET, _blocks
     from carbondata_spark.oracle import duckdb_connection, run_query_diff
     from carbondata_spark.queries import registry
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    reg = registry()
-    changed, fresh = _blocks(
-        {n: (q.fn.__module__, q.fn.__name__) for n, q in reg.items()},
-        headline={n for n, q in reg.items() if q.headline},
-    )
-    prefix = [*changed, *fresh][:DRIVER_PREFIX_BUDGET]
-    print(f"sweeping {len(prefix)} prefix queries at {sf_dir}", flush=True)
+    names = list(registry())
+    print(f"sweeping {len(names)} queries at {sf_dir}", flush=True)
 
     spark = (
         SparkSession.builder.master("local[32]")
@@ -62,7 +53,7 @@ def main() -> int:
     con = duckdb_connection(sf_dir)
     bad: list[str] = []
     try:
-        for i, name in enumerate(prefix):
+        for i, name in enumerate(names):
             try:
                 r = run_query_diff(spark, con, sf_dir, name)
                 status = "ok" if r.ok else f"FAIL {r.detail[:200]}"
@@ -71,7 +62,7 @@ def main() -> int:
                 status, ok = f"ERROR {type(e).__name__}: {e}", False
             if not ok:
                 bad.append(name)
-            print(f"[{i + 1:2d}/{len(prefix)}] {name}: {status}", flush=True)
+            print(f"[{i + 1:3d}/{len(names)}] {name}: {status}", flush=True)
     finally:
         spark.stop()
     print("RESULT:", "ALL GREEN" if not bad else f"RED: {bad}")
