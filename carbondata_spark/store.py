@@ -32,24 +32,27 @@ commits are lock + atomic-rename, safe for concurrent loaders.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import re
 import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from carbondata_spark import pruning
 from carbondata_spark.lock import file_lock
 
 SEGMENT_SUCCESS = "Success"
 SEGMENT_DELETED = "Marked for Delete"
 SEGMENT_COMPACTED = "Compacted"
 SEGMENT_IN_PROGRESS = "Load In Progress"
+# tag of MERGE insert rows in a rewrite frame; never a segment id
+_INSERT = -1
 
 
 class TableNotFoundError(Exception):
@@ -163,115 +166,12 @@ def _merge_origins(origins: list[dict[str, Any]]) -> dict[str, Any]:
     return merged
 
 
-_PRUNE_IDENT = r"`?([A-Za-z_][A-Za-z0-9_]*)`?"
-_PRUNE_LIT = r"(-?\d+(?:\.\d+)?|'(?:[^']|'')*')"
-_PRUNE_CMP = re.compile(rf"^{_PRUNE_IDENT}\s*(=|<=|>=|<|>)\s*{_PRUNE_LIT}$")
-_PRUNE_CMP_REV = re.compile(rf"^{_PRUNE_LIT}\s*(=|<=|>=|<|>)\s*{_PRUNE_IDENT}$")
-_PRUNE_IN = re.compile(
-    rf"^{_PRUNE_IDENT}\s+[Ii][Nn]\s*\((\s*{_PRUNE_LIT}(?:\s*,\s*{_PRUNE_LIT})*\s*)\)$"
-)
-_PRUNE_LIT_RE = re.compile(_PRUNE_LIT)
-_PRUNE_FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "="}
-
-
-def _prune_lit_val(tok: str):
-    if tok.startswith("'"):
-        return tok[1:-1].replace("''", "'")
-    return float(tok) if "." in tok else int(tok)
-
-
-def _sql_prunable_conjuncts(sql: str) -> list[tuple[str, str, list]]:
-    """Extract zone-map-checkable conjuncts from a SQL predicate string:
-    [(column_token, op, values)] with op in {'=','<','<=','>','>=','in'}
-    and values Python literals.
-
-    SOUNDNESS RULES (a pruned segment must PROVABLY contain no matching
-    row): only TOP-LEVEL ``AND`` conjuncts are split (quote- and paren-
-    aware), and the whole extraction bails to [] if a top-level ``OR``
-    appears — per-conjunct exclusion is unsound under disjunction. A
-    conjunct that doesn't match the simple ``col <op> literal`` /
-    ``col IN (literals)`` shapes (functions, column-to-column compares,
-    NOT, nested boolean) contributes NOTHING — it can never cause a
-    prune. NULL semantics are safe for the shapes we do parse: a
-    comparison conjunct is satisfied only by non-NULL values, exactly
-    the population footer min/max describes.
-    """
-    s = sql.strip()
-    frags: list[str] = []
-    buf: list[str] = []
-    depth = 0
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            buf.append(s[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if depth == 0 and (c.isalpha() or c == "_"):
-            j = i
-            while j < n and (s[j].isalnum() or s[j] == "_"):
-                j += 1
-            w = s[i:j]
-            if w.upper() == "AND":
-                frags.append("".join(buf))
-                buf = []
-            elif w.upper() == "OR":
-                return []  # top-level disjunction: no sound pruning
-            else:
-                buf.append(w)
-            i = j
-            continue
-        buf.append(c)
-        i += 1
-    frags.append("".join(buf))
-
-    def strip_parens(t: str) -> str:
-        t = t.strip()
-        while t.startswith("(") and t.endswith(")"):
-            depth = 0
-            for k, ch in enumerate(t):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0 and k != len(t) - 1:
-                        return t  # parens don't enclose the whole frag
-            t = t[1:-1].strip()
-        return t
-
-    out: list[tuple[str, str, list]] = []
-    for frag in frags:
-        frag = strip_parens(frag)
-        m = _PRUNE_CMP.match(frag)
-        if m:
-            out.append((m.group(1), m.group(2), [_prune_lit_val(m.group(3))]))
-            continue
-        m = _PRUNE_CMP_REV.match(frag)
-        if m:  # literal <op> col: flip the operator
-            out.append(
-                (m.group(3), _PRUNE_FLIP[m.group(2)], [_prune_lit_val(m.group(1))])
-            )
-            continue
-        m = _PRUNE_IN.match(frag)
-        if m:
-            vals = [
-                _prune_lit_val(t.group(0))
-                for t in _PRUNE_LIT_RE.finditer(m.group(2))
-            ]
-            out.append((m.group(1), "in", vals))
-    return out
+def _fresh_name(base: str, taken) -> str:
+    """``base`` with underscores prepended until no name in ``taken``
+    clashes — an internal helper column never shadows a table column."""
+    while base in taken:
+        base = f"_{base}"
+    return base
 
 
 # (store_path, table) -> (session, (schema stamp, status stamp), frame):
@@ -344,6 +244,82 @@ class CarbonStore:
 
     def _write_status(self, table: str, entries: list[SegmentEntry]) -> None:
         _atomic_write_json(self._status_path(table), [e.to_json() for e in entries])
+
+    def _reserve(
+        self, table: str, origins: list[dict[str, Any]], columns: list[str]
+    ) -> list[int]:
+        """Reserve one new segment id per origin, in one manifest round
+        trip, as 'Load In Progress' entries (the reference's table_status
+        state): concurrent writers never collide on a directory, readers
+        ignore the entries, and ``_commit`` later publishes or drops them.
+        The data is written outside the lock."""
+        if not origins:
+            return []
+        with file_lock(self._status_path(table)):
+            entries = self._read_status(table)
+            first = max((e.segment_id for e in entries), default=-1) + 1
+            ids = list(range(first, first + len(origins)))
+            start = time.time()
+            entries += [
+                SegmentEntry(
+                    segment_id=sid,
+                    status=SEGMENT_IN_PROGRESS,
+                    rows=0,
+                    load_start_ts=start,
+                    load_end_ts=0.0,
+                    columns=list(columns),
+                    origin=origin,
+                )
+                for sid, origin in zip(ids, origins)
+            ]
+            self._write_status(table, entries)
+        return ids
+
+    def _commit(
+        self,
+        table: str,
+        reserved: list[int],
+        publish: dict[int, tuple[int, dict, dict]],
+        retire: frozenset[int] | set[int] = frozenset(),
+        overwrite: bool = False,
+    ) -> list[int]:
+        """The one manifest swap of every writer (load, compact, DELETE,
+        UPDATE, MERGE), under the lock and at ONE timestamp, so readers
+        and time-travel views see the old segment set or the new one,
+        never a mix or an empty window in between:
+
+        - each ``publish`` id goes live with its (rows, stats, blooms);
+        - each ``retire`` id goes 'Compacted', or, for an ``overwrite``,
+          every live segment goes 'Marked for Delete';
+        - each ``reserved`` id not published is marked deleted (its dir
+          is clean_files prey).
+
+        Aborts when a ``retire`` id is no longer live — a concurrent
+        delete, overwrite or rewrite changed it, and publishing would
+        resurrect or double-apply rows: every reserved id is then marked
+        deleted and nothing else changes. Returns the ids that were no
+        longer live; empty means committed.
+        """
+        with file_lock(self._status_path(table)):
+            entries = self._read_status(table)
+            ts = time.time()
+            live = {e.segment_id for e in entries if e.status == SEGMENT_SUCCESS}
+            lost = sorted(set(retire) - live)
+            for e in entries:
+                if e.segment_id in publish and not lost:
+                    e.rows, e.stats, e.blooms = publish[e.segment_id]
+                    e.status, e.load_end_ts = SEGMENT_SUCCESS, ts
+                elif e.segment_id in reserved:
+                    e.status, e.invalidated_ts = SEGMENT_DELETED, ts
+                elif (
+                    not lost
+                    and e.status == SEGMENT_SUCCESS
+                    and (overwrite or e.segment_id in retire)
+                ):
+                    e.status = SEGMENT_DELETED if overwrite else SEGMENT_COMPACTED
+                    e.invalidated_ts = ts
+            self._write_status(table, entries)
+        return lost
 
     @staticmethod
     def _is_zorder(meta: dict[str, Any]) -> bool:
@@ -521,28 +497,11 @@ class CarbonStore:
         target = T.StructType.fromJson(meta["schema"])
         df = self._conform(df, target)
 
-        sort_cols = [c for c in meta["sort_columns"] if c in df.columns]
         part_cols = meta.get("partition_columns", [])
-        sort_cols = [c for c in sort_cols if c not in part_cols]
-        start = time.time()
-        # Reserve the segment id with an in-progress entry so concurrent
-        # loaders never collide on a directory (the reference's
-        # "Load In Progress" table_status state). Readers ignore it.
-        with file_lock(self._status_path(table)):
-            entries = self._read_status(table)
-            seg_id = max((e.segment_id for e in entries), default=-1) + 1
-            entries.append(
-                SegmentEntry(
-                    segment_id=seg_id,
-                    status=SEGMENT_IN_PROGRESS,
-                    rows=0,
-                    load_start_ts=start,
-                    load_end_ts=0.0,
-                    columns=[f.name for f in target.fields],
-                    origin=origin or {},
-                )
-            )
-            self._write_status(table, entries)
+        sort_cols = [
+            c for c in meta["sort_columns"] if c in df.columns and c not in part_cols
+        ]
+        (seg_id,) = self._reserve(table, [origin or {}], target.fieldNames())
         # Write data outside the lock (long-running), commit manifest after.
         seg_dir = self._segment_dir(table, seg_id)
         writer = df
@@ -570,30 +529,12 @@ class CarbonStore:
         if part_cols:
             w = w.partitionBy(*part_cols)
         w.parquet(seg_dir)
-        rows = self.spark.read.parquet(seg_dir).count()  # footer-only count
-        stats = self._collect_segment_stats(seg_dir, sort_cols)
-        blooms = self._collect_segment_blooms(seg_dir, meta)
-
-        with file_lock(self._status_path(table)):
-            entries = self._read_status(table)
-            # one timestamp for the whole commit: an overwrite's
-            # invalidations and the new segment's activation are the same
-            # instant, so time-travel reads see an atomic swap, never an
-            # empty in-between window
-            commit_ts = time.time()
-            if mode == "overwrite":
-                for e in entries:
-                    if e.status == SEGMENT_SUCCESS:
-                        e.status = SEGMENT_DELETED
-                        e.invalidated_ts = commit_ts
-            for e in entries:
-                if e.segment_id == seg_id:
-                    e.status = SEGMENT_SUCCESS
-                    e.rows = rows
-                    e.load_end_ts = commit_ts
-                    e.stats = stats
-                    e.blooms = blooms
-            self._write_status(table, entries)
+        self._commit(
+            table,
+            [seg_id],
+            {seg_id: self._seal(seg_dir, meta)},
+            overwrite=mode == "overwrite",
+        )
 
         if refresh_aggregates:
             from carbondata_spark.plans.agg_table import (
@@ -610,14 +551,11 @@ class CarbonStore:
         self, seg_dir: str, metas: dict[str, Any] | None = None
     ) -> int:
         """Exact row count of a just-written segment from parquet footers
-        — metadata only, no Spark job. Replaces the post-write
-        ``spark.read.parquet(dir).count()`` read-back in compact() and the
-        IUD rewrite (one fewer job per rewritten segment; at 100 TB the
-        footer walk is the same bounded metadata pass the zone-map
-        collection already does). Pass ``metas`` (a ``_footer_metadata``
-        result) to reuse footers already read — promotion and compact need
-        rows AND stats from the same segment, and reading every footer
-        twice doubled the driver's metadata I/O."""
+        — metadata only, no Spark job (at 100 TB the footer walk is the
+        same bounded metadata pass the zone-map collection does). Pass
+        ``metas`` (a ``_footer_metadata`` result) to reuse footers already
+        read: every writer needs rows AND stats from the same segment, and
+        reading each footer twice would double the driver's metadata I/O."""
         if metas is None:
             metas = self._footer_metadata(seg_dir)
         return sum(md.num_rows for md in metas.values())
@@ -678,24 +616,11 @@ class CarbonStore:
         that lets ``scan`` prune whole segments the way the reference's
         driver B-tree prunes blocks (CarbonInputFormat.java:177-201).
 
-        Timestamps/dates normalize to '%Y-%m-%d %H:%M:%S'-style strings so
-        bound comparisons are plain lexicographic; numbers stay numeric.
-        JSON-unfriendly or statless columns are skipped (never pruned on).
+        Values are in the stats domain of ``pruning.footer_value``; a
+        column with a statless row group is skipped (never pruned on).
         """
-        import datetime
-
         if not cols:
             return {}
-
-        def norm(v):
-            if isinstance(v, (datetime.datetime, datetime.date)):
-                return v.strftime("%Y-%m-%d %H:%M:%S")
-            if isinstance(v, bytes):
-                v = v.decode("utf-8", "replace")
-            if isinstance(v, (int, float, str)):
-                return v
-            return None
-
         acc: dict[str, list] = {}
         unknown: set[str] = set()
         if metas is None:
@@ -707,8 +632,9 @@ class CarbonStore:
                     continue
                 for rg in range(md.num_row_groups):
                     st = md.row_group(rg).column(idx[c]).statistics
-                    mn = norm(st.min) if st is not None and st.has_min_max else None
-                    mx = norm(st.max) if st is not None and st.has_min_max else None
+                    has = st is not None and st.has_min_max
+                    mn = pruning.footer_value(st.min) if has else None
+                    mx = pruning.footer_value(st.max) if has else None
                     if mn is None or mx is None:
                         unknown.add(c)  # never prune on a col with gaps
                         break
@@ -734,6 +660,19 @@ class CarbonStore:
             return {}
         df = self.spark.read.parquet(seg_dir)
         return compute_segment_blooms(df, cols)
+
+    def _seal(self, seg_dir: str, meta: dict) -> tuple[int, dict, dict]:
+        """(rows, zone-map stats, blooms) of a just-written segment dir:
+        rows and stats from ONE footer read (metadata only, no Spark
+        job), blooms as ``_collect_segment_blooms``."""
+        part_cols = meta.get("partition_columns", [])
+        sort_cols = [c for c in meta["sort_columns"] if c not in part_cols]
+        metas = self._footer_metadata(seg_dir)
+        return (
+            self._segment_rows_from_footers(seg_dir, metas),
+            self._collect_segment_stats(seg_dir, sort_cols, metas),
+            self._collect_segment_blooms(seg_dir, meta),
+        )
 
     def scan(
         self,
@@ -778,100 +717,30 @@ class CarbonStore:
                 raise ValueError("eq/isin/ge/le require column=")
             return self.table(table, as_of_ts=as_of_ts)
         if isin is not None:
-            return self._point_scan(table, column, list(isin), as_of_ts)
-
-        def norm_bound(v):
-            import datetime
-
-            if isinstance(v, (datetime.datetime, datetime.date)):
-                return v.strftime("%Y-%m-%d %H:%M:%S")
-            return v
-
-        ge_n, le_n = norm_bound(ge), norm_bound(le)
+            conjuncts = [(column, "in", list(isin))]
+        else:
+            conjuncts = [
+                (column, op, [v]) for op, v in ((">=", ge), ("<=", le)) if v is not None
+            ]
         if as_of_ts is not None:
-            # table()'s as-of selection (shared helper — single definition
-            # of the time-travel predicate) is the candidate set, then
-            # zone-map prune within it
+            # table()'s as-of selection is the candidate set, then prune
+            # within it
             candidates = self._asof_segments(table, as_of_ts)
         else:
             candidates = self.valid_segments(table)
-        keep: list[int] = []
-        for e in candidates:
-            rng = e.stats.get(column)
-            if rng is None:
-                keep.append(e.segment_id)  # unknown stats: cannot prune
-                continue
-            mn, mx = rng
-            if ge_n is not None and mx < ge_n:
-                continue
-            if le_n is not None and mn > le_n:
-                continue
-            keep.append(e.segment_id)
-        df = self.table(table, segment_ids=keep, as_of_ts=as_of_ts)
+        keep = pruning.prune(self.spark, candidates, self.schema(table), conjuncts)
+        df = self.table(
+            table, segment_ids=[e.segment_id for e in keep], as_of_ts=as_of_ts
+        )
+        if isin is not None:
+            # Catalyst pushes this into the surviving parquet scans as an
+            # In filter
+            return df.filter(F.col(column).isin(list(isin)))
         if ge is not None:
             df = df.filter(F.col(column) >= F.lit(ge))
         if le is not None:
             df = df.filter(F.col(column) <= F.lit(le))
         return df
-
-    def _point_scan(
-        self,
-        table: str,
-        column: str,
-        values: list,
-        as_of_ts: float | None,
-    ) -> DataFrame:
-        """scan()'s eq/isin path: zone-map + bloom segment pruning, then
-        the residual isin filter (which Catalyst pushes into the
-        surviving parquet scans as an In filter)."""
-        from carbondata_spark.bloom import might_contain, probe_positions
-
-        def norm_bound(v):
-            import datetime
-
-            if isinstance(v, (datetime.datetime, datetime.date)):
-                return v.strftime("%Y-%m-%d %H:%M:%S")
-            return v
-
-        meta = self._read_schema(table)
-        dtype = next(
-            (
-                f.dataType
-                for f in T.StructType.fromJson(meta["schema"]).fields
-                if f.name == column
-            ),
-            None,
-        )
-        if as_of_ts is not None:
-            candidates = self._asof_segments(table, as_of_ts)
-        else:
-            candidates = self.valid_segments(table)
-        norm_vals = [norm_bound(v) for v in values]
-        # probe positions are per (m, k) geometry; segments loaded at the
-        # same cardinality share one geometry, so this is usually ONE tiny
-        # local Spark job, cached across segments
-        pos_cache: dict[tuple[int, int], list[list[int]]] = {}
-        keep: list[int] = []
-        for e in candidates:
-            rng = e.stats.get(column)
-            if rng is not None:
-                mn, mx = rng
-                if not any(mn <= v <= mx for v in norm_vals):
-                    continue  # zone map: every probe value outside [min,max]
-            bloom = e.blooms.get(column)
-            if bloom is not None and dtype is not None:
-                geom = (bloom["m"], bloom["k"])
-                if geom not in pos_cache:
-                    pos_cache[geom] = probe_positions(
-                        self.spark, column, dtype, values, bloom["m"], bloom["k"]
-                    )
-                if not any(
-                    might_contain(bloom, ps) for ps in pos_cache[geom]
-                ):
-                    continue  # bloom: no probe value can be in this segment
-            keep.append(e.segment_id)
-        df = self.table(table, segment_ids=keep, as_of_ts=as_of_ts)
-        return df.filter(F.col(column).isin(values))
 
     def _conform(self, df: DataFrame, target: T.StructType) -> DataFrame:
         """Project/cast a DataFrame to the table schema (load-side of the
@@ -1264,21 +1133,21 @@ class CarbonStore:
     ) -> dict[int, tuple[int, dict, dict]]:
         """Write EVERY rewrite segment of a row-level mutation in ONE
         distributed Spark job (the reference's restructure/merge paths are
-        likewise single distributed jobs — CarbonMergerRDD.scala:31-234;
-        this replaces the former per-affected-segment serial write loop:
-        O(#affected) driver-blocking jobs -> 1, the last such loop left).
+        likewise single distributed jobs — CarbonMergerRDD.scala:31-234),
+        so the driver-blocking job count does not grow with the number of
+        affected segments.
 
         ``out`` carries ``rw_col`` — each row's TARGET rewrite segment id.
         The target id LEADS the range key, so each rewrite segment's rows
         occupy a contiguous run of tasks and stay internally sort- (or
-        z-order-) clustered — per-segment zone-map locality is preserved
-        exactly as the old one-write-per-segment shape produced. The job
+        z-order-) clustered — per-segment zone-map locality is exactly
+        what one write per segment would give. The job
         writes once with ``partitionBy(rw_col)`` into a staging directory;
         each ``rw_col=<id>`` child is then promoted to its segment dir (a
         driver-side metadata rename, the same commit idiom as an HDFS
         output-committer move). Row counts/zone maps come from parquet
-        footers — no read-back jobs. Bloom collection (opt-in tables only)
-        remains per-segment: two bounded jobs per new segment.
+        footers — no read-back jobs. Blooms (opt-in tables only) come from
+        two bounded jobs over all new segments together.
 
         ``optional_ids``: targets ALLOWED to come out empty (e.g. a MERGE
         insert segment when every source row matched) — they are skipped
@@ -1290,20 +1159,20 @@ class CarbonStore:
         # Materialize the rewrite frame before the ranged write: the
         # RangePartitioner's bounds sampler executes the child plan once
         # and the shuffle map tasks execute it AGAIN — for a rewrite the
-        # child is the full target-join transform, so the join ran twice
-        # per mutation. persist(MEMORY_AND_DISK) stores the output once
-        # and both passes read it back; measured -0.2s on the sf0.1 MERGE
-        # cycle, and at scale it replaces a second full scan+join of the
-        # affected segments with a local read. persist (r19; was
-        # localCheckpoint) because (a) the blocks are released
+        # child is the full target-join transform, so the join would run
+        # twice per mutation. persist(MEMORY_AND_DISK) stores the output
+        # once and both passes read it back (measured -0.2s on the sf0.1
+        # MERGE cycle; at scale a local read replaces a second full
+        # scan+join of the affected segments). persist rather than
+        # localCheckpoint because (a) the blocks are released
         # deterministically in the finally below instead of lingering
         # until the driver GCs the RDD reference, and (b) it is a cache
-        # boundary the MERGE path's observe() detection metrics can fire
+        # boundary the MERGE path's observe() detection metrics fire
         # under exactly once (a checkpointed plan swallows CollectMetrics
         # entirely — the write's plan is just the LogicalRDD). A block
-        # lost to executor death recomputes its partition (pre-r18
-        # semantics; sources are deterministic) instead of failing the
-        # job; either way nothing commits until the swap.
+        # lost to executor death recomputes its partition (sources are
+        # deterministic) instead of failing the job; either way nothing
+        # commits until the swap.
         from pyspark import StorageLevel
 
         cached = out.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1352,8 +1221,8 @@ class CarbonStore:
                 seg_dirs[new_id] = seg_dir
             # rows + zone maps for ALL promoted segments from ONE flat
             # footer pool (each footer read once, segments in parallel) —
-            # the serial per-segment walk here was the O(N) driver
-            # metadata term behind the r16 16→32 wall-time step
+            # a serial per-segment walk would add a driver metadata term
+            # linear in the number of segments
             metas_by_seg = self._footer_metadata_many(seg_dirs)
             results: dict[int, tuple[int, dict, dict]] = {
                 new_id: (
@@ -1416,77 +1285,30 @@ class CarbonStore:
             segs = [e for e in segs if e.segment_id in segment_ids]
         if len(segs) <= 1:
             return None
-        sort_cols = meta["sort_columns"]
-        merged = self.table(table, segment_ids=[e.segment_id for e in segs])
-        with file_lock(self._status_path(table)):
-            entries = self._read_status(table)
-            new_id = max(e.segment_id for e in entries) + 1
-            entries.append(
-                SegmentEntry(
-                    segment_id=new_id,
-                    status=SEGMENT_IN_PROGRESS,
-                    rows=0,
-                    load_start_ts=time.time(),
-                    load_end_ts=0.0,
-                    columns=[f.name for f in T.StructType.fromJson(meta["schema"]).fields],
-                    origin={
-                        **_merge_origins([e.origin for e in segs]),
-                        # direct-input provenance: lets an incremental
-                        # consumer (operators/segment_feed.py) prove a
-                        # merged segment re-materializes only rows it
-                        # already delivered, and skip it exactly
-                        "compacted_from": sorted(e.segment_id for e in segs),
-                    },
-                )
-            )
-            self._write_status(table, entries)
+        old_ids = [e.segment_id for e in segs]
+        merged = self.table(table, segment_ids=old_ids)
+        origin = {
+            **_merge_origins([e.origin for e in segs]),
+            # direct-input provenance: lets an incremental consumer
+            # (operators/segment_feed.py) prove a merged segment
+            # re-materializes only rows it already delivered, and skip it
+            "compacted_from": sorted(old_ids),
+        }
+        (new_id,) = self._reserve(
+            table, [origin], T.StructType.fromJson(meta["schema"]).fieldNames()
+        )
         seg_dir = self._segment_dir(table, new_id)
-        part_cols = meta.get("partition_columns", [])
-        sort_cols = [c for c in sort_cols if c not in part_cols]
         n_parts = partitions or max(1, sum(e.rows for e in segs) // 4_000_000)
         self._write_clustered(merged, meta, seg_dir, n_parts)
-        footer_metas = self._footer_metadata(seg_dir)
-        rows = self._segment_rows_from_footers(seg_dir, footer_metas)
         # The merged segment is freshly range-sorted: recompute its zone
         # map and blooms so compaction IMPROVES prunability instead of
         # silently losing it (a statless segment is kept by every scan).
-        merged_stats = self._collect_segment_stats(seg_dir, sort_cols, footer_metas)
-        merged_blooms = self._collect_segment_blooms(seg_dir, meta)
-        old_ids = {e.segment_id for e in segs}
-        with file_lock(self._status_path(table)):
-            entries = self._read_status(table)
-            # Abort if any source segment changed state while we merged
-            # (concurrent overwrite/DELETE LOAD flipped it to 'Marked for
-            # Delete'): promoting the merged segment would resurrect rows
-            # the concurrent operation removed. The merged dir becomes an
-            # orphan that clean_files GCs.
-            live = {e.segment_id for e in entries if e.status == SEGMENT_SUCCESS}
-            if not old_ids <= live:
-                for e in entries:
-                    if e.segment_id == new_id:
-                        e.status = SEGMENT_DELETED
-                        # stamp the abort so as-of reads never consider a
-                        # segment that was NEVER live (load_end_ts stays
-                        # 0.0, belt-and-braces with the as-of filter)
-                        e.invalidated_ts = time.time()
-                self._write_status(table, entries)
-                return None
-            # ONE timestamp for the whole swap: the compacted inputs leave
-            # the live set at the same instant the merged segment enters
-            # it, so no as_of value can observe a window with neither side
-            commit_ts = time.time()
-            for e in entries:
-                if e.segment_id in old_ids and e.status == SEGMENT_SUCCESS:
-                    e.status = SEGMENT_COMPACTED
-                    e.invalidated_ts = commit_ts
-                if e.segment_id == new_id:
-                    e.status = SEGMENT_SUCCESS
-                    e.rows = rows
-                    e.load_end_ts = commit_ts
-                    e.stats = merged_stats
-                    e.blooms = merged_blooms
-            self._write_status(table, entries)
-        return new_id
+        # A source changed concurrently (DELETE LOAD, overwrite) aborts:
+        # the merged segment would resurrect rows that change removed.
+        lost = self._commit(
+            table, [new_id], {new_id: self._seal(seg_dir, meta)}, set(old_ids)
+        )
+        return None if lost else new_id
 
     # -- row-level DELETE / UPDATE (copy-on-write rewrite) -----------------
 
@@ -1505,9 +1327,9 @@ class CarbonStore:
         whole-load: cubeSchema.scala:1678-1736); later Apache CarbonData
         added exactly this copy-on-write shape, and a 100 TB corpus needs
         it (e.g. targeted takedown/PII deletes). The manifest swap is
-        compact()'s: provisional segments written first, then ONE commit
-        flips every affected source to 'Compacted' and every rewrite to
-        'Success' at the same timestamp — concurrent readers see the old
+        ``_commit``, as for compact(): provisional segments written
+        first, then ONE commit flips every affected source to 'Compacted'
+        and every rewrite to 'Success' at the same timestamp — concurrent readers see the old
         row set or the new one, never a torn mix, and a concurrent
         segment-state change aborts the whole rewrite (orphans GC'd by
         clean_files).
@@ -1528,376 +1350,161 @@ class CarbonStore:
             raise ValueError(f"UPDATE SET on unknown columns: {unknown}")
         return self._mutate_rows(table, predicate, assignments)
 
-    def _prune_mutation_candidates(
-        self, sources: list[SegmentEntry], predicate, meta: dict
-    ) -> list[SegmentEntry]:
-        """Zone-map + bloom pre-prune for row-level DELETE/UPDATE: drop
-        source segments that PROVABLY contain no row matching the
-        predicate, using only manifest metadata (no file listing, no
-        Spark job — the same stats ``scan()`` prunes with). A targeted
-        one-key mutation on a sorted/bloomed column touches the segments
-        holding that key, not the whole table. Conservative everywhere:
-        non-string predicates, unparseable conjuncts, statless columns,
-        and type mismatches all KEEP the segment."""
-        if not isinstance(predicate, str):
-            return sources
-        conjs = _sql_prunable_conjuncts(predicate)
-        if not conjs:
-            return sources
-        import datetime
-
-        from carbondata_spark.bloom import might_contain, probe_positions
-
-        schema = T.StructType.fromJson(meta["schema"])
-        by_lower = {f.name.lower(): f for f in schema.fields}
-        _DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
-        _TS_RE = re.compile(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}:\d{2}$")
-
-        def stats_vals(field, vals):
-            """Literals normalized to the manifest-stats domain for
-            ``field`` (None -> this conjunct can't be trusted against
-            this column's stats)."""
-            dt = field.dataType
-            if isinstance(dt, T.TimestampType):
-                # LTZ: literal interpretation depends on the session
-                # timezone — pruning against naive stats strings is
-                # unsound under a hostile-TZ session
-                return None
-            if isinstance(dt, (T.DateType, T.TimestampNTZType)):
-                out = []
-                for v in vals:
-                    if not isinstance(v, str):
-                        return None
-                    if _DATE_RE.match(v):
-                        # SQL casts a bare date literal to midnight; the
-                        # stats strings carry the full time part
-                        out.append(v + " 00:00:00")
-                    elif _TS_RE.match(v):
-                        if isinstance(dt, T.DateType):
-                            # Spark's string->DATE cast truncates the
-                            # time part, so the comparison sees midnight
-                            out.append(v[:10] + " 00:00:00")
-                        else:
-                            out.append(v.replace("T", " "))
-                    else:
-                        return None  # fractional seconds/other formats
-                return out
-            if isinstance(dt, T.StringType):
-                return vals if all(isinstance(v, str) for v in vals) else None
-            if all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in vals):
-                return vals
-            return None
-
-        def bloomable(field, vals) -> bool:
-            dt = field.dataType
-            if isinstance(dt, T.StringType):
-                return all(isinstance(v, str) for v in vals)
-            if isinstance(
-                dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-            ):
-                return all(
-                    isinstance(v, int) and not isinstance(v, bool) for v in vals
-                )
-            return False
-
-        pos_cache: dict[tuple, list] = {}
-        kept: list[SegmentEntry] = []
-        for e in sources:
-            keep = True
-            for colt, op, vals in conjs:
-                fld = by_lower.get(colt.lower())
-                if fld is None:
-                    continue
-                rng = e.stats.get(fld.name)
-                if rng is not None:
-                    sv = stats_vals(fld, vals)
-                    if sv is not None:
-                        mn, mx = rng
-                        try:
-                            if op in ("=", "in"):
-                                keep = any(mn <= v <= mx for v in sv)
-                            elif op == "<":
-                                keep = mn < sv[0]
-                            elif op == "<=":
-                                keep = mn <= sv[0]
-                            elif op == ">":
-                                keep = mx > sv[0]
-                            elif op == ">=":
-                                keep = mx >= sv[0]
-                        except TypeError:
-                            keep = True  # stats/literal domains disagree
-                        if not keep:
-                            break
-                if op in ("=", "in") and bloomable(fld, vals):
-                    bloom = e.blooms.get(fld.name)
-                    if bloom is not None:
-                        geom = (bloom["m"], bloom["k"])
-                        key = (fld.name, geom, tuple(vals))
-                        if key not in pos_cache:
-                            pos_cache[key] = probe_positions(
-                                self.spark, fld.name, fld.dataType, list(vals), *geom
-                            )
-                        if not any(
-                            might_contain(bloom, ps) for ps in pos_cache[key]
-                        ):
-                            keep = False
-                            break
-            if keep:
-                kept.append(e)
-        return kept
-
     def _mutate_rows(self, table: str, predicate, assignments: dict | None) -> int:
-        """Copy-on-write row mutation, shaped for scale (r13 rewrite):
+        """Copy-on-write row mutation, shaped for scale:
 
-        phase 0  manifest zone-map/bloom pre-prune of candidate segments
-                 (metadata only — a targeted DELETE never lists, let
-                 alone reads, provably-unaffected segments);
-        phase 1  ONE detection job over a segment-id-tagged union of the
-                 candidates (``table(_tag_col=...)`` — one scan per
-                 column-group, predicate pushed into parquet), yielding
-                 per-segment match counts — this replaces the former
-                 per-segment serial ``filter(pred).count()`` loop (N
-                 driver-blocking jobs -> 1);
-        phase 2  ALL provisional rewrite ids reserved in ONE manifest
-                 lock round-trip (was one per segment);
-        phase 3  ONE more tagged scan of the affected segments feeds ONE
-                 distributed write of every rewrite segment
-                 (``_write_rewrites``: target id leads the range key,
-                 ``partitionBy`` fans the job out per target, staging
-                 dirs promote by rename) — this was the last remaining
-                 per-segment serial loop until r15; new-segment row
-                 counts come from parquet footers (no read-back job);
-        phase 4  ONE all-or-nothing manifest swap (compact()'s
-                 discipline), unchanged.
+        1. manifest zone-map/bloom pre-prune of the candidate segments
+           (``pruning.prune``, metadata only — a targeted DELETE never
+           lists, let alone reads, provably-unaffected segments);
+        2. ONE detection job over a segment-id-tagged union of the
+           candidates (``table(_tag_col=...)``, one scan per column
+           group, predicate pushed into parquet) yields per-segment
+           match counts, instead of one ``filter(pred).count()`` job per
+           segment;
+        3. ``_rewrite`` writes the replacement of every affected segment
+           in ONE distributed job and commits them all in ONE manifest
+           swap. A segment whose every row is deleted gets no
+           replacement; the swap only retires it.
         """
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         pred = pred.cast("boolean")
         meta = self._read_schema(table)
-        sources = self.valid_segments(table)
-        if not sources:
-            return 0
-        candidates = self._prune_mutation_candidates(sources, predicate, meta)
+        schema = T.StructType.fromJson(meta["schema"])
+        conjuncts = (
+            pruning.sql_prunable_conjuncts(predicate)
+            if isinstance(predicate, str)
+            else []
+        )
+        candidates = pruning.prune(
+            self.spark, self.valid_segments(table), schema, conjuncts
+        )
         if not candidates:
             return 0
-        current_cols = [
-            f.name for f in T.StructType.fromJson(meta["schema"]).fields
-        ]
-        tag = "_cd_seg"
-        while tag in current_cols:
-            tag = f"_{tag}"
+        tag = _fresh_name("_cd_seg", schema.fieldNames())
         tagged = self.table(
             table, segment_ids=[e.segment_id for e in candidates], _tag_col=tag
         )
         counts = {
-            row[0]: row[1]
+            row[0]: int(row[1])
             for row in tagged.filter(pred)
             .groupBy(tag)
-            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(F.count(F.lit(1)))
             .collect()
         }
-        by_id = {e.segment_id: e for e in candidates}
-        affected = [
-            (by_id[sid], int(n)) for sid, n in sorted(counts.items()) if n > 0
-        ]
+        affected = [e for e in candidates if counts.get(e.segment_id, 0) > 0]
         if not affected:
             return 0
-        total = sum(n for _, n in affected)
-        # full-delete sources need no replacement segment at all
-        replacing = [
-            (e, n)
-            for e, n in affected
-            if not (assignments is None and n == e.rows)
-        ]
-        new_ids: dict[int, int] = {}
-        if replacing:
-            with file_lock(self._status_path(table)):
-                entries = self._read_status(table)
-                next_id = max(x.segment_id for x in entries) + 1
-                for e, _n in replacing:
-                    new_ids[e.segment_id] = next_id
-                    entries.append(
-                        SegmentEntry(
-                            segment_id=next_id,
-                            status=SEGMENT_IN_PROGRESS,
-                            rows=0,
-                            load_start_ts=time.time(),
-                            load_end_ts=0.0,
-                            columns=list(current_cols),
-                            origin={
-                                "rewrite_of": e.segment_id,
-                                "op": "delete" if assignments is None else "update",
-                            },
-                        )
-                    )
-                    next_id += 1
-                self._write_status(table, entries)
-        rewrites: list[tuple[int, int | None, int, dict, dict, int]] = []
-        for e, n in affected:
-            if e.segment_id not in new_ids:
-                # every row deleted: no replacement segment at all
-                rewrites.append((e.segment_id, None, 0, {}, {}, n))
-        if replacing:
-            # phase 3: ONE tagged scan of every replacing segment, the
-            # shared transform, then ONE distributed write of every
-            # rewrite segment (_write_rewrites) — no per-segment loop
-            rw = "_cd_rw"
-            while rw in current_cols or rw == tag:
-                rw = f"_{rw}"
-            rep_df = self.table(
-                table,
-                segment_ids=[e.segment_id for e, _n in replacing],
-                _tag_col=tag,
-            )
-            if assignments is None:
-                out = rep_df.filter(~F.coalesce(pred, F.lit(False)))
-            else:
-                out = rep_df.select(
-                    *[
-                        F.when(
-                            F.coalesce(pred, F.lit(False)),
-                            F.expr(expr) if isinstance(expr, str) else expr,
-                        )
+        hit = F.coalesce(pred, F.lit(False))
+        if assignments is None:
+            sources = [e for e in affected if counts[e.segment_id] < e.rows]
+
+            def rows(frame, _tag):
+                return frame.filter(~hit)
+
+        else:
+            sources = affected
+
+            def rows(frame, _tag):
+                def assign(c, a):
+                    new = F.expr(a) if isinstance(a, str) else a
+                    return (
+                        F.when(hit, new)
                         .otherwise(F.col(c))
-                        .cast(rep_df.schema[c].dataType)
+                        .cast(frame.schema[c].dataType)
                         .alias(c)
-                        if c in assignments
-                        else F.col(c)
-                        for c, expr in [
-                            (f.name, assignments.get(f.name))
-                            for f in rep_df.schema.fields
-                        ]
+                    )
+
+                return frame.select(
+                    *[
+                        assign(c, assignments[c]) if c in assignments else F.col(c)
+                        for c in frame.columns
                     ]
                 )
-            id_map = F.create_map(
-                *[F.lit(v) for kv in new_ids.items() for v in kv]
+
+        self._rewrite(
+            table,
+            meta,
+            sources,
+            "delete" if assignments is None else "update",
+            rows,
+            retired=lambda: {e.segment_id for e in affected},
+        )
+        return sum(counts.values())
+
+    def _rewrite(
+        self,
+        table: str,
+        meta: dict,
+        sources: list[SegmentEntry],
+        op: str,
+        rows,
+        retired,
+        insert_rows: int | None = None,
+    ) -> int:
+        """The copy-on-write tail shared by DELETE, UPDATE and MERGE:
+        reserve one rewrite segment per source segment — per-segment
+        zone-map locality, never one global sort over their union — plus
+        an insert segment when ``insert_rows`` (the expected insert row
+        count) is given; write them all in ONE distributed job
+        (``_write_rewrites``); then ``_commit`` them in ONE swap.
+
+        ``rows(frame, tag)`` returns the rows to write. Each carries in
+        column ``tag`` the id of the source segment it replaces rows of,
+        or ``_INSERT`` for the insert segment, which may come out empty.
+        ``frame`` holds the sources' rows tagged that way (None without
+        sources). After the write, ``retired()`` names the segments the
+        swap retires; the rewrite of a source it
+        leaves out never goes live. A retired segment that changed state
+        concurrently aborts the swap and raises RuntimeError; no rows
+        change. Returns the number of rows the insert segment received.
+        """
+        cols = T.StructType.fromJson(meta["schema"]).fieldNames()
+        src_ids = [e.segment_id for e in sources]
+        tags = list(src_ids)
+        origins = [{"rewrite_of": sid, "op": op} for sid in src_ids]
+        if insert_rows is not None:
+            tags.append(_INSERT)
+            origins.append({"op": "merge_insert"})
+        reserved = self._reserve(table, origins, cols)
+        new_of = dict(zip(tags, reserved))
+        written: dict[int, tuple[int, dict, dict]] = {}
+        if reserved:
+            tag = _fresh_name("_cd_seg", cols)
+            rw = _fresh_name("_cd_rw", [*cols, tag])
+            frame = (
+                self.table(table, segment_ids=src_ids, _tag_col=tag)
+                if sources
+                else None
             )
-            out = out.withColumn(
-                rw, F.element_at(id_map, F.col(tag)).cast("int")
-            ).drop(tag)
-            by_rewrite = self._write_rewrites(
-                table,
-                out,
-                rw,
-                list(new_ids.values()),
-                meta,
-                total_rows=sum(e.rows for e, _n in replacing),
+            id_map = F.create_map(*[F.lit(v) for kv in new_of.items() for v in kv])
+            out = (
+                rows(frame, tag)
+                .withColumn(rw, F.element_at(id_map, F.col(tag)).cast("int"))
+                .drop(tag)
             )
-            for e, n in replacing:
-                new_id = new_ids[e.segment_id]
-                rows, stats, blooms = by_rewrite[new_id]
-                rewrites.append((e.segment_id, new_id, rows, stats, blooms, n))
-        # phase 4: ONE all-or-nothing swap (compact()'s discipline)
-        old_ids = {old for old, *_ in rewrites}
-        new_ids = {new for _, new, *_ in rewrites if new is not None}
-        with file_lock(self._status_path(table)):
-            entries = self._read_status(table)
-            live = {x.segment_id for x in entries if x.status == SEGMENT_SUCCESS}
-            if not old_ids <= live:
-                # a concurrent operation changed a source segment's state:
-                # promoting the rewrites would resurrect or double-apply
-                # rows — abort everything, the dirs become clean_files prey
-                abort_ts = time.time()
-                for x in entries:
-                    if x.segment_id in new_ids:
-                        x.status = SEGMENT_DELETED
-                        x.invalidated_ts = abort_ts
-                self._write_status(table, entries)
-                raise RuntimeError(
-                    f"row rewrite aborted: segments {sorted(old_ids - live)} "
-                    "changed state concurrently; no rows were modified"
-                )
-            by_new = {new: (rows, stats, blooms) for _, new, rows, stats, blooms, _ in rewrites}
-            commit_ts = time.time()
-            for x in entries:
-                if x.segment_id in old_ids:
-                    x.status = SEGMENT_COMPACTED
-                    x.invalidated_ts = commit_ts
-                if x.segment_id in by_new:
-                    rows, stats, blooms = by_new[x.segment_id]
-                    x.status = SEGMENT_SUCCESS
-                    x.rows = rows
-                    x.load_end_ts = commit_ts
-                    x.stats = stats
-                    x.blooms = blooms
-            self._write_status(table, entries)
-        return total
+            total = sum(e.rows for e in sources) + (insert_rows or 0)
+            # optional_ids only with an insert segment: wrappers of
+            # _write_rewrites may take just its six positional arguments
+            kw = {} if insert_rows is None else {"optional_ids": {new_of[_INSERT]}}
+            written = self._write_rewrites(table, out, rw, reserved, meta, total, **kw)
+        retire = retired()
+        publish = {
+            new_of[s]: written[new_of[s]]
+            for s in [*retire, _INSERT]
+            if new_of.get(s) in written
+        }
+        lost = self._commit(table, reserved, publish, retire)
+        if lost:
+            what = "MERGE" if op == "merge" else "row rewrite"
+            raise RuntimeError(
+                f"{what} aborted: segments {lost} changed state "
+                "concurrently; no rows were modified"
+            )
+        ins = new_of.get(_INSERT)
+        return written[ins][0] if ins in written else 0
 
     # -- MERGE INTO (upsert) -----------------------------------------------
 
-    def _zone_hit_conditions(
-        self, segs: list[SegmentEntry], keys: list[str], target: T.StructType
-    ) -> dict[int, Any] | None:
-        """Per-segment row-granular zone-map predicates over a MERGE
-        source: segment ``sid`` maps to a boolean Column that is true for
-        a source row iff EVERY key column falls inside the segment's
-        manifest [min, max] — a necessary condition for that row to match
-        any row of the segment, so ``count(when(cond, 1)) == 0`` proves
-        the segment holds no source key (strictly tighter than comparing
-        the source's global [min, max]: a segment sitting in a gap of the
-        source key distribution is pruned too).
-
-        Comparisons mirror ``_collect_segment_stats``'s normalization
-        exactly: numeric bounds compare natively (integral/float columns
-        only — decimals are statless in the manifest), string bounds
-        compare binary-lexicographically, timestamp/date bounds compare
-        via ``date_format`` in the same second-truncated string space the
-        footers were normalized into. A key whose bounds or type cannot
-        be compared faithfully contributes no condition (never prunes);
-        a segment with no usable key maps to None (unconditional
-        candidate). Returns None when there are no segments or more than
-        256 (bounding the stats-aggregate expression count — callers fall
-        back to the coarse overlap prune).
-        """
-        if not segs or len(segs) > 256:
-            return None
-        by_name = {f.name: f.dataType for f in target.fields}
-        out: dict[int, Any] = {}
-        for e in segs:
-            conds = []
-            for k in keys:
-                rng = (e.stats or {}).get(k)
-                if not isinstance(rng, (list, tuple)) or len(rng) != 2:
-                    continue
-                mn, mx = rng
-                if mn is None or mx is None:
-                    continue
-                dt = by_name.get(k)
-                c = F.col(k)
-                num = (int, float)
-                if (
-                    isinstance(mn, num)
-                    and isinstance(mx, num)
-                    and not isinstance(mn, bool)
-                    and not isinstance(mx, bool)
-                    and isinstance(
-                        dt,
-                        (
-                            T.ByteType,
-                            T.ShortType,
-                            T.IntegerType,
-                            T.LongType,
-                            T.FloatType,
-                            T.DoubleType,
-                        ),
-                    )
-                ):
-                    conds.append((c >= F.lit(mn)) & (c <= F.lit(mx)))
-                elif isinstance(mn, str) and isinstance(mx, str):
-                    if isinstance(dt, T.StringType):
-                        conds.append((c >= F.lit(mn)) & (c <= F.lit(mx)))
-                    elif isinstance(
-                        dt, (T.TimestampType, T.TimestampNTZType, T.DateType)
-                    ):
-                        s = F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-                        conds.append((s >= F.lit(mn)) & (s <= F.lit(mx)))
-            if not conds:
-                out[e.segment_id] = None
-            else:
-                cond = conds[0]
-                for extra in conds[1:]:
-                    cond = cond & extra
-                out[e.segment_id] = cond
-        return out
 
     def merge_rows(
         self,
@@ -1919,14 +1526,14 @@ class CarbonStore:
         The reference era predates MERGE (like row-level IUD); later
         Apache CarbonData added exactly this CDC shape, and a 100 TB
         training corpus needs it (late corrections, metadata backfills,
-        dedup-survivor upserts). Scale shape, reusing the r13 IUD
-        machinery end-to-end:
+        dedup-survivor upserts). Scale shape, sharing the copy-on-write
+        pipeline of row-level DELETE/UPDATE (``_rewrite``):
 
         1. ONE bounded job over the source computes totals, the
            key-uniqueness guard (duplicate source keys are an ambiguous
-           update and raise), per-key [min,max], and per-segment
-           row-granular zone-map hit counts — a segment no source row's
-           keys fall inside provably holds no match and is pruned;
+           update and raise), and per-segment row-granular zone-map hit
+           counts (``pruning.zone_hit_conditions``) — a segment no source
+           row's keys fall inside provably holds no match and is pruned;
         2. the candidate segments are rewritten in ONE distributed job,
            joined against the source a single time, into ONE rewrite
            segment PER candidate (``_write_rewrites``: the target id
@@ -1994,18 +1601,14 @@ class CarbonStore:
                 *[F.col(c).cast(target[c].dataType).alias(c) for c in needed]
             )
 
-        # ONE bounded job: totals, key uniqueness, per-key [min,max], and
-        # per-segment row-granular zone-map hit counts ("does ANY source
-        # row fall inside this segment's key ranges") — the candidate
-        # prune, riding the same single pass over the source. Match
-        # detection itself no longer runs as its own job: it rides the
-        # rewrite write via observe() below (r19; guide §2.4 — one action
-        # fewer per MERGE, and the candidates' key columns are no longer
-        # scanned separately). The trade: a candidate whose zone maps
-        # overlap the source but which holds no actual match is now
-        # rewritten and discarded at the swap instead of being filtered
-        # by a key-column detection scan; the row-granular prune (vs the
-        # r18 whole-source-range overlap) is what keeps that set small.
+        # ONE bounded job: totals, key uniqueness and per-segment
+        # row-granular zone-map hit counts ("does ANY source row fall
+        # inside this segment's key ranges") — the candidate prune, riding
+        # the same single pass over the source. Match detection rides the
+        # rewrite write as observe() metrics, one action fewer per MERGE.
+        # The trade: a candidate whose zone maps overlap the source but
+        # which holds no actual match is rewritten and discarded at the
+        # swap; the row-granular prune keeps that set small.
         key_notnull = F.lit(True)
         for k in keys:
             key_notnull = key_notnull & F.col(k).isNotNull()
@@ -2014,17 +1617,26 @@ class CarbonStore:
             F.count(F.when(key_notnull, 1)).alias("_nn"),
             F.count_distinct(*[F.col(k) for k in keys]).alias("_nd"),
         ]
-        for k in keys:
-            aggs += [F.min(k).alias(f"_mn_{k}"), F.max(k).alias(f"_mx_{k}")]
         # 0-row segments hold no matches and no keys: never candidates
         # (a 0-row rewrite target would also trip _write_rewrites'
         # lost-data guard, since the left join emits nothing for it)
         segs = [e for e in self.valid_segments(table) if e.rows > 0]
-        hit_conds = self._zone_hit_conditions(segs, keys, target)
-        if hit_conds is not None:
-            for sid, cond in hit_conds.items():
-                if cond is not None:
-                    aggs.append(F.count(F.when(cond, 1)).alias(f"_hit_{sid}"))
+        hits = pruning.zone_hit_conditions(segs, keys, target)
+        bounds: list[str] = []
+        if hits is not None:
+            aggs += [
+                F.count(F.when(cond, 1)).alias(f"_hit_{sid}")
+                for sid, cond in hits.items()
+                if cond is not None
+            ]
+        else:
+            # too many segments for per-segment counts: prune on the
+            # source's whole key range (the expression count stays fixed)
+            for k in keys:
+                col = pruning.stats_column(k, target[k].dataType)
+                if col is not None:
+                    bounds.append(k)
+                    aggs += [F.min(col).alias(f"_mn_{k}"), F.max(col).alias(f"_mx_{k}")]
         stat = src.agg(*aggs).collect()[0]
         if stat["_n"] == 0:
             return {"updated": 0, "inserted": 0}
@@ -2034,285 +1646,99 @@ class CarbonStore:
                 f"({stat['_nn']} keyed rows, {stat['_nd']} distinct): "
                 "ambiguous update — dedup the source first"
             )
-
-        if hit_conds is not None:
+        if hits is not None:
             candidates = [
                 e
                 for e in segs
-                if hit_conds[e.segment_id] is None
-                or int(stat[f"_hit_{e.segment_id}"]) > 0
+                if hits[e.segment_id] is None or stat[f"_hit_{e.segment_id}"] > 0
             ]
         else:
-            # >256 segments: coarse whole-source-range overlap prune
-            # (bounds from the same stats job; expression count in the
-            # aggregate stays constant)
-            def norm_bound(v):
-                import datetime
-
-                if isinstance(v, (datetime.datetime, datetime.date)):
-                    return v.strftime("%Y-%m-%d %H:%M:%S")
-                return v
-
-            candidates = []
-            for e in segs:
-                keep = True
-                for k in keys:
-                    rng = e.stats.get(k)
-                    if rng is None:
-                        continue
-                    smn, smx = norm_bound(stat[f"_mn_{k}"]), norm_bound(
-                        stat[f"_mx_{k}"]
-                    )
-                    if smn is None:
-                        continue  # all-null source key: no match possible here
-                    try:
-                        if smx < rng[0] or smn > rng[1]:
-                            keep = False  # disjoint on this key: no match
-                            break
-                    except TypeError:
-                        continue
-                    except IndexError:
-                        continue
-                if keep:
-                    candidates.append(e)
-
-        updated_total = 0
-        affected: list[SegmentEntry] = []
-        rewrite_targets = [] if insert_only else candidates
-        tag = "_cd_seg"
-        while tag in tcols:
-            tag = f"_{tag}"
-        tagged = None
-        if rewrite_targets:
-            tagged = self.table(
-                table, segment_ids=[e.segment_id for e in candidates], _tag_col=tag
+            candidates = pruning.prune(
+                self.spark,
+                segs,
+                target,
+                [
+                    (k, op, [stat[f"{agg}_{k}"]])
+                    for k in bounds
+                    for op, agg in ((">=", "_mn"), ("<=", "_mx"))
+                ],
             )
-        if not candidates and not insert:
+        targets = [] if insert_only else candidates
+        if not targets and not insert:
             return {"updated": 0, "inserted": 0}
 
-        # reserve ALL provisional segments in one manifest round-trip:
-        # one rewrite target PER candidate source segment (per-segment
-        # zone-map locality — a merge touching N segments must not
-        # collapse into one global sort over their union) + the insert.
-        # A candidate the write's observe() metrics prove unmatched never
-        # goes live: its reserved entry is marked deleted at the swap and
-        # its original segment stays.
-        start = time.time()
-        rewrite_ids: dict[int, int] = {}
-        insert_id: int | None = None
-        with file_lock(self._status_path(table)):
-            entries = self._read_status(table)
-            next_id = max((x.segment_id for x in entries), default=-1) + 1
-            for e in rewrite_targets:
-                rewrite_ids[e.segment_id] = next_id
-                entries.append(
-                    SegmentEntry(
-                        segment_id=next_id,
-                        status=SEGMENT_IN_PROGRESS,
-                        rows=0,
-                        load_start_ts=start,
-                        load_end_ts=0.0,
-                        columns=list(tcols),
-                        origin={
-                            "rewrite_of": e.segment_id,
-                            "op": "merge",
-                        },
+        obs = Observation()
+        matched_col = _fresh_name("_cd_m", tcols)
+
+        def rows(frame, tag):
+            parts = []
+            if frame is not None:
+                t = frame.alias("t")
+                s = src.withColumn(matched_col, F.lit(True)).alias("s")
+                cond = F.lit(True)
+                for k in keys:
+                    cond = cond & (F.col(f"t.{k}") == F.col(f"s.{k}"))
+                matched = F.col(f"s.{matched_col}").isNotNull()
+                sel = [
+                    F.when(matched, F.col(f"s.{f.name}"))
+                    .otherwise(F.col(f"t.{f.name}"))
+                    .cast(f.dataType)
+                    .alias(f.name)
+                    if f.name in update_cols
+                    else F.col(f"t.{f.name}").alias(f.name)
+                    for f in target.fields
+                ]
+                # the matched-row count and the set of segments holding
+                # >=1 match fire exactly once: _write_rewrites' persist
+                # boundary sits ABOVE this node, so the range-bounds
+                # sampler materializes it once and the shuffle map tasks
+                # read blocks
+                mt = _fresh_name("_cd_mt", [*tcols, tag])
+                parts.append(
+                    t.join(s, cond, "left")
+                    .select(*sel, F.col(f"t.{tag}").alias(tag), matched.alias(mt))
+                    .observe(
+                        obs,
+                        F.count(F.when(F.col(mt), 1)).alias("_updated"),
+                        F.collect_set(F.when(F.col(mt), F.col(tag))).alias(
+                            "_affected"
+                        ),
                     )
+                    .drop(mt)
                 )
-                next_id += 1
             if insert:
-                insert_id = next_id
-                entries.append(
-                    SegmentEntry(
-                        segment_id=insert_id,
-                        status=SEGMENT_IN_PROGRESS,
-                        rows=0,
-                        load_start_ts=start,
-                        load_end_ts=0.0,
-                        columns=list(tcols),
-                        origin={"op": "merge_insert"},
-                    )
+                # unmatched source rows: anti-join against the candidates'
+                # keys only — sound because pruning proved no other
+                # segment holds any source key. With a rewrite they ride
+                # its write, which spares a second write job and key scan
+                # without changing the broadcast shape of either join.
+                ids = [e.segment_id for e in candidates]
+                anti = frame if frame is not None else (
+                    self.table(table, segment_ids=ids) if ids else None
                 )
-            self._write_status(table, entries)
+                ins = src if anti is None else src.join(
+                    anti.select(*keys), keys, "left_anti"
+                )
+                parts.append(ins.select(*tcols, F.lit(_INSERT).alias(tag)))
+            return functools.reduce(DataFrame.unionByName, parts)
 
-        part_cols = meta.get("partition_columns", [])
-        sort_cols = [c for c in meta["sort_columns"] if c not in part_cols]
-        by_new: dict[int, tuple[int, dict, dict]] = {}
-        inserted = 0
-        if rewrite_targets:
-            rw = "_cd_rw"
-            while rw in tcols or rw == tag:
-                rw = f"_{rw}"
-            t_frame = tagged
-            t = t_frame.alias("t")
-            s = src.withColumn("_cd_m", F.lit(True)).alias("s")
-            cond = F.lit(True)
-            for k in keys:
-                cond = cond & (F.col(f"t.{k}") == F.col(f"s.{k}"))
-            matched = F.col("s._cd_m").isNotNull()
-            sel = []
-            for f in target.fields:
-                if f.name in update_cols:
-                    sel.append(
-                        F.when(matched, F.col(f"s.{f.name}"))
-                        .otherwise(F.col(f"t.{f.name}"))
-                        .cast(f.dataType)
-                        .alias(f.name)
-                    )
-                else:
-                    sel.append(F.col(f"t.{f.name}").alias(f.name))
-            id_map = F.create_map(
-                *[F.lit(v) for kv in rewrite_ids.items() for v in kv]
-            )
-            # Match detection rides the write (r19): observe() collects
-            # the matched-row count and the set of segments holding >=1
-            # match while the rewrite frame is materialized into
-            # _write_rewrites' cache — the r18 detection job (a key-column
-            # semi-join scan of the candidates + its own action) is gone.
-            # The metrics fire exactly once: the persist boundary sits
-            # ABOVE the CollectMetrics node, so the range-bounds sampler
-            # materializes it once and the shuffle map tasks read blocks.
-            from pyspark.sql import Observation
+        def retired() -> set[int]:
+            # the detection metrics fired during the write; get is
+            # non-blocking here. A candidate without matches keeps its
+            # original segment and its no-op rewrite never goes live.
+            return {int(x) for x in obs.get["_affected"] or []} if targets else set()
 
-            mt = "_cd_mt"
-            while mt in tcols or mt in (tag, rw):
-                mt = f"_{mt}"
-            obs = Observation()
-            out = (
-                t.join(s, cond, "left")
-                .select(*sel, F.col(f"t.{tag}").alias(tag), matched.alias(mt))
-                .observe(
-                    obs,
-                    F.count(F.when(F.col(mt), 1)).alias("_updated"),
-                    F.collect_set(F.when(F.col(mt), F.col(tag))).alias(
-                        "_affected"
-                    ),
-                )
-                .withColumn(rw, F.element_at(id_map, F.col(tag)).cast("int"))
-                .drop(tag, mt)
-            )
-            write_ids = list(rewrite_ids.values())
-            total_for_parts = sum(e.rows for e in rewrite_targets)
-            if insert:
-                # Fuse the insert segment into the SAME distributed write:
-                # the unmatched source rows (anti-join against the affected
-                # segments' keys — sound because pruning + detection proved
-                # no other segment holds any source key) ride the ranged
-                # write under rw = insert_id. This removes the separate
-                # insert write job AND its extra key scan of the affected
-                # segments, without disturbing the broadcast shape of
-                # either join (a full-outer fusion would have forced a
-                # key-shuffle of the target payload).
-                ins_rows = (
-                    src.join(t_frame.select(*keys), keys, "left_anti")
-                    .select(*tcols)
-                    .withColumn(rw, F.lit(insert_id).cast("int"))
-                )
-                out = out.unionByName(ins_rows)
-                write_ids.append(insert_id)
-                total_for_parts += int(stat["_n"])
-            by_new.update(
-                self._write_rewrites(
-                    table,
-                    out,
-                    rw,
-                    write_ids,
-                    meta,
-                    total_rows=total_for_parts,
-                    optional_ids={insert_id} if insert else None,
-                )
-            )
-            if insert and insert_id in by_new:
-                inserted = by_new[insert_id][0]
-            # detection metrics fired during the write's cache
-            # materialization; get() is non-blocking here
-            m = obs.get
-            updated_total = int(m["_updated"] or 0)
-            hit_ids = {int(x) for x in (m["_affected"] or [])}
-            affected = [e for e in rewrite_targets if e.segment_id in hit_ids]
-        elif insert:
-            # No rewrite job to fuse with (insert-only merge, or no source
-            # key matched anywhere): standalone clustered insert write.
-            anti_ids = [e.segment_id for e in candidates] if insert_only else []
-            cached_ins = None
-            if anti_ids:
-                aff_keys = self.table(table, segment_ids=anti_ids).select(*keys)
-                # persist the anti-join before the ranged write: the
-                # range-bounds sampler and the shuffle map tasks would
-                # otherwise compute it twice (the same double-execution
-                # _write_rewrites' persist removes for rewrites)
-                from pyspark import StorageLevel
-
-                cached_ins = src.join(aff_keys, keys, "left_anti").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                ins_df = cached_ins
-            else:
-                ins_df = src
-            seg_dir = self._segment_dir(table, insert_id)
-            n_parts = max(1, int(stat["_n"]) // 4_000_000)
-            try:
-                self._write_clustered(ins_df, meta, seg_dir, n_parts)
-            finally:
-                if cached_ins is not None:
-                    cached_ins.unpersist()
-            ins_metas = self._footer_metadata(seg_dir)
-            inserted = self._segment_rows_from_footers(seg_dir, ins_metas)
-            if inserted:
-                by_new[insert_id] = (
-                    inserted,
-                    self._collect_segment_stats(seg_dir, sort_cols, ins_metas),
-                    self._collect_segment_blooms(seg_dir, meta),
-                )
-
-        # ONE all-or-nothing swap (compact()'s discipline). Only segments
-        # the detection metrics proved matched are retired; a candidate
-        # without matches keeps its original segment and its no-op
-        # rewrite is marked deleted (clean_files prey), so the committed
-        # state is row-identical to the r18 detect-then-rewrite shape.
-        old_ids = {e.segment_id for e in affected}
-        committed = {rewrite_ids[e.segment_id] for e in affected}
-        if insert_id is not None:
-            committed.add(insert_id)
-        new_ids = set(rewrite_ids.values()) | (
-            {insert_id} if insert_id is not None else set()
+        inserted = self._rewrite(
+            table,
+            meta,
+            targets,
+            "merge",
+            rows,
+            retired=retired,
+            insert_rows=int(stat["_n"]) if insert else None,
         )
-        with file_lock(self._status_path(table)):
-            entries = self._read_status(table)
-            live = {x.segment_id for x in entries if x.status == SEGMENT_SUCCESS}
-            if not old_ids <= live:
-                abort_ts = time.time()
-                for x in entries:
-                    if x.segment_id in new_ids:
-                        x.status = SEGMENT_DELETED
-                        x.invalidated_ts = abort_ts
-                self._write_status(table, entries)
-                raise RuntimeError(
-                    f"MERGE aborted: segments {sorted(old_ids - live)} "
-                    "changed state concurrently; no rows were modified"
-                )
-            commit_ts = time.time()
-            for x in entries:
-                if x.segment_id in old_ids:
-                    x.status = SEGMENT_COMPACTED
-                    x.invalidated_ts = commit_ts
-                if x.segment_id in new_ids:
-                    if x.segment_id in committed and x.segment_id in by_new:
-                        rows, stats, blooms = by_new[x.segment_id]
-                        x.status = SEGMENT_SUCCESS
-                        x.rows = rows
-                        x.load_end_ts = commit_ts
-                        x.stats = stats
-                        x.blooms = blooms
-                    else:
-                        # empty insert (every source row matched) or a
-                        # candidate's no-op rewrite (zone maps overlapped
-                        # but no row matched): the reserved entry never
-                        # goes live
-                        x.status = SEGMENT_DELETED
-                        x.invalidated_ts = commit_ts
-            self._write_status(table, entries)
-        return {"updated": updated_total, "inserted": inserted}
+        updated = int(obs.get["_updated"] or 0) if targets else 0
+        return {"updated": updated, "inserted": inserted}
 
     # -- schema evolution (ALTER CUBE) ------------------------------------
 

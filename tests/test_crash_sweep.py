@@ -70,6 +70,9 @@ def _mutations(spark):
     def upd(store):
         store.update_rows("t", "v % 16 = 0", {"v": "-1"})
 
+    def dlt(store):
+        store.delete_rows("t", "v % 16 = 0")
+
     def mrg(store):
         # 20 matched keys (update path) + 10 unmatched (insert path)
         src = spark.range(0, 20).select(
@@ -84,7 +87,20 @@ def _mutations(spark):
     def cmp_(store):
         store.compact("t")
 
-    return [("update", upd), ("merge", mrg), ("compact", cmp_)]
+    def ld(store):
+        # only the final manifest swap publishes the segment, so a crash
+        # at any earlier call leaves the pre state and a retry appends once
+        store.load("t", spark.range(500, 510).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        ))
+
+    return [
+        ("update", upd),
+        ("delete", dlt),
+        ("merge", mrg),
+        ("compact", cmp_),
+        ("load", ld),
+    ]
 
 
 def _is_commit_call(root, src, dst) -> bool:
@@ -153,7 +169,7 @@ def _crash_at(root, store, fn, n):
             fn(store)
 
 
-@pytest.mark.parametrize("op_name", ["update", "merge", "compact"])
+@pytest.mark.parametrize("op_name", ["update", "delete", "merge", "compact", "load"])
 def test_crash_at_every_commit_call_is_atomic(spark, tmp_path, op_name):
     fn = dict(_mutations(spark))[op_name]
 

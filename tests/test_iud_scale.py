@@ -19,8 +19,16 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from carbondata_spark.store import CarbonStore, _sql_prunable_conjuncts
+from carbondata_spark.pruning import prune, sql_prunable_conjuncts
+from carbondata_spark.store import CarbonStore
 from tests._jobcount import count_jobs
+
+
+def _prune_for(store, sources, predicate, table="t"):
+    """The mutation candidates ``delete_rows``/``update_rows`` keep."""
+    return prune(
+        store.spark, sources, store.schema(table), sql_prunable_conjuncts(predicate)
+    )
 
 
 @pytest.fixture()
@@ -36,41 +44,40 @@ def four_segment_store(spark, tmp_path):
 
 
 def test_parser_soundness_cases():
-    assert _sql_prunable_conjuncts("k = 5") == [("k", "=", [5])]
-    assert _sql_prunable_conjuncts("5 > k") == [("k", "<", [5])]
-    assert _sql_prunable_conjuncts("a = 1 OR b = 2") == []  # disjunction
-    assert _sql_prunable_conjuncts("NOT a = 1") == []  # negation unparsed
+    assert sql_prunable_conjuncts("k = 5") == [("k", "=", [5])]
+    assert sql_prunable_conjuncts("5 > k") == [("k", "<", [5])]
+    assert sql_prunable_conjuncts("a = 1 OR b = 2") == []  # disjunction
+    assert sql_prunable_conjuncts("NOT a = 1") == []  # negation unparsed
     # modulo conjunct contributes nothing; the range conjunct survives
-    assert _sql_prunable_conjuncts("k % 2 = 0 AND v < 10") == [("v", "<", [10])]
+    assert sql_prunable_conjuncts("k % 2 = 0 AND v < 10") == [("v", "<", [10])]
     # quoted AND/quote-escape do not split or corrupt
-    assert _sql_prunable_conjuncts("s = 'x AND y' AND k > 3") == [
+    assert sql_prunable_conjuncts("s = 'x AND y' AND k > 3") == [
         ("s", "=", ["x AND y"]),
         ("k", ">", [3]),
     ]
-    assert _sql_prunable_conjuncts("name = 'O''Brien'") == [
+    assert sql_prunable_conjuncts("name = 'O''Brien'") == [
         ("name", "=", ["O'Brien"])
     ]
     # BETWEEN's inner AND splits into unparseable frags -> ignored, sound
-    assert _sql_prunable_conjuncts("k BETWEEN 1 AND 5 AND v = 3") == [
+    assert sql_prunable_conjuncts("k BETWEEN 1 AND 5 AND v = 3") == [
         ("v", "=", [3])
     ]
-    assert _sql_prunable_conjuncts("k IN (3, 5, 7)") == [("k", "in", [3, 5, 7])]
+    assert sql_prunable_conjuncts("k IN (3, 5, 7)") == [("k", "in", [3, 5, 7])]
 
 
 def test_prune_candidates_zone_map(four_segment_store):
     store = four_segment_store
-    meta = store._read_schema("t")
     sources = store.valid_segments("t")
     assert len(sources) == 4
-    kept = store._prune_mutation_candidates(sources, "k = 250", meta)
+    kept = _prune_for(store, sources, "k = 250")
     assert [e.segment_id for e in kept] == [2]
-    kept = store._prune_mutation_candidates(sources, "k >= 150 AND k < 210", meta)
+    kept = _prune_for(store, sources, "k >= 150 AND k < 210")
     assert [e.segment_id for e in kept] == [1, 2]
     # unparseable predicate: conservative full set
-    kept = store._prune_mutation_candidates(sources, "k % 7 = 0", meta)
+    kept = _prune_for(store, sources, "k % 7 = 0")
     assert len(kept) == 4
     # non-sort column has no stats: conservative full set
-    kept = store._prune_mutation_candidates(sources, "v = 10", meta)
+    kept = _prune_for(store, sources, "v = 10")
     assert len(kept) == 4
 
 
@@ -179,9 +186,8 @@ def test_bloom_prune_point_delete(spark, tmp_path):
     )
     store.load("b", df.filter(F.col("k") < 100))
     store.load("b", df.filter(F.col("k") >= 100))
-    meta = store._read_schema("b")
     sources = store.valid_segments("b")
-    kept = store._prune_mutation_candidates(sources, "k = 42", meta)
+    kept = _prune_for(store, sources, "k = 42", "b")
     assert [e.segment_id for e in kept] == [0]
     assert store.delete_rows("b", "k = 42") == 1
     assert store.table("b").count() == 199
@@ -379,9 +385,7 @@ def test_bloom_table_multi_segment_update_constant_jobs(spark, tmp_path, monkeyp
             # rewritten segments carry fresh blooms and still point-prune
             segs = store.valid_segments("b")
             assert all(e.blooms.get("k") for e in segs)
-            kept = store._prune_mutation_candidates(
-                segs, "k = 60", store._read_schema("b")
-            )
+            kept = _prune_for(store, segs, "k = 60", "b")
             assert len(kept) == 1
             assert store.scan("b", column="k", eq=60).count() == 1
             staging = [p for p in writes if ".rewrite_staging_" in p]
