@@ -16,13 +16,15 @@ in, without any global sort or index table.
 
 Design constraints, in order:
 
-* **Hash parity by construction.** The load side sets bits with
-  JVM-side ``xxhash64`` expressions; a Python reimplementation would
-  have to reproduce 64-bit overflow + pmod semantics bit-for-bit.
-  Instead the PROBE evaluates the SAME Spark expressions on a tiny
-  literal DataFrame (one row per probe value) — load and probe can
-  never diverge because they share the expression builder
-  (`_position_exprs`).
+* **No Spark job to probe.** The load side sets bits with JVM-side
+  ``xxhash64`` expressions (`_position_exprs`); the probe computes the
+  same positions on the driver (`probe_positions`, a port of Spark's
+  XXH64 with its 64-bit wrapping and ``pmod``), so planning a point
+  lookup starts no job. The two must never diverge — a probe position
+  the load side did not set would prune a segment holding the key —
+  and ``tests/test_bloom.py`` pins their parity for every bloomable
+  type, the integer extremes, pre-1970 dates, empty, long and non-ASCII
+  strings, and every filter geometry.
 * **Bounded driver state.** The bitset is built from
   ``collect_set(position)`` — its size is min(k·ndv, m) ≤ m bits
   (2^23 max = 1 MiB), INDEPENDENT of row count: the same bounded-
@@ -40,8 +42,10 @@ Design constraints, in order:
 from __future__ import annotations
 
 import base64
+import datetime
+import struct
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,11 +59,10 @@ def _position_exprs(col: str, m, k: int = K_HASHES):
     """The k bit positions of a value, as Spark Column expressions —
     Kirsch-Mitzenmacher double hashing over two independent xxhash64
     streams (the second salted with the column name). Shared verbatim by
-    the load-side bit setter, the probe, AND the grouped multi-segment
-    collector, so the JVM's 64-bit wrapping arithmetic is the single
-    source of truth. ``m`` may be an int literal or a Column (the grouped
-    collector maps each row's segment tag to that segment's bitset size —
-    same modular math either way)."""
+    the load-side bit setter and the grouped multi-segment collector;
+    ``probe_positions`` is its driver-side twin. ``m`` may be an int
+    literal or a Column (the grouped collector maps each row's segment
+    tag to that segment's bitset size — same modular math either way)."""
     m_col = F.lit(m) if isinstance(m, int) else m
     h1 = F.pmod(F.xxhash64(F.col(col)), m_col)
     h2 = F.pmod(F.xxhash64(F.col(col), F.lit(col)), m_col)
@@ -142,8 +145,8 @@ def compute_segment_blooms_grouped(
     approx_count_distinct sizes every (segment, column) bitset, then one
     union of per-column position frames — each row's positions computed
     with ITS segment's bitset size via a tag→m map column through the
-    SAME ``_position_exprs`` builder the probe uses (hash parity by
-    construction) — aggregated by (segment, column) ``collect_set``.
+    SAME ``_position_exprs`` builder the single-segment path uses —
+    aggregated by (segment, column) ``collect_set``.
     Driver state stays bounded by Σ min(k·ndv, m) bits, the same
     metadata class as the single-segment path; a (segment, column)
     whose cardinality would saturate MAX_BITS stores no bloom, exactly
@@ -203,36 +206,112 @@ def compute_segment_blooms_grouped(
     return out
 
 
-# (col, dtype, values, m, k) -> positions. Probe positions are a pure
-# function of the lookup literals and the filter geometry — they never
-# depend on table data or session state — so repeated point lookups
-# (a serving loop, the bench's repeated passes) skip the probe job's
-# ~0.1 s local-DataFrame overhead after the first call.
-_PROBE_CACHE: dict[tuple, list[list[int]]] = {}
+# Spark's XXH64 (org.apache.spark.sql.catalyst.expressions.XXH64), the
+# hash behind F.xxhash64, over unsigned 64-bit Python ints
+_MASK = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_SEED = 42  # F.xxhash64's seed
+_EPOCH = datetime.date(1970, 1, 1)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _MASK
+
+
+def _fmix(h: int) -> int:
+    h ^= h >> 33
+    h = h * _P2 & _MASK
+    h ^= h >> 29
+    h = h * _P3 & _MASK
+    return h ^ (h >> 32)
+
+
+def _lane(acc: int, word: int) -> int:
+    return _rotl((acc + word * _P2) & _MASK, 31) * _P1 & _MASK
+
+
+def _hash_int(v: int, seed: int) -> int:
+    h = (seed + _P5 + 4) & _MASK
+    h ^= (v & 0xFFFFFFFF) * _P1 & _MASK
+    return _fmix((_rotl(h, 23) * _P2 + _P3) & _MASK)
+
+
+def _hash_long(v: int, seed: int) -> int:
+    h = (seed + _P5 + 8) & _MASK
+    h ^= _lane(0, v & _MASK)
+    return _fmix((_rotl(h, 27) * _P1 + _P4) & _MASK)
+
+
+def _hash_bytes(b: bytes, seed: int) -> int:
+    n, i = len(b), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _MASK, (seed + _P2) & _MASK, seed, (seed - _P1) & _MASK]
+        while i <= n - 32:
+            v = [_lane(a, w) for a, w in zip(v, struct.unpack_from("<4Q", b, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _MASK
+        for a in v:
+            h = ((h ^ _lane(0, a)) * _P1 + _P4) & _MASK
+    else:
+        h = (seed + _P5) & _MASK
+    h = (h + n) & _MASK
+    while i <= n - 8:
+        h ^= _lane(0, struct.unpack_from("<Q", b, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _MASK
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", b, i)[0] * _P1 & _MASK
+        h = (_rotl(h, 23) * _P2 + _P3) & _MASK
+        i += 4
+    for c in b[i:]:
+        h ^= c * _P5 & _MASK
+        h = _rotl(h, 11) * _P1 & _MASK
+    return _fmix(h)
+
+
+def _hasher(dtype: T.DataType):
+    """``(value, seed) -> hash`` as Spark hashes a non-null ``dtype``
+    value, or None for the types the probe does not hash."""
+    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType)):
+        return _hash_int
+    if isinstance(dtype, T.LongType):
+        return _hash_long
+    if isinstance(dtype, T.DateType):
+        return lambda v, seed: _hash_int((v - _EPOCH).days, seed)
+    if isinstance(dtype, T.StringType) and dtype.isUTF8BinaryCollation():
+        return lambda v, seed: _hash_bytes(v.encode("utf-8"), seed)
+    return None
+
+
+def _signed(h: int) -> int:
+    return h - (1 << 64) if h >> 63 else h
 
 
 def probe_positions(
-    spark: SparkSession,
-    col: str,
-    dtype: T.DataType,
-    values: list,
-    m: int,
-    k: int = K_HASHES,
+    col: str, dtype: T.DataType, values: list, m: int, k: int = K_HASHES
 ) -> list[list[int]]:
-    """The k bit positions of each probe value for an m-bit filter,
-    computed by the SAME Spark expressions the load side used (a one-row-
-    per-value local DataFrame — a driver-side metadata job, no cluster
-    data touched). ``k`` comes from the manifest entry, so filters written
-    under an older K_HASHES keep probing correctly."""
-    key = (col, dtype.simpleString(), tuple(values), m, k)
-    if key in _PROBE_CACHE:
-        return _PROBE_CACHE[key]
-    schema = T.StructType([T.StructField(col, dtype)])
-    df = spark.createDataFrame([(v,) for v in values], schema)
-    rows = df.select(F.array(*_position_exprs(col, m, k)).alias("ps")).collect()
-    out = [list(r["ps"]) for r in rows]
-    if len(_PROBE_CACHE) < 4096:  # bounded; positions are tiny
-        _PROBE_CACHE[key] = out
+    """The k bit positions of each probe value for an m-bit filter: the
+    positions ``_position_exprs`` gives that value in a ``dtype`` column
+    named ``col``, computed on the driver. ``k`` comes from the manifest
+    entry, so filters written under an older K_HASHES keep probing
+    correctly. Values must be non-null and of ``dtype``'s Python type
+    (``pruning._bloomable`` checks); raises TypeError for a type the
+    load side's hash cannot be reproduced for (floats, decimals,
+    timestamps, collated strings)."""
+    hasher = _hasher(dtype)
+    if hasher is None:
+        raise TypeError(f"no driver-side bloom hash for {dtype.simpleString()}")
+    salt = col.encode("utf-8")
+    out = []
+    for v in values:
+        raw = hasher(v, _SEED)
+        h1 = _signed(raw) % m
+        h2 = _signed(_hash_bytes(salt, raw)) % m
+        out.append([(h1 + i * h2) % m for i in range(k)])
     return out
 
 

@@ -23,7 +23,7 @@ import datetime
 import re
 from typing import Any
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,7 +68,9 @@ def _to_stats_domain(dtype: T.DataType, op: str, vals: list) -> tuple | None:
     ``dtype`` column, or None when a comparison there could disagree with
     Spark's comparison of the column against those literals.
 
-    - numbers against numeric columns, strings against string columns;
+    - numbers against numeric columns, strings against UTF8_BINARY string
+      columns (a collated column compares by its collation, the stats by
+      binary order; a string with no UTF-8 form has no Spark value);
     - against DATE and TIMESTAMP_NTZ columns: ``'YYYY-MM-DD'`` strings and
       ``datetime.date`` values mean midnight; a ``'YYYY-MM-DD HH:MM:SS'``
       string keeps its time against TIMESTAMP_NTZ and is cut to midnight
@@ -83,7 +85,7 @@ def _to_stats_domain(dtype: T.DataType, op: str, vals: list) -> tuple | None:
     if isinstance(dtype, _NUMERIC):
         return (op, vals) if all(_is_number(v) for v in vals) else None
     if isinstance(dtype, T.StringType):
-        return (op, vals) if all(isinstance(v, str) for v in vals) else None
+        return (op, vals) if _binary_strings(dtype, vals) else None
     if not isinstance(dtype, (T.DateType, T.TimestampNTZType)):
         return None
     out = []
@@ -107,11 +109,23 @@ def _to_stats_domain(dtype: T.DataType, op: str, vals: list) -> tuple | None:
     return op, out
 
 
+def _binary_strings(dtype: T.StringType, vals: list) -> bool:
+    """Whether ``vals`` are strings Spark compares with a ``dtype``
+    column by UTF-8 byte order, as the stats and blooms hold them."""
+    if not dtype.isUTF8BinaryCollation() or not all(isinstance(v, str) for v in vals):
+        return False
+    try:
+        "".join(vals).encode("utf-8")
+    except UnicodeEncodeError:
+        return False
+    return True
+
+
 def _bloomable(dtype: T.DataType, vals: list) -> bool:
     """Whether ``probe_positions`` hashes ``vals`` exactly as the load
     side hashed the column's values: same type, and in range."""
     if isinstance(dtype, T.StringType):
-        return all(isinstance(v, str) for v in vals)
+        return _binary_strings(dtype, vals)
     if isinstance(dtype, T.DateType):
         return all(type(v) is datetime.date for v in vals)
     bits = _INTEGRAL_BITS.get(type(dtype))
@@ -141,7 +155,6 @@ def _zone_miss(rng: list | None, dom: tuple | None) -> bool:
 
 
 def prune(
-    spark: SparkSession,
     segments: list,
     schema: T.StructType,
     conjuncts: list[tuple[str, str, list]],
@@ -168,7 +181,7 @@ def prune(
     if not checks:
         return list(segments)
     # probe positions depend on the filter geometry only; segments loaded
-    # at the same cardinality share one, so this is usually one tiny job
+    # at the same cardinality share one
     positions: dict[tuple, list[list[int]]] = {}
 
     def bloom_miss(e, fld, vals) -> bool:
@@ -178,7 +191,7 @@ def prune(
         key = (fld.name, tuple(vals), b["m"], b["k"])
         if key not in positions:
             positions[key] = probe_positions(
-                spark, fld.name, fld.dataType, vals, b["m"], b["k"]
+                fld.name, fld.dataType, vals, b["m"], b["k"]
             )
         return not any(might_contain(b, ps) for ps in positions[key])
 
@@ -197,7 +210,9 @@ def stats_column(name: str, dtype: T.DataType) -> Column | None:
     """Column ``name`` as a Spark expression in the stats domain — the
     row-granular twin of ``_to_stats_domain`` — or None for the types
     that domain does not hold faithfully."""
-    if isinstance(dtype, _NUMERIC + (T.StringType,)):
+    if isinstance(dtype, _NUMERIC) or (
+        isinstance(dtype, T.StringType) and dtype.isUTF8BinaryCollation()
+    ):
         return F.col(name)
     if isinstance(dtype, (T.DateType, T.TimestampNTZType)):
         return F.date_format(F.col(name), _SPARK_STATS_FMT)

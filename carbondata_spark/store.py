@@ -32,10 +32,12 @@ commits are lock + atomic-rename, safe for concurrent loaders.
 
 from __future__ import annotations
 
+import copy
 import functools
 import json
 import os
 import shutil
+import threading
 import time
 from dataclasses import dataclass, field
 from typing import Any
@@ -185,6 +187,21 @@ _RESOLVED_TABLES: dict[
     tuple[str, str], tuple[SparkSession, tuple, DataFrame]
 ] = {}
 _RESOLVED_TABLES_CAP = 256
+# segment directory -> (its _file_stamp, the parquet schema Spark inferred
+# for it). A committed segment never changes (a rewrite gets a new id), so
+# later reads pass the schema and skip Spark's schema-inference job; the
+# stamp tells a directory recreated at the same path (DROP + CREATE) from
+# the recorded one. Bounded like _RESOLVED_TABLES.
+_SEGMENT_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+_SEGMENT_SCHEMAS_CAP = 4096
+_SEGMENT_SCHEMAS_LOCK = threading.Lock()
+
+
+def _schema_of(meta: dict[str, Any]) -> T.StructType:
+    """The table schema held in ``meta``. PySpark's ``StructType.fromJson``
+    rewrites the collation metadata of the dict it parses, so a second
+    parse of the same dict fails: it parses a copy."""
+    return T.StructType.fromJson(copy.deepcopy(meta["schema"]))
 
 
 def _file_stamp(path: str) -> tuple[int, int, int]:
@@ -427,7 +444,7 @@ class CarbonStore:
         segs = self._read_status(table)
         out = {
             "name": table,
-            "schema": T.StructType.fromJson(meta["schema"]).simpleString(),
+            "schema": _schema_of(meta).simpleString(),
             "sort_columns": meta["sort_columns"],
             "properties": meta["properties"],
             "segments": len([s for s in segs if s.status == SEGMENT_SUCCESS]),
@@ -438,7 +455,7 @@ class CarbonStore:
         # segments written before an ALTER DROP may still carry blooms
         # for the dropped column; health is reported only for columns in
         # the CURRENT schema
-        fields = {f.name for f in T.StructType.fromJson(meta["schema"]).fields}
+        fields = {f.name for f in _schema_of(meta).fields}
         bloom_cols = sorted({c for s in live for c in s.blooms if c in fields})
         if bloom_cols:
             import base64 as _b64
@@ -464,7 +481,7 @@ class CarbonStore:
         return out
 
     def schema(self, table: str) -> T.StructType:
-        return T.StructType.fromJson(self._read_schema(table)["schema"])
+        return _schema_of(self._read_schema(table))
 
     # -- load (LOAD DATA) -------------------------------------------------
 
@@ -494,7 +511,7 @@ class CarbonStore:
         reload (CarbonDataLoadRDD.scala:306-345).
         """
         meta = self._read_schema(table)
-        target = T.StructType.fromJson(meta["schema"])
+        target = _schema_of(meta)
         df = self._conform(df, target)
 
         part_cols = meta.get("partition_columns", [])
@@ -728,7 +745,7 @@ class CarbonStore:
             candidates = self._asof_segments(table, as_of_ts)
         else:
             candidates = self.valid_segments(table)
-        keep = pruning.prune(self.spark, candidates, self.schema(table), conjuncts)
+        keep = pruning.prune(candidates, self.schema(table), conjuncts)
         df = self.table(
             table, segment_ids=[e.segment_id for e in keep], as_of_ts=as_of_ts
         )
@@ -884,6 +901,13 @@ class CarbonStore:
         load/compact/IUD/ALTER from this or another process yields a
         new stamp and the next call re-resolves. Results always
         recompute from the parquet bytes; only plan metadata is cached.
+
+        Every read, subset or not, also reuses the parquet schema Spark
+        inferred at an earlier read of the same committed segments
+        (keyed on each segment directory and its stat stamp), so it
+        starts no schema-inference job: committed segments never change,
+        and a directory recreated at the same path gets a new stamp. The
+        cast-and-default alignment above is unchanged.
         """
         if segment_ids is None and as_of_ts is None and _tag_col is None:
             try:
@@ -914,7 +938,7 @@ class CarbonStore:
         _tag_col: str | None = None,
     ) -> DataFrame:
         meta = self._read_schema(table)
-        target = T.StructType.fromJson(meta["schema"])
+        target = _schema_of(meta)
         defaults: dict[str, Any] = {}
         for ev in meta["evolution"]:
             defaults.update(ev.get("defaults", {}))
@@ -950,7 +974,7 @@ class CarbonStore:
                 # Union a multi-segment read becomes (r15: a multi-
                 # candidate tagged detection on a partitioned table hit
                 # exactly that)
-                raws = [self.spark.read.parquet(p) for p in paths]
+                raws = [self._read_segments([p]) for p in paths]
                 if _tag_col is not None:
                     raws = [
                         r.withColumn(_tag_col, F.lit(sid).cast("int"))
@@ -960,7 +984,7 @@ class CarbonStore:
                 for r in raws[1:]:
                     raw = raw.unionByName(r)
             else:
-                raw = self.spark.read.parquet(*paths)
+                raw = self._read_segments(paths)
                 if _tag_col is not None:
                     raw = raw.withColumn(
                         _tag_col,
@@ -992,6 +1016,31 @@ class CarbonStore:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _read_segments(self, paths: list[str]) -> DataFrame:
+        """``spark.read.parquet(*paths)`` over committed segment dirs.
+        When every dir has the same schema recorded under its current
+        stamp, Spark is given it; otherwise Spark infers the schema and
+        it is recorded for each dir."""
+        try:
+            stamps = [_file_stamp(p) for p in paths]
+        except OSError:
+            return self.spark.read.parquet(*paths)
+        known = {
+            hit[1] if (hit := _SEGMENT_SCHEMAS.get(p)) and hit[0] == st else None
+            for p, st in zip(paths, stamps)
+        }
+        if len(known) == 1 and None not in known:
+            return self.spark.read.schema(known.pop()).parquet(*paths)
+        raw = self.spark.read.parquet(*paths)
+        schema = raw.schema
+        with _SEGMENT_SCHEMAS_LOCK:
+            for p, st in zip(paths, stamps):
+                _SEGMENT_SCHEMAS.pop(p, None)
+                while len(_SEGMENT_SCHEMAS) >= _SEGMENT_SCHEMAS_CAP:
+                    _SEGMENT_SCHEMAS.pop(next(iter(_SEGMENT_SCHEMAS)))
+                _SEGMENT_SCHEMAS[p] = (st, schema)
+        return raw
 
     def register_view(self, table: str, view_name: str | None = None) -> None:
         self.table(table).createOrReplaceTempView(view_name or table)
@@ -1250,7 +1299,7 @@ class CarbonStore:
                 # explicit schema: a schema-inference job per segment dir
                 # would reintroduce the O(#affected) job growth this path
                 # exists to remove (pinned in tests/test_iud_scale.py)
-                read_schema = T.StructType.fromJson(meta["schema"])
+                read_schema = _schema_of(meta)
                 tagged = None
                 for new_id in sorted(results):
                     r = self.spark.read.schema(read_schema).parquet(
@@ -1295,7 +1344,7 @@ class CarbonStore:
             "compacted_from": sorted(old_ids),
         }
         (new_id,) = self._reserve(
-            table, [origin], T.StructType.fromJson(meta["schema"]).fieldNames()
+            table, [origin], _schema_of(meta).fieldNames()
         )
         seg_dir = self._segment_dir(table, new_id)
         n_parts = partitions or max(1, sum(e.rows for e in segs) // 4_000_000)
@@ -1369,15 +1418,13 @@ class CarbonStore:
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         pred = pred.cast("boolean")
         meta = self._read_schema(table)
-        schema = T.StructType.fromJson(meta["schema"])
+        schema = _schema_of(meta)
         conjuncts = (
             pruning.sql_prunable_conjuncts(predicate)
             if isinstance(predicate, str)
             else []
         )
-        candidates = pruning.prune(
-            self.spark, self.valid_segments(table), schema, conjuncts
-        )
+        candidates = pruning.prune(self.valid_segments(table), schema, conjuncts)
         if not candidates:
             return 0
         tag = _fresh_name("_cd_seg", schema.fieldNames())
@@ -1458,7 +1505,7 @@ class CarbonStore:
         concurrently aborts the swap and raises RuntimeError; no rows
         change. Returns the number of rows the insert segment received.
         """
-        cols = T.StructType.fromJson(meta["schema"]).fieldNames()
+        cols = _schema_of(meta).fieldNames()
         src_ids = [e.segment_id for e in sources]
         tags = list(src_ids)
         origins = [{"rewrite_of": sid, "op": op} for sid in src_ids]
@@ -1561,7 +1608,7 @@ class CarbonStore:
         equality) and are inserted when ``insert=True``.
         """
         meta = self._read_schema(table)
-        target = T.StructType.fromJson(meta["schema"])
+        target = _schema_of(meta)
         tcols = [f.name for f in target.fields]
         keys = [keys] if isinstance(keys, str) else list(keys)
         missing = [k for k in keys if k not in tcols]
@@ -1654,7 +1701,6 @@ class CarbonStore:
             ]
         else:
             candidates = pruning.prune(
-                self.spark,
                 segs,
                 target,
                 [
@@ -1749,7 +1795,7 @@ class CarbonStore:
         given defaults (CarbonSqlParser.scala:731-776)."""
         with file_lock(self._schema_path(table)):
             meta = self._read_schema(table)
-            schema = T.StructType.fromJson(meta["schema"])
+            schema = _schema_of(meta)
             existing = {f.name for f in schema.fields}
             for fld in new_fields:
                 if fld.name in existing:
@@ -1770,7 +1816,7 @@ class CarbonStore:
         """ALTER CUBE DROP — columns disappear from reads of all segments."""
         with file_lock(self._schema_path(table)):
             meta = self._read_schema(table)
-            schema = T.StructType.fromJson(meta["schema"])
+            schema = _schema_of(meta)
             missing = set(names) - {f.name for f in schema.fields}
             if missing:
                 raise ValueError(f"no such columns: {sorted(missing)}")

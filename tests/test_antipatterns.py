@@ -37,9 +37,8 @@ ARROW_BATCH_ALLOWED = {
 TOPANDAS_ALLOWED = {"oracle.py"}
 # .collect() is banned as a DATA path; bloom.py's collects are bounded
 # METADATA by construction — collect_set(bit position) is capped at the
-# bitset size (2^23 bits) per column regardless of row count, and the
-# probe collects k positions per lookup literal. Same class as the
-# parquet footer min/max reads feeding the manifest zone maps.
+# bitset size (2^23 bits) per column regardless of row count. Same class
+# as the parquet footer min/max reads feeding the manifest zone maps.
 COLLECT_ALLOWED = {
     "bloom.py",
     # jdbc_q's build step collects exactly TWO scalars (min/max of the

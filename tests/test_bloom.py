@@ -10,9 +10,15 @@ index; here it's manifest metadata, no index table, no extra shuffle.
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tests._jobcount import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -95,8 +101,7 @@ def test_point_scan_residual_filter_pushed(bloom_store):
 
 
 def test_string_column_bloom_and_eq(spark, tmp_path, sf_dir):
-    """Blooms work on string keys (hash parity via the shared Spark
-    exprs), through scan(eq=...)."""
+    """Blooms work on string keys, through scan(eq=...)."""
     from carbondata_spark.catalog import load_table
     from carbondata_spark.store import CarbonStore
 
@@ -277,3 +282,102 @@ def test_bloom_health_drops_with_dropped_column(spark, tmp_path, sf_dir):
     d = store.describe("o_drop")
     assert set(d["bloom_health"]) == {"o_orderkey"}
     assert "o_custkey" not in d["schema"]
+
+
+# (strategy, edge values always probed) per bloomable column type
+_PARITY_VALUES = {
+    T.ByteType(): (st.integers(-(1 << 7), (1 << 7) - 1), [-(1 << 7), (1 << 7) - 1, -1, 0]),
+    T.ShortType(): (st.integers(-(1 << 15), (1 << 15) - 1), [-(1 << 15), (1 << 15) - 1, -1]),
+    T.IntegerType(): (st.integers(-(1 << 31), (1 << 31) - 1), [-(1 << 31), (1 << 31) - 1, -1]),
+    T.LongType(): (st.integers(-(1 << 63), (1 << 63) - 1), [-(1 << 63), (1 << 63) - 1, -1]),
+    T.DateType(): (
+        st.dates(),
+        [
+            datetime.date(1, 1, 1),
+            datetime.date(1900, 2, 28),
+            datetime.date(1969, 12, 31),
+            datetime.date(1970, 1, 1),
+            datetime.date(9999, 12, 31),
+        ],
+    ),
+    T.StringType(): (
+        st.text(max_size=80),
+        ["", "a", "abcd", "é", "日本語", "x" * 31, "y" * 32, "z" * 71, "Grüße 🙂" * 5],
+    ),
+}
+
+
+@pytest.mark.parametrize("dtype", list(_PARITY_VALUES), ids=lambda t: t.simpleString())
+@settings(max_examples=6, deadline=None)
+@given(data=st.data())
+def test_probe_positions_equal_load_side_positions(spark, dtype, data):
+    """The driver-side probe hash must give every value the bit positions
+    the load side's Spark expressions (``_position_exprs``) set for it,
+    for every filter geometry a manifest can hold."""
+    from carbondata_spark.bloom import MAX_BITS, MIN_BITS, _position_exprs, probe_positions
+
+    strategy, edges = _PARITY_VALUES[dtype]
+    vals = edges + data.draw(st.lists(strategy, max_size=24))
+    col = data.draw(st.sampled_from(["k", "o_orderkey", "schlüssel"]))
+    geoms = [(m, k) for m in (MIN_BITS, 1 << 16, MAX_BITS) for k in (3, 7)]
+    df = spark.createDataFrame(
+        [(v,) for v in vals], T.StructType([T.StructField(col, dtype)])
+    )
+    rows = df.select(
+        *[F.array(*_position_exprs(col, m, k)) for m, k in geoms]
+    ).collect()
+    for i, (m, k) in enumerate(geoms):
+        want = [list(r[i]) for r in rows]
+        assert probe_positions(col, dtype, vals, m, k) == want, (m, k)
+
+
+def test_unencodable_probe_string_keeps_every_segment(spark, tmp_path):
+    """A string with no UTF-8 form (a lone surrogate) is no value Spark
+    can hold: it neither raises nor prunes, by zone map or by bloom."""
+    from carbondata_spark import pruning
+    from carbondata_spark.store import CarbonStore
+
+    store = CarbonStore(spark, str(tmp_path))
+    df = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], "s string")
+    store.create_table("t", df.schema, sort_columns=["s"], properties={"bloom_columns": "s"})
+    store.load("t", df.filter("s < 'c'"))
+    store.load("t", df.filter("s >= 'c'"))
+    segs = store.valid_segments("t")
+    for op in ("=", "in", ">=", "<"):
+        kept = pruning.prune(segs, store.schema("t"), [("s", op, ["\ud800"])])
+        assert kept == segs, op
+
+
+def test_point_scan_plans_without_jobs(spark, bloom_store):
+    """Building a point lookup starts no Spark job: bloom positions are
+    hashed on the driver, and the segments' parquet schemas recorded at
+    an earlier read are reused. The lookup runs one job, its collect."""
+    store, orders = bloom_store
+    store.table("orders_r").count()
+    keys = [
+        r.o_orderkey
+        for r in orders.orderBy(F.desc("o_orderkey")).select("o_orderkey").limit(3).collect()
+    ]
+    with count_jobs(spark) as plan:
+        df = store.scan("orders_r", column="o_orderkey", isin=keys)
+    with count_jobs(spark) as run:
+        got = sorted(r.o_orderkey for r in df.collect())
+    assert (plan.n, run.n) == (0, 1)
+    assert got == sorted(keys)
+
+
+def test_bloom_pruned_delete_runs_no_jobs(spark, tmp_path):
+    """A DELETE whose key every segment's bloom rules out is decided on
+    the driver: no Spark job, no rows deleted."""
+    from carbondata_spark.store import CarbonStore
+
+    store = CarbonStore(spark, str(tmp_path))
+    df = spark.range(0, 400, 2).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    store.create_table("t", df.schema, properties={"bloom_columns": "k"})
+    store.load("t", df.filter("k % 4 = 0"))
+    store.load("t", df.filter("k % 4 = 2"))
+    before = store.show_segments("t")
+    with count_jobs(spark) as c:
+        n = store.delete_rows("t", "k = 201")  # absent; both blooms miss it
+    assert (n, c.n) == (0, 0)
+    assert store.show_segments("t") == before

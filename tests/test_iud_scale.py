@@ -26,9 +26,7 @@ from tests._jobcount import count_jobs
 
 def _prune_for(store, sources, predicate, table="t"):
     """The mutation candidates ``delete_rows``/``update_rows`` keep."""
-    return prune(
-        store.spark, sources, store.schema(table), sql_prunable_conjuncts(predicate)
-    )
+    return prune(sources, store.schema(table), sql_prunable_conjuncts(predicate))
 
 
 @pytest.fixture()

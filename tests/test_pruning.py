@@ -17,6 +17,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from carbondata_spark import pruning
 from carbondata_spark.store import CarbonStore
@@ -79,6 +80,33 @@ def test_point_scan_string_literal_on_bloom_bigint(spark, tmp_path):
     want = store.table("b").filter(F.col("k") == F.lit("5"))
     want = [tuple(r) for r in want.collect()]
     assert got == want == [(5, 10)]
+
+
+def test_collated_string_column_is_not_pruned(spark, tmp_path):
+    """Spark compares a UTF8_LCASE column by its collation; the stats hold
+    binary order and the blooms binary hashes, so neither may prune it.
+    The last segment's binary [min, max] is ['Z', 'a']: a source key 'z'
+    matches its 'Z' but falls outside that range."""
+    schema = T.StructType(
+        [T.StructField("s", T.StringType("UTF8_LCASE")), T.StructField("v", T.LongType())]
+    )
+    store = CarbonStore(spark, str(tmp_path))
+    store.create_table("t", schema, sort_columns=["s"], properties={"bloom_columns": "s"})
+    for rows in ([("b", 1), ("c", 2)], [("x", 3), ("y", 4)], [("Z", 5), ("a", 6)]):
+        store.load("t", spark.createDataFrame(rows, schema))
+    s, t = F.col("s"), store.table("t")
+    scans = [
+        store.scan("t", column="s", eq="B"),
+        store.scan("t", column="s", ge="A", le="C"),
+        store.scan("t", column="s", isin=["Y", "q"]),
+    ]
+    want = _counts([t.filter(s == "B"), t.filter((s >= "A") & (s <= "C")), t.filter(s.isin("Y", "q"))])
+    assert _counts(scans) == want == [1, 3, 1]
+    assert store.delete_rows("t", "s = 'B'") == 1
+    got = store.merge_rows("t", spark.createDataFrame([("z", 50)], schema), "s")
+    assert got == {"updated": 1, "inserted": 0}
+    rows = sorted((r.s, r.v) for r in store.table("t").collect())
+    assert rows == [("Z", 50), ("a", 6), ("c", 2), ("x", 3), ("y", 4)]
 
 
 # ---------------------------------------------------------------------------
@@ -184,7 +212,7 @@ def test_timezone_mutation_candidates_keep_every_match(tz_store):
     segs = store.valid_segments("t")
     for p, want in zip(preds, matched):
         kept = pruning.prune(
-            store.spark, segs, store.schema("t"), pruning.sql_prunable_conjuncts(p)
+            segs, store.schema("t"), pruning.sql_prunable_conjuncts(p)
         )
         assert want <= {e.segment_id for e in kept}, p
 

@@ -120,6 +120,82 @@ def test_schema_evolution(store, spark):
         store.alter_drop_columns("t", ["nope"])
 
 
+def test_recorded_segment_schema_follows_the_table(store, spark):
+    """Reads reuse the parquet schema recorded for a committed segment.
+    A table dropped and created again at the same path, ALTER ADD and
+    ALTER DROP over recorded segments, and a partitioned table must all
+    still read with the current columns and types."""
+    df = spark.range(4).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v"))
+    store.create_table("t", df.schema, sort_columns=["k"])
+    store.load("t", df)
+    assert store.table("t").count() == 4
+    store.drop_table("t")
+    df = spark.range(4).select(F.col("id").alias("k"), (F.col("id") * 10.0).alias("v"))
+    store.create_table("t", df.schema, sort_columns=["k"])
+    store.load("t", df)
+    for frame in (store.table("t"), store.scan("t", column="k", ge=1)):
+        assert frame.schema["v"].dataType == T.DoubleType()
+    assert sorted(r.v for r in store.scan("t", column="k", ge=1).collect()) == [10.0, 20.0, 30.0]
+
+    store.load("t", df.withColumn("k", F.col("k") + 4))
+    assert store.table("t").count() == 8
+    store.alter_add_columns("t", [T.StructField("w", T.IntegerType())], defaults={"w": 7})
+    store.load("t", df.withColumn("k", F.col("k") + 8).withColumn("w", F.lit(1)))
+    got = sorted(tuple(r) for r in store.scan("t", column="k", ge=3, le=8).collect())
+    assert got == [(3, 30.0, 7), (4, 0.0, 7), (5, 10.0, 7), (6, 20.0, 7), (7, 30.0, 7), (8, 0.0, 1)]
+    store.alter_drop_columns("t", ["v"])
+    for frame in (store.table("t"), store.scan("t", column="k", ge=3, le=8)):
+        assert frame.columns == ["k", "w"]
+    assert sorted(tuple(r) for r in store.table("t").collect())[3:5] == [(3, 7), (4, 7)]
+
+    pdf = spark.range(6).select(F.col("id").alias("k"), (F.col("id") % 2).cast("int").alias("p"))
+    store.create_table("p", pdf.schema, sort_columns=["k"], partition_columns=["p"])
+    store.load("p", pdf.filter("k < 3"))
+    store.load("p", pdf.filter("k >= 3"))
+    for _ in range(2):
+        frame = store.scan("p", column="k", ge=2)
+        assert frame.schema["p"].dataType == T.IntegerType()
+        assert sorted(tuple(r) for r in frame.collect()) == [(2, 0), (3, 1), (4, 0), (5, 1)]
+
+
+def test_segment_schema_record_stays_bounded_under_threads(store, spark, monkeypatch):
+    """Concurrent reads of segment subsets, with a record too small for
+    them, keep evicting and re-recording: every read still succeeds and
+    the record never grows past its cap."""
+    import sys
+    import threading
+
+    from carbondata_spark import store as store_mod
+
+    monkeypatch.setattr(store_mod, "_SEGMENT_SCHEMAS", {})
+    monkeypatch.setattr(store_mod, "_SEGMENT_SCHEMAS_CAP", 2)
+    store.create_table("t", SCHEMA)
+    for i in range(4):
+        store.load("t", make_df(spark, n=5, offset=5 * i))
+    errors: list[BaseException] = []
+
+    def reads(sid: int) -> None:
+        try:
+            for _ in range(4):
+                assert store.table("t", segment_ids=[sid]).columns == SCHEMA.names
+                assert len(store_mod._SEGMENT_SCHEMAS) <= 2
+        except BaseException as e:
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reads, args=(i % 4,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+
+
 def test_segment_pruning_reads_only_valid_dirs(store, spark):
     """Deleted segments must not be scanned at all (manifest-level pruning,
     the rebuild's CarbonInputFormat.getSplits segment filter)."""
