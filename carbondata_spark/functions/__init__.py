@@ -227,10 +227,11 @@ def exact_money_summary(
 
 # operator label -> its most recent persisted intermediate. Bounds the
 # cache leak of operators that persist (tfidf/unigram-nll tf frames,
-# minhash signatures) to ONE frame per operator per app: re-invoking the
-# operator releases the previous invocation's blocks, which otherwise
-# accumulate for the application lifetime (a ~100-query driver sweep
-# would pin every historical tf frame until app exit).
+# n-gram shingle frequencies, winnowing rows) to ONE frame per operator
+# per app: re-invoking the operator releases the previous invocation's
+# blocks, which otherwise accumulate for the application lifetime (a
+# ~100-query registry sweep would pin every historical tf frame until
+# app exit).
 _PERSISTED: dict[str, DataFrame] = {}
 
 

@@ -284,18 +284,15 @@ def minhash_lsh_pairs(
     persist/recompute of the index that the join formulation needed.
 
     The carried set holds 8-byte ``xxhash64(shingle)`` keys, not the gram
-    strings (r19, guide §2.3 payload slimming): the signature aggregate's
-    shuffle and the verify join move fixed-width longs instead of ~20+
-    byte strings (~2x fewer shuffled bytes, cheaper sort/intersect), and
-    the hash is computed map-side next to the minhash md5s. Set
-    intersections over the hashes equal the gram-set intersections
-    unless two distinct grams of a compared pair collide in 64 bits
-    (P ~ u^2/2^65 for u distinct grams/pair — vanishing at any real u);
-    the md5 banding itself is untouched, so candidate generation stays
-    bit-reproducible in the oracle.
+    strings: the signature aggregate's shuffle and the verify join move
+    fixed-width longs instead of ~20+ byte strings (~2x fewer shuffled
+    bytes, cheaper sort/intersect), and the hash is computed map-side
+    next to the minhash md5s. Set intersections over the hashes equal
+    the gram-set intersections unless two distinct grams of a compared
+    pair collide in 64 bits (P ~ u^2/2^65 for u distinct grams/pair —
+    vanishing at any real u); the md5 banding itself is untouched, so
+    candidate generation stays bit-reproducible in the oracle.
     """
-    from carbondata_spark.functions import repersist
-
     # distinct=False: minhash minima are duplicate-insensitive and the
     # shingle set dedups inside collect_set, so the (doc, shingle)
     # distinct would be a second full shuffle of the exploded token
@@ -303,18 +300,23 @@ def minhash_lsh_pairs(
     sh = shingles_df(df, id_col, text_col, n, distinct=False).withColumn(
         "hs", F.xxhash64("s")
     )
-    # sig feeds band explosion AND both sides of the verification join —
-    # persist the compact per-doc row (8 hex minima + hashed-shingle
-    # array) so the explode/aggregate over the corpus runs exactly once.
+    # sig feeds both band sides AND both verify sides. An eager local
+    # checkpoint materializes the compact per-doc row (8 hex minima +
+    # hashed-shingle array) once, at call time, and the four consumers
+    # read a LogicalRDD of known size. Left lazy, column pruning would
+    # give the band and verify consumers different aggregates, so the
+    # corpus explode would run twice; persisted, each consumer would
+    # read the cache through its own AQE query stage, one job each.
     # At 100 TB, materialize it as a store table instead (same lifecycle
     # as the IVF assignment table).
-    sig = repersist(
-        f"minhash_sig:{hash_fn}",
+    sig = (
         _minhash_from_shingles(
             sh,
             extra_aggs=[F.sort_array(F.collect_set("hs")).alias("ss")],
             hash_fn=hash_fn,
-        ).withColumn("c", F.size("ss")),
+        )
+        .withColumn("c", F.size("ss"))
+        .localCheckpoint(eager=True)
     )
     n_bands = MINHASH_K // 2
     bkeys = [
@@ -388,76 +390,83 @@ def near_dup_groups(
     cluster, keep one representative. This computes connected components
     by iterative min-label propagation over the (small) pair graph:
     label(v) ← min(label(v), min over neighbors(label(u))), iterate to
-    fixpoint. group_id = min doc_id of the component.
+    fixpoint. group_id = min doc_id of the component. Only ids present in
+    ``docs`` are graph nodes: a pair naming an id outside ``docs`` is
+    dropped, so it neither appears in the output nor links two groups.
 
-    Scale notes: iterations are groupBy-shuffles keyed on doc_id; the
-    edge set is the LSH output (orders of magnitude smaller than the
-    corpus), and each iteration halves the longest chain (min-label
-    gossip), so convergence is ~log(diameter) rounds. Each iteration
-    ``localCheckpoint``s the label frame: lineage is truncated (no
-    exponential plan growth over rounds) and the previous iteration's
-    blocks are released, so memory stays O(|labels|) however many rounds
-    run. The per-iteration convergence check rides the checkpoint as an
-    ``observe()`` metric (r19): the changed-label count fires while the
-    eager checkpoint materializes, so each round is ONE action instead
-    of two (checkpoint + a separate count()), and the checkpoint itself
-    carries only (v, label) — the old-label column is consumed by the
-    metric below the projection.
+    Scale notes:
+
+    - ``pairs`` is evaluated ONCE. Both edge directions come from one
+      explode, restricted to doc ids, distinct'd and ``localCheckpoint``ed,
+      so no round re-runs the pair pipeline behind it.
+    - Only edge endpoints carry a label through the rounds. The edge set
+      is the LSH output, orders of magnitude smaller than the corpus, so
+      a round never touches the corpus; every other doc is its own group
+      and joins back once at the end.
+    - Labels start from the closed neighbourhood, ``least(v, min(u))`` —
+      what a first propagation round would compute — so a graph of stars
+      whose centres hold the component minimum (every 2-node component
+      included) needs only the confirming round.
+    - A label moves one hop per round, so the number of rounds grows with
+      the component diameter. Up to ``max_iters + 1`` rounds run; a graph
+      still changing after them raises instead of returning partially
+      propagated labels.
+    - Each round is one aggregate keyed on doc id over the offers of the
+      neighbours and the node's own label, ``localCheckpoint``ed: lineage
+      is truncated (no plan growth over rounds) and the previous round's
+      blocks are released. The convergence check rides the checkpoint as
+      an ``observe()`` metric, so each round is ONE action.
     """
     from pyspark.sql import Observation
 
-    nodes = docs.select(F.col(id_col).alias("v")).distinct()
-    edges = (
-        pairs.select(F.col("id_a").alias("v"), F.col("id_b").alias("u"))
-        .union(pairs.select(F.col("id_b").alias("v"), F.col("id_a").alias("u")))
-        .distinct()
+    ids = docs.select(F.col(id_col).alias("v"))
+    id_type = ids.schema["v"].dataType
+    both_ways = F.array(
+        F.struct(F.col("id_a").alias("v"), F.col("id_b").alias("u")),
+        F.struct(F.col("id_b").alias("v"), F.col("id_a").alias("u")),
     )
-    labels = nodes.select("v", F.col("v").alias("label"))
+    edges = (
+        pairs.select(F.explode(both_ways).alias("e"))
+        .select("e.v", "e.u")
+        .join(ids, "v", "left_semi")
+        .join(ids.select(F.col("v").alias("u")), "u", "left_semi")
+        # lossless: after the semi-joins both endpoints equal a doc id
+        .select(F.col("v").cast(id_type).alias("v"), F.col("u").cast(id_type).alias("u"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = edges.groupBy("v").agg(F.least(F.col("v"), F.min("u")).alias("label"))
     changed = 0
     # max_iters + 1: a graph that converges in exactly max_iters
     # propagation rounds still needs one confirming pass to observe
     # changed == 0 — without it a fully-correct result would be rejected
     for _ in range(max_iters + 1):
-        neighbor_min = (
-            edges.join(labels, edges.u == labels.v)
-            .groupBy(edges.v.alias("nv"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # localCheckpoint (eager): materializes this round's labels,
-        # truncates the lineage so round N's plan does not embed rounds
-        # 1..N-1, and lets the previous round's shuffle blocks be dropped.
-        # The changed-label count fires as an observe() metric during the
-        # materialization — no second action per round.
+        offers = edges.join(
+            labels.select(F.col("v").alias("u"), F.col("label").alias("offer")), "u"
+        ).select("v", "offer", F.lit(None).cast(id_type).alias("own"))
+        own = labels.select("v", F.col("label").alias("offer"), F.col("label").alias("own"))
         obs = Observation()
         labels = (
-            labels.join(neighbor_min, labels.v == F.col("nv"), "left")
-            .select(
-                "v",
-                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias(
-                    "new_label"
-                ),
-                F.col("label").alias("old_label"),
-            )
-            .observe(
-                obs,
-                F.count(
-                    F.when(F.col("new_label") != F.col("old_label"), 1)
-                ).alias("changed"),
-            )
-            .select("v", F.col("new_label").alias("label"))
+            offers.unionByName(own)
+            .groupBy("v")
+            .agg(F.min("offer").alias("label"), F.min("own").alias("old"))
+            .observe(obs, F.count(F.when(F.col("label") != F.col("old"), 1)).alias("changed"))
+            .select("v", "label")
         ).localCheckpoint(eager=True)
         changed = int(obs.get["changed"])
         if changed == 0:
             break
     if changed != 0:
-        # Never silently return partially-propagated labels: a 100-TB
-        # chain longer than 2^max_iters would otherwise split one content
-        # cluster into several with no signal (r3 audit item).
+        # Never silently return partially-propagated labels: a component
+        # whose diameter outgrows the rounds would otherwise split one
+        # content cluster into several with no signal.
         raise RuntimeError(
             f"near_dup_groups did not converge in {max_iters + 1} iterations "
             f"({changed} labels still changing); raise max_iters"
         )
-    return labels.select(F.col("v").alias(id_col), F.col("label").alias("group_id"))
+    return ids.distinct().join(labels, "v", "left").select(
+        F.col("v").alias(id_col), F.coalesce(F.col("label"), F.col("v")).alias("group_id")
+    )
 
 
 def dedup_near(

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from carbondata_spark.functions import dround, repersist
+from carbondata_spark.functions import dround
 from carbondata_spark.operators.dedup import (
     MINHASH_K,
     _minhash_from_shingles,
@@ -52,16 +52,17 @@ def cross_corpus_near_dups(
     the boundary — new bands join reference bands, never new×new or
     ref×ref. Verification: shingle-set Jaccard in-row (array_intersect
     on the signature's carried set of 8-byte xxhash64 shingle keys —
-    the same guide-§2.3 payload slimming as ``minhash_lsh_pairs``; equal
-    to the gram-set Jaccard absent a 64-bit collision inside a compared
-    pair). Election: one max_by aggregate per new doc (map-side
-    combining), no window.
+    the same payload slimming as ``minhash_lsh_pairs``; equal to the
+    gram-set Jaccard absent a 64-bit collision inside a compared pair).
+    Election: one max_by aggregate per new doc (map-side combining), no
+    window.
     """
     sh = shingles_df(df, id_col, text_col, n, distinct=False).withColumn(
         "hs", F.xxhash64("s")
     )
-    sig = repersist(
-        "xcorpus_sig",
+    # sig feeds both band sides and both verify sides: one eager local
+    # checkpoint computes it once (see ``minhash_lsh_pairs``).
+    sig = (
         _minhash_from_shingles(
             sh, extra_aggs=[F.sort_array(F.collect_set("hs")).alias("ss")]
         )
@@ -69,7 +70,8 @@ def cross_corpus_near_dups(
         .join(
             df.select(F.col(id_col).alias("doc_id"), is_reference.alias("is_ref")),
             "doc_id",
-        ),
+        )
+        .localCheckpoint(eager=True)
     )
     bands = F.array(
         *[

@@ -5,6 +5,8 @@ synthesized duplicates, multimodal plumbing shape."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -298,6 +300,100 @@ def test_near_dup_groups_on_real_lsh_pairs(spark, docs):
         .join(groups.withColumnRenamed("doc_id", "id_b").withColumnRenamed("group_id", "gb"), "id_b")
     )
     assert joined.filter("ga != gb").count() == 0
+
+
+def test_near_dup_groups_ignores_ids_outside_docs(spark):
+    """Only ids in ``docs`` are graph nodes: a pair naming an absent id
+    neither puts that id in the output nor links the docs it touches."""
+    from carbondata_spark.operators.dedup import near_dup_groups
+
+    docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
+    pairs = spark.createDataFrame([(1, 999), (999, 2), (3, 4)], "id_a long, id_b long")
+    groups = {r["doc_id"]: r["group_id"] for r in near_dup_groups(docs, pairs).collect()}
+    assert groups == {0: 0, 1: 1, 2: 2, 3: 3, 4: 3, 5: 5}
+
+
+def _union_find_groups(doc_ids, pairs):
+    """Components, in plain Python, over the pairs whose endpoints are
+    both doc ids; group id = the component's minimum doc id."""
+    parent = {v: v for v in doc_ids}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in doc_ids}
+
+
+@settings(max_examples=12, deadline=None)
+@given(data=st.data())
+def test_near_dup_groups_equal_union_find(spark, data):
+    """Random graphs of up to 30 nodes, with duplicate, reversed and
+    self pairs and ids outside ``docs``: the groups equal a plain-Python
+    union-find restricted to doc ids."""
+    from carbondata_spark.operators.dedup import near_dup_groups
+
+    doc_ids = sorted(data.draw(st.sets(st.integers(0, 29), max_size=30)))
+    node = st.integers(0, 34)  # 30..34 are never docs
+    pairs = data.draw(st.lists(st.tuples(node, node), max_size=45))
+    if pairs:
+        for a, b in data.draw(st.lists(st.sampled_from(pairs), max_size=5)):
+            pairs += [(a, b), (b, a)]
+    docs = spark.createDataFrame([(v,) for v in doc_ids], "doc_id long")
+    pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {r["doc_id"]: r["group_id"] for r in near_dup_groups(docs, pdf).collect()}
+    assert got == _union_find_groups(doc_ids, pairs)
+
+
+def test_near_dup_groups_evaluates_pairs_once(spark):
+    """The pair input, usually a whole LSH pipeline, is read once per
+    call. A design that re-reads it for both edge directions in every
+    propagation round read 48 rows here: 12 pairs, 2 directions, 2 rounds."""
+    from carbondata_spark.operators.dedup import near_dup_groups
+
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def tally(batches):
+        for b in batches:
+            rows_read.add(len(b))
+            yield b
+
+    edges = [(i, i + 1) for i in range(0, 24, 2)]  # 12 two-node components
+    docs = spark.createDataFrame([(i,) for i in range(24)], "doc_id long")
+    schema = "id_a long, id_b long"
+    pairs = spark.createDataFrame(edges, schema).mapInPandas(tally, schema)
+    groups = {r["doc_id"]: r["group_id"] for r in near_dup_groups(docs, pairs).collect()}
+    assert groups == {i: i - i % 2 for i in range(24)}
+    assert rows_read.value == len(edges)
+
+
+def test_minhash_pipelines_job_counts(spark, sf_dir):
+    """Build + collect of the registered MinHash rows on the test corpus.
+    The signature frame is checkpointed once instead of read through one
+    cache stage per consumer, and the label propagation reads its edges
+    from one checkpoint instead of re-running the LSH pipeline in every
+    round. With a persisted signature frame and pairs re-read every
+    round, the same calls ran 10 jobs (``p_dedup_minhash_lsh``) and 37
+    (``p_dedup_groups``)."""
+    from carbondata_spark.queries import registry
+    from tests._jobcount import count_jobs
+
+    reg = registry()
+    counts = {}
+    for name in ("p_dedup_minhash_lsh", "p_dedup_groups"):
+        reg[name].fn(spark, sf_dir).collect()  # warm table resolution
+        with count_jobs(spark) as c:
+            reg[name].fn(spark, sf_dir).collect()
+        counts[name] = c.n
+    # bounds, not equalities: when another test has cached the documents
+    # table, the cached scan changes the groups plan by one job (18, not 17)
+    assert counts["p_dedup_minhash_lsh"] <= 6 and counts["p_dedup_groups"] <= 18, counts
 
 
 def test_multimodal_to_similarity_pipeline(spark, docs):
