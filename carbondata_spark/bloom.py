@@ -25,18 +25,45 @@ Design constraints, in order:
   and ``tests/test_bloom.py`` pins their parity for every bloomable
   type, the integer extremes, pre-1970 dates, empty, long and non-ASCII
   strings, and every filter geometry.
-* **Bounded driver state.** The bitset is built from
-  ``collect_set(position)`` — its size is min(k·ndv, m) ≤ m bits
-  (2^23 max = 1 MiB), INDEPENDENT of row count: the same bounded-
-  metadata class as the parquet footer min/max the zone maps read.
-  This module is the documented `.collect()` allowlist entry in
-  tests/test_antipatterns.py.
+* **One pass, no inference.** ``build_blooms`` fills the blooms of any
+  number of new segments in ONE ``groupBy(segment)`` aggregation:
+  ``approx_count_distinct`` of each bloom column (which sizes m) and the
+  ``collect_set`` of its k positions, side by side. The positions cannot
+  wait for m, so they are taken modulo a *fold modulus* M: a power of
+  two of at least 2·BITS_PER_DISTINCT·rows, from the footer row count
+  the store already holds, capped at MAX_BITS. The driver then sizes
+  m = ``_size_bits(ndv)`` and sets bit p mod m. m is a power of two no
+  larger than M, so it divides M and (x mod M) mod m == x mod m: the
+  bitset is bit-identical to an m-bit build. Only an HLL estimate above
+  2·rows makes m exceed M; m is then clamped to M. The store reads the
+  new segments with the table schema, so no schema-inference job runs.
+* **Bounded driver state.** A segment of at most
+  MAX_BITS // BITS_PER_DISTINCT rows cannot saturate, and its
+  ``collect_set`` holds at most min(k·ndv, M) ≤ MAX_BITS positions
+  (2^23; the bitset is at most 1 MiB): the same bounded-metadata class
+  as the parquet footer min/max the zone maps read. A larger
+  segment first gets an ``approx_count_distinct`` pass; its fold
+  modulus is then m itself, and a column that saturates collects no
+  positions at all. This module is the documented `.collect()`
+  allowlist entry in tests/test_antipatterns.py.
 * **Honest saturation.** m is sized from a measured
   approx_count_distinct (~10 bits/distinct ≈ 1% FPR at k=7). When a
   segment's cardinality would need more than MAX_BITS, NO bloom is
   stored — the segment is simply never pruned (correct, just not
   faster), rather than storing a saturated filter that prunes nothing
-  while looking like it could.
+  while looking like it could. A 0-row segment stores the all-zero
+  MIN_BITS bitset, which prunes every probe.
+* **Carried, not rebuilt.** A rewrite that leaves the bloom columns'
+  values alone keeps its source segment's entries instead of reading
+  its data again (``store.CarbonStore._rewrite``). An UPDATE that
+  assigns no bloom column, and a MERGE whose update columns include no
+  bloom column, keep the same multiset of values, so the carried entry
+  is the one a rebuild would give. A DELETE keeps a subset of the
+  rows, so the carried entry is a superset of a rebuild: it never
+  prunes a segment that holds a key, and the deleted keys stay false
+  positives until compaction builds the filter afresh. Only a MERGE's
+  insert segment, rewrites that assign a bloom column and rewrites of a
+  source without an entry for every bloom column get a fresh build.
 """
 
 from __future__ import annotations
@@ -58,11 +85,11 @@ MAX_BITS = 1 << 23  # 1 MiB bitset per (segment, column) cap
 def _position_exprs(col: str, m, k: int = K_HASHES):
     """The k bit positions of a value, as Spark Column expressions —
     Kirsch-Mitzenmacher double hashing over two independent xxhash64
-    streams (the second salted with the column name). Shared verbatim by
-    the load-side bit setter and the grouped multi-segment collector;
-    ``probe_positions`` is its driver-side twin. ``m`` may be an int
-    literal or a Column (the grouped collector maps each row's segment
-    tag to that segment's bitset size — same modular math either way)."""
+    streams (the second salted with the column name), used by
+    ``build_blooms``; ``probe_positions`` is its driver-side twin. ``m``
+    may be an int literal or a Column (``build_blooms`` maps each row's
+    segment tag to that segment's fold modulus — same modular math
+    either way)."""
     m_col = F.lit(m) if isinstance(m, int) else m
     h1 = F.pmod(F.xxhash64(F.col(col)), m_col)
     h2 = F.pmod(F.xxhash64(F.col(col), F.lit(col)), m_col)
@@ -85,124 +112,111 @@ def _size_bits(ndv: int) -> int | None:
     return m
 
 
-def compute_segment_blooms(df: DataFrame, cols: list[str]) -> dict[str, dict]:
-    """{col: {"m": bits, "k": hashes, "bits": base64 bitset}} for the
-    bloom columns present in ``df`` (one segment's data).
-
-    Two distributed jobs regardless of column count: an
-    approx_count_distinct probe to size each bitset, then one union of
-    per-column position frames aggregated by ``collect_set`` — the
-    partial aggregation state is capped at m positions per column per
-    task, so the shuffle and the driver result are both bounded by the
-    bitset size, never by the row count.
-    """
-    present = [c for c in cols if c in df.columns]
-    if not present:
-        return {}
-    ndv = df.agg(
-        *[F.approx_count_distinct(c).alias(c) for c in present]
-    ).collect()[0]
-    sized = [(c, _size_bits(ndv[c])) for c in present]
-    sized = [(c, m) for c, m in sized if m is not None]
-    if not sized:
-        return {}
-    frames = [
-        df.where(F.col(c).isNotNull()).select(
-            F.lit(c).alias("col"),
-            F.explode(F.array(*_position_exprs(c, m))).alias("pos"),
-        )
-        for c, m in sized
-    ]
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionAll(f)
-    rows = union.groupBy("col").agg(F.collect_set("pos").alias("ps")).collect()
-    positions = {r["col"]: r["ps"] for r in rows}
-    out: dict[str, dict] = {}
-    for c, m in sized:
-        ba = bytearray(m // 8)
-        for p in positions.get(c, []):
-            ba[p >> 3] |= 1 << (p & 7)
-        out[c] = {
-            "m": m,
-            "k": K_HASHES,
-            "bits": base64.b64encode(bytes(ba)).decode("ascii"),
-        }
-    return out
+def _fold_bits(rows: int) -> int:
+    """The fold modulus of a segment of ``rows`` rows: the smallest power
+    of two of at least 2·BITS_PER_DISTINCT·rows, within [MIN_BITS,
+    MAX_BITS]. Every ``_size_bits`` result for up to 2·rows distinct
+    values divides it."""
+    m = MIN_BITS
+    while m < 2 * BITS_PER_DISTINCT * rows and m < MAX_BITS:
+        m <<= 1
+    return m
 
 
-def compute_segment_blooms_grouped(
-    df: DataFrame, tag_col: str, cols: list[str]
+def _entry(m: int, positions) -> dict:
+    ba = bytearray(m // 8)
+    for p in positions:
+        p %= m
+        ba[p >> 3] |= 1 << (p & 7)
+    return {"m": m, "k": K_HASHES, "bits": base64.b64encode(bytes(ba)).decode("ascii")}
+
+
+def build_blooms(
+    df: DataFrame, tag_col: str, cols: list[str], rows: dict[int, int]
 ) -> dict[int, dict[str, dict]]:
-    """Per-(segment, column) blooms for a TAGGED multi-segment frame —
-    the batch companion of ``compute_segment_blooms`` for the r15
-    single-job rewrite writer (store._write_rewrites): a broad UPDATE or
-    MERGE on a bloom table produces many new segments at once, and
-    collecting their filters one segment at a time would be the last
-    O(#affected) job loop on that path.
+    """{tag: {col: {"m", "k", "bits"}}} for every tag in ``rows`` (tag ->
+    the segment's row count, from its footers): the blooms of the
+    segments whose rows ``df`` holds, each row tagged with its segment
+    in ``tag_col``. A (segment, column) that would saturate MAX_BITS
+    gets no entry; a 0-row segment gets the all-zero MIN_BITS bitset
+    without a read.
 
-    TWO distributed jobs total regardless of segment count: one grouped
-    approx_count_distinct sizes every (segment, column) bitset, then one
-    union of per-column position frames — each row's positions computed
-    with ITS segment's bitset size via a tag→m map column through the
-    SAME ``_position_exprs`` builder the single-segment path uses —
-    aggregated by (segment, column) ``collect_set``.
-    Driver state stays bounded by Σ min(k·ndv, m) bits, the same
-    metadata class as the single-segment path; a (segment, column)
-    whose cardinality would saturate MAX_BITS stores no bloom, exactly
-    like the single-segment sizing rule."""
-    present = [c for c in cols if c in df.columns]
-    if not present:
-        return {}
-    ndv_rows = df.groupBy(tag_col).agg(
-        *[F.approx_count_distinct(c).alias(c) for c in present]
-    ).collect()
-    out: dict[int, dict[str, dict]] = {int(r[tag_col]): {} for r in ndv_rows}
-    m_by: dict[int, dict[str, int]] = {}
-    for r in ndv_rows:
-        ms = {c: m for c in present if (m := _size_bits(r[c])) is not None}
-        if ms:
-            m_by[int(r[tag_col])] = ms
-    if not m_by:
+    One ``groupBy(tag_col)`` aggregation computes, per (segment,
+    column), ``approx_count_distinct`` and the ``collect_set`` of the k
+    positions taken modulo the segment's fold modulus; the driver then
+    sizes m and folds the positions into it (see the module docstring).
+    Segments too large to rule out saturation from their row count get
+    an ``approx_count_distinct`` pass first."""
+    out: dict[int, dict[str, dict]] = {t: {} for t in rows}
+    live = {t: _fold_bits(n) for t, n in rows.items() if n > 0}
+    for t in rows.keys() - live.keys():
+        out[t] = {c: _entry(MIN_BITS, []) for c in cols}
+    if not live or not cols:
         return out
-    frames = []
-    for c in present:
-        pairs = [x for t, ms in m_by.items() if c in ms for x in (t, ms[c])]
-        if not pairs:
-            continue
-        m_col = F.element_at(
+    # per column, tag -> modulus of its positions; a saturating
+    # (segment, column) has none and contributes no positions
+    fold = {c: dict(live) for c in cols}
+    big = [t for t in live if rows[t] > MAX_BITS // BITS_PER_DISTINCT]
+    if big:
+        for r in (
+            df.where(F.col(tag_col).isin(big))
+            .groupBy(tag_col)
+            .agg(*[F.approx_count_distinct(c).alias(c) for c in cols])
+            .collect()
+        ):
+            for c in cols:
+                m = _size_bits(r[c])
+                if m is None:
+                    del fold[c][int(r[tag_col])]
+                else:
+                    fold[c][int(r[tag_col])] = m
+    hashed = []
+    for i, c in enumerate(cols):
+        pairs = [x for t, m in fold[c].items() for x in (t, m)]
+        m_col = F.try_element_at(
             F.create_map(*[F.lit(v) for v in pairs]), F.col(tag_col)
-        )
-        frames.append(
-            df.where(F.col(c).isNotNull() & m_col.isNotNull()).select(
-                F.col(tag_col).cast("int").alias("_tag"),
-                F.lit(c).alias("col"),
-                F.explode(F.array(*_position_exprs(c, m_col))).alias("pos"),
+        ) if pairs else F.lit(None).cast("long")
+        # xxhash64 of NULL is the seed, not NULL: NULLs set no bits
+        hashed += [
+            F.struct(
+                F.lit(i).alias("i"),
+                F.lit(j).alias("j"),
+                F.when(F.col(c).isNotNull(), p).alias("p"),
             )
+            for j, p in enumerate(_position_exprs(c, m_col))
+        ]
+    e_name = "_e"
+    while e_name in (tag_col, *cols):
+        e_name = f"_{e_name}"
+    e = F.col(e_name)
+    # approx_count_distinct reads each value once, at its first position
+    # entry; the count is the one the plain column gives (NULLs skipped)
+    got = {
+        int(r[tag_col]): r
+        for r in df.select(tag_col, *cols, F.explode(F.array(*hashed)).alias(e_name))
+        .groupBy(tag_col)
+        .agg(
+            *[
+                F.approx_count_distinct(
+                    F.when((e["i"] == i) & (e["j"] == 0), F.col(c))
+                ).alias(f"_n{i}")
+                for i, c in enumerate(cols)
+            ],
+            *[
+                F.collect_set(F.when(e["i"] == i, e["p"])).alias(f"_p{i}")
+                for i in range(len(cols))
+            ],
         )
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionAll(f)
-    rows = union.groupBy("_tag", "col").agg(
-        F.collect_set("pos").alias("ps")
-    ).collect()
-    positions = {(int(r["_tag"]), r["col"]): r["ps"] for r in rows}
-    # iterate m_by, not the collected rows: a (segment, column) whose
-    # surviving rows are all NULL (e.g. after UPDATE ... SET c = NULL)
-    # contributes no position rows but must still store the all-zero
-    # bitset — bit-identical to the single-segment path's
-    # positions.get(c, []) default — so point probes on that column keep
-    # pruning the segment instead of always reading it
-    for t, ms in m_by.items():
-        for c, m in ms.items():
-            ba = bytearray(m // 8)
-            for p in positions.get((t, c), []):
-                ba[p >> 3] |= 1 << (p & 7)
-            out[t][c] = {
-                "m": m,
-                "k": K_HASHES,
-                "bits": base64.b64encode(bytes(ba)).decode("ascii"),
-            }
+        .collect()
+    }
+    for t in live:
+        for i, c in enumerate(cols):
+            m = _size_bits(got[t][f"_n{i}"]) if t in fold[c] else None
+            if m is not None:
+                # m divides the fold modulus, so the folded positions are
+                # the ones an m-bit build would set; HLL overshooting
+                # 2·rows is the only way m can exceed it
+                out[t][c] = _entry(min(m, fold[c][t]), got[t][f"_p{i}"])
     return out
 
 

@@ -32,6 +32,7 @@ commits are lock + atomic-rename, safe for concurrent loaders.
 
 from __future__ import annotations
 
+import contextlib
 import copy
 import functools
 import json
@@ -202,6 +203,29 @@ def _schema_of(meta: dict[str, Any]) -> T.StructType:
     rewrites the collation metadata of the dict it parses, so a second
     parse of the same dict fails: it parses a copy."""
     return T.StructType.fromJson(copy.deepcopy(meta["schema"]))
+
+
+def _bloom_columns(meta: dict[str, Any]) -> list[str]:
+    """The table's ``bloom_columns`` property as a list."""
+    return [
+        c.strip()
+        for c in meta.get("properties", {}).get("bloom_columns", "").split(",")
+        if c.strip()
+    ]
+
+
+@contextlib.contextmanager
+def _phase(spark: SparkSession, op: str, phase: str):
+    """Describe the Spark jobs started inside as ``carbon:<op>:<phase>``
+    (the UI's and the status store's job description), then restore the
+    caller's description. The job group is left alone."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"carbon:{op}:{phase}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def _file_stamp(path: str) -> tuple[int, int, int]:
@@ -545,11 +569,12 @@ class CarbonStore:
         w = writer.write.mode("overwrite")
         if part_cols:
             w = w.partitionBy(*part_cols)
-        w.parquet(seg_dir)
+        with _phase(self.spark, "load", "write"):
+            w.parquet(seg_dir)
         self._commit(
             table,
             [seg_id],
-            {seg_id: self._seal(seg_dir, meta)},
+            self._seal("load", meta, {seg_id: seg_dir}),
             overwrite=mode == "overwrite",
         )
 
@@ -661,35 +686,57 @@ class CarbonStore:
                         acc[c] = [min(acc[c][0], mn), max(acc[c][1], mx)]
         return {c: v for c, v in acc.items() if c not in unknown}
 
-    def _collect_segment_blooms(self, seg_dir: str, meta: dict) -> dict[str, dict]:
-        """Manifest bloom filters for the table's ``bloom_columns``
-        property, computed over the just-written segment (a column-pruned
-        parquet read — bounded metadata, like the zone-map footers; see
-        bloom.py for the hash-parity and saturation design)."""
-        from carbondata_spark.bloom import compute_segment_blooms
-
-        cols = [
-            c.strip()
-            for c in meta.get("properties", {}).get("bloom_columns", "").split(",")
-            if c.strip()
-        ]
-        if not cols:
-            return {}
-        df = self.spark.read.parquet(seg_dir)
-        return compute_segment_blooms(df, cols)
-
-    def _seal(self, seg_dir: str, meta: dict) -> tuple[int, dict, dict]:
-        """(rows, zone-map stats, blooms) of a just-written segment dir:
-        rows and stats from ONE footer read (metadata only, no Spark
-        job), blooms as ``_collect_segment_blooms``."""
+    def _seal(
+        self,
+        op: str,
+        meta: dict,
+        seg_dirs: dict[int, str],
+        carried: dict[int, dict] | None = None,
+    ) -> dict[int, tuple[int, dict, dict]]:
+        """{segment id: (rows, zone-map stats, blooms)} of just-written
+        segment dirs, the ``publish`` argument of ``_commit``. Rows and
+        stats come from one pooled footer read (metadata only, no Spark
+        job). Blooms are taken from ``carried`` (segment id -> entries)
+        where given; the rest are built together in one aggregation
+        (``bloom.build_blooms``) over the segments read with the table
+        schema, so no schema inference runs and a 0-row segment is not
+        read at all."""
         part_cols = meta.get("partition_columns", [])
         sort_cols = [c for c in meta["sort_columns"] if c not in part_cols]
-        metas = self._footer_metadata(seg_dir)
-        return (
-            self._segment_rows_from_footers(seg_dir, metas),
-            self._collect_segment_stats(seg_dir, sort_cols, metas),
-            self._collect_segment_blooms(seg_dir, meta),
-        )
+        metas = self._footer_metadata_many(seg_dirs)
+        rows = {
+            sid: self._segment_rows_from_footers(d, metas[sid])
+            for sid, d in seg_dirs.items()
+        }
+        blooms = dict(carried or {})
+        cols = _bloom_columns(meta)
+        fresh = [sid for sid in seg_dirs if sid not in blooms]
+        if cols and fresh:
+            from carbondata_spark.bloom import build_blooms
+
+            schema = _schema_of(meta)
+            tag = _fresh_name("_cd_seg", schema.fieldNames())
+            frame = functools.reduce(
+                DataFrame.unionByName,
+                [
+                    self.spark.read.schema(schema)
+                    .parquet(seg_dirs[sid])
+                    .withColumn(tag, F.lit(sid).cast("int"))
+                    for sid in fresh
+                ],
+            )
+            with _phase(self.spark, op, "bloom"):
+                blooms.update(
+                    build_blooms(frame, tag, cols, {sid: rows[sid] for sid in fresh})
+                )
+        return {
+            sid: (
+                rows[sid],
+                self._collect_segment_stats(d, sort_cols, metas[sid]),
+                blooms.get(sid, {}),
+            )
+            for sid, d in seg_dirs.items()
+        }
 
     def scan(
         self,
@@ -948,6 +995,9 @@ class CarbonStore:
             segs = self.valid_segments(table)
         if segment_ids is not None:
             segs = [e for e in segs if e.segment_id in segment_ids]
+        # a 0-row segment adds no rows, and its directory may hold no
+        # parquet file to read a schema from (an empty partitioned write)
+        segs = [e for e in segs if e.rows > 0]
         if not segs:
             if _tag_col is not None:
                 target = T.StructType(
@@ -1179,7 +1229,7 @@ class CarbonStore:
         meta: dict,
         total_rows: int,
         optional_ids: set[int] | None = None,
-    ) -> dict[int, tuple[int, dict, dict]]:
+    ) -> dict[int, str]:
         """Write EVERY rewrite segment of a row-level mutation in ONE
         distributed Spark job (the reference's restructure/merge paths are
         likewise single distributed jobs — CarbonMergerRDD.scala:31-234),
@@ -1194,9 +1244,8 @@ class CarbonStore:
         writes once with ``partitionBy(rw_col)`` into a staging directory;
         each ``rw_col=<id>`` child is then promoted to its segment dir (a
         driver-side metadata rename, the same commit idiom as an HDFS
-        output-committer move). Row counts/zone maps come from parquet
-        footers — no read-back jobs. Blooms (opt-in tables only) come from
-        two bounded jobs over all new segments together.
+        output-committer move). Returns {segment id: its promoted dir};
+        ``_seal`` then reads rows, zone maps and blooms.
 
         ``optional_ids``: targets ALLOWED to come out empty (e.g. a MERGE
         insert segment when every source row matched) — they are skipped
@@ -1268,50 +1317,7 @@ class CarbonStore:
                 os.makedirs(os.path.dirname(seg_dir), exist_ok=True)
                 os.rename(src, seg_dir)
                 seg_dirs[new_id] = seg_dir
-            # rows + zone maps for ALL promoted segments from ONE flat
-            # footer pool (each footer read once, segments in parallel) —
-            # a serial per-segment walk would add a driver metadata term
-            # linear in the number of segments
-            metas_by_seg = self._footer_metadata_many(seg_dirs)
-            results: dict[int, tuple[int, dict, dict]] = {
-                new_id: (
-                    self._segment_rows_from_footers(d, metas_by_seg[new_id]),
-                    self._collect_segment_stats(
-                        d, sort_cols, metas_by_seg[new_id]
-                    ),
-                    {},
-                )
-                for new_id, d in seg_dirs.items()
-            }
-            # blooms (opt-in tables) for ALL new segments in TWO jobs,
-            # not two per segment: one tagged union of the promoted
-            # segment dirs through the grouped collector
-            bloom_cols = [
-                c.strip()
-                for c in meta.get("properties", {})
-                .get("bloom_columns", "")
-                .split(",")
-                if c.strip()
-            ]
-            if bloom_cols:
-                from carbondata_spark.bloom import compute_segment_blooms_grouped
-
-                # explicit schema: a schema-inference job per segment dir
-                # would reintroduce the O(#affected) job growth this path
-                # exists to remove (pinned in tests/test_iud_scale.py)
-                read_schema = _schema_of(meta)
-                tagged = None
-                for new_id in sorted(results):
-                    r = self.spark.read.schema(read_schema).parquet(
-                        self._segment_dir(table, new_id)
-                    ).withColumn(rw_col, F.lit(new_id).cast("int"))
-                    tagged = r if tagged is None else tagged.unionByName(r)
-                by_seg = compute_segment_blooms_grouped(tagged, rw_col, bloom_cols)
-                results = {
-                    nid: (rows, stats, by_seg.get(nid, {}))
-                    for nid, (rows, stats, _b) in results.items()
-                }
-            return results
+            return seg_dirs
         finally:
             cached.unpersist()
             shutil.rmtree(staging, ignore_errors=True)
@@ -1348,15 +1354,16 @@ class CarbonStore:
         )
         seg_dir = self._segment_dir(table, new_id)
         n_parts = partitions or max(1, sum(e.rows for e in segs) // 4_000_000)
-        self._write_clustered(merged, meta, seg_dir, n_parts)
+        with _phase(self.spark, "compact", "write"):
+            self._write_clustered(merged, meta, seg_dir, n_parts)
         # The merged segment is freshly range-sorted: recompute its zone
         # map and blooms so compaction IMPROVES prunability instead of
-        # silently losing it (a statless segment is kept by every scan).
+        # silently losing it (a statless segment is kept by every scan),
+        # and drops the false positives DELETEs left in carried blooms.
         # A source changed concurrently (DELETE LOAD, overwrite) aborts:
         # the merged segment would resurrect rows that change removed.
-        lost = self._commit(
-            table, [new_id], {new_id: self._seal(seg_dir, meta)}, set(old_ids)
-        )
+        sealed = self._seal("compact", meta, {new_id: seg_dir})
+        lost = self._commit(table, [new_id], sealed, set(old_ids))
         return None if lost else new_id
 
     # -- row-level DELETE / UPDATE (copy-on-write rewrite) -----------------
@@ -1371,6 +1378,10 @@ class CarbonStore:
 
         ``predicate``: a Column or a SQL expression string; rows where it
         evaluates TRUE are deleted (NULL keeps the row, like SQL DELETE).
+
+        Each rewrite keeps its source's bloom entries, which describe a
+        superset of its rows: no key it holds is ever pruned, and the
+        deleted keys stay false positives until compaction.
 
         The reference era predates row-level IUD (its DELETEs are
         whole-load: cubeSchema.scala:1678-1736); later Apache CarbonData
@@ -1389,6 +1400,8 @@ class CarbonStore:
         """Row-level UPDATE ... SET: matching rows get ``assignments``
         ({column: Column|SQL-expression-string}) applied; all segment
         rewrite/commit semantics as ``delete_rows``. Returns rows updated.
+        Rewrites keep their sources' bloom entries unless an assignment
+        targets a bloom column.
         Assignment columns must exist in the schema (raises otherwise —
         UPDATE never widens the schema; use alter_add_columns)."""
         if not assignments:
@@ -1431,13 +1444,15 @@ class CarbonStore:
         tagged = self.table(
             table, segment_ids=[e.segment_id for e in candidates], _tag_col=tag
         )
-        counts = {
-            row[0]: int(row[1])
-            for row in tagged.filter(pred)
-            .groupBy(tag)
-            .agg(F.count(F.lit(1)))
-            .collect()
-        }
+        op = "delete" if assignments is None else "update"
+        with _phase(self.spark, op, "detect"):
+            counts = {
+                row[0]: int(row[1])
+                for row in tagged.filter(pred)
+                .groupBy(tag)
+                .agg(F.count(F.lit(1)))
+                .collect()
+            }
         affected = [e for e in candidates if counts.get(e.segment_id, 0) > 0]
         if not affected:
             return 0
@@ -1472,9 +1487,10 @@ class CarbonStore:
             table,
             meta,
             sources,
-            "delete" if assignments is None else "update",
+            op,
             rows,
             retired=lambda: {e.segment_id for e in affected},
+            carry=not set(assignments or ()) & set(_bloom_columns(meta)),
         )
         return sum(counts.values())
 
@@ -1487,13 +1503,20 @@ class CarbonStore:
         rows,
         retired,
         insert_rows: int | None = None,
+        carry: bool = False,
     ) -> int:
         """The copy-on-write tail shared by DELETE, UPDATE and MERGE:
         reserve one rewrite segment per source segment — per-segment
         zone-map locality, never one global sort over their union — plus
         an insert segment when ``insert_rows`` (the expected insert row
         count) is given; write them all in ONE distributed job
-        (``_write_rewrites``); then ``_commit`` them in ONE swap.
+        (``_write_rewrites``); seal the ones the swap publishes
+        (``_seal``); then ``_commit`` them in ONE swap.
+
+        ``carry``: the rewrite leaves every bloom column's values alone,
+        or only removes rows. A rewrite whose source has a bloom for each
+        bloom column then keeps the source's entries (see bloom.py);
+        other segments get a fresh build.
 
         ``rows(frame, tag)`` returns the rows to write. Each carries in
         column ``tag`` the id of the source segment it replaces rows of,
@@ -1514,7 +1537,13 @@ class CarbonStore:
             origins.append({"op": "merge_insert"})
         reserved = self._reserve(table, origins, cols)
         new_of = dict(zip(tags, reserved))
-        written: dict[int, tuple[int, dict, dict]] = {}
+        bloom_cols = _bloom_columns(meta) if carry else []
+        carried = {
+            new_of[e.segment_id]: {c: e.blooms[c] for c in bloom_cols}
+            for e in sources
+            if bloom_cols and all(c in e.blooms for c in bloom_cols)
+        }
+        written: dict[int, str] = {}
         if reserved:
             tag = _fresh_name("_cd_seg", cols)
             rw = _fresh_name("_cd_rw", [*cols, tag])
@@ -1533,13 +1562,19 @@ class CarbonStore:
             # optional_ids only with an insert segment: wrappers of
             # _write_rewrites may take just its six positional arguments
             kw = {} if insert_rows is None else {"optional_ids": {new_of[_INSERT]}}
-            written = self._write_rewrites(table, out, rw, reserved, meta, total, **kw)
+            with _phase(self.spark, op, "write"):
+                written = self._write_rewrites(table, out, rw, reserved, meta, total, **kw)
         retire = retired()
-        publish = {
-            new_of[s]: written[new_of[s]]
-            for s in [*retire, _INSERT]
-            if new_of.get(s) in written
-        }
+        publish = self._seal(
+            op,
+            meta,
+            {
+                new_of[s]: written[new_of[s]]
+                for s in [*retire, _INSERT]
+                if new_of.get(s) in written
+            },
+            carried,
+        )
         lost = self._commit(table, reserved, publish, retire)
         if lost:
             what = "MERGE" if op == "merge" else "row rewrite"
@@ -1548,7 +1583,7 @@ class CarbonStore:
                 "concurrently; no rows were modified"
             )
         ins = new_of.get(_INSERT)
-        return written[ins][0] if ins in written else 0
+        return publish[ins][0] if ins in publish else 0
 
     # -- MERGE INTO (upsert) -----------------------------------------------
 
@@ -1585,7 +1620,8 @@ class CarbonStore:
            joined against the source a single time, into ONE rewrite
            segment PER candidate (``_write_rewrites``: the target id
            leads the range key, so each rewrite stays internally sorted
-           with fresh zone maps/blooms and per-segment locality — a
+           with fresh zone maps and per-segment locality, and keeps its
+           source's blooms unless ``update_cols`` holds a bloom column — a
            merge touching N segments never degenerates into one global
            sort over their union); match detection rides the same job as
            ``observe()`` metrics (matched-row count + the set of
@@ -1684,7 +1720,8 @@ class CarbonStore:
                 if col is not None:
                     bounds.append(k)
                     aggs += [F.min(col).alias(f"_mn_{k}"), F.max(col).alias(f"_mx_{k}")]
-        stat = src.agg(*aggs).collect()[0]
+        with _phase(self.spark, "merge", "detect"):
+            stat = src.agg(*aggs).collect()[0]
         if stat["_n"] == 0:
             return {"updated": 0, "inserted": 0}
         if stat["_nd"] < stat["_nn"]:
@@ -1782,6 +1819,7 @@ class CarbonStore:
             rows,
             retired=retired,
             insert_rows=int(stat["_n"]) if insert else None,
+            carry=not set(update_cols) & set(_bloom_columns(meta)),
         )
         updated = int(obs.get["_updated"] or 0) if targets else 0
         return {"updated": updated, "inserted": inserted}
@@ -1823,13 +1861,10 @@ class CarbonStore:
             kept = [f for f in schema.fields if f.name not in names]
             meta["schema"] = json.loads(T.StructType(kept).json())
             meta["sort_columns"] = [c for c in meta["sort_columns"] if c not in names]
-            bloom_cols = [
-                c.strip()
-                for c in meta.get("properties", {}).get("bloom_columns", "").split(",")
-                if c.strip() and c.strip() not in names
-            ]
             if meta.get("properties", {}).get("bloom_columns"):
-                meta["properties"]["bloom_columns"] = ",".join(bloom_cols)
+                meta["properties"]["bloom_columns"] = ",".join(
+                    c for c in _bloom_columns(meta) if c not in names
+                )
             meta["evolution"].append(
                 {"ts": time.time(), "added": [], "removed": list(names), "defaults": {}}
             )

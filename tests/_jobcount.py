@@ -24,6 +24,7 @@ escaped one measurement escapes both identically.
 
 from __future__ import annotations
 
+import collections
 import itertools
 
 _seq = itertools.count()
@@ -31,12 +32,15 @@ _seq = itertools.count()
 
 class count_jobs:
     """``with count_jobs(spark) as c: <measured call>`` → ``c.n`` is the
-    number of Spark jobs the measured call ran, immune to suite order."""
+    number of Spark jobs the measured call ran, immune to suite order;
+    ``c.by_description`` counts them per job description (the store
+    describes its jobs ``carbon:<op>:<phase>``)."""
 
     def __init__(self, spark):
         self._spark = spark
         self._group = f"jobcount-pin-{next(_seq)}"
         self.n: int | None = None
+        self.by_description: collections.Counter[str | None] = collections.Counter()
 
     def __enter__(self) -> "count_jobs":
         self._spark.sparkContext.setJobGroup(self._group, "job-count pin", False)
@@ -44,7 +48,13 @@ class count_jobs:
 
     def __exit__(self, *exc) -> None:
         sc = self._spark.sparkContext
-        self.n = len(sc.statusTracker().getJobIdsForGroup(self._group) or [])
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
+        ids = sc.statusTracker().getJobIdsForGroup(self._group) or []
+        self.n = len(ids)
+        status = sc._jsc.sc().statusStore()
+        for jid in ids:
+            desc = status.job(jid).description()
+            self.by_description[desc.get() if desc.isDefined() else None] += 1
         # detach: later session work must not accrue to the pin's group
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

@@ -381,3 +381,331 @@ def test_bloom_pruned_delete_runs_no_jobs(spark, tmp_path):
         n = store.delete_rows("t", "k = 201")  # absent; both blooms miss it
     assert (n, c.n) == (0, 0)
     assert store.show_segments("t") == before
+
+
+def _oracle_entry(col: str, dtype: T.DataType, values: list, m: int | None = None) -> dict:
+    """The bloom entry of ``values`` built on the driver from
+    ``probe_positions``: m sized from their exact distinct count unless
+    given, NULLs setting no bit."""
+    import base64
+
+    from carbondata_spark.bloom import K_HASHES, _size_bits, probe_positions
+
+    distinct = sorted({v for v in values if v is not None})
+    m = m or _size_bits(len(distinct))
+    bits = bytearray(m // 8)
+    for ps in probe_positions(col, dtype, distinct, m, K_HASHES):
+        for p in ps:
+            bits[p >> 3] |= 1 << (p & 7)
+    return {"m": m, "k": K_HASHES, "bits": base64.b64encode(bytes(bits)).decode("ascii")}
+
+
+def test_bloom_build_matches_oracle_one_tag_and_many(spark):
+    """One segment built alone (load, compaction) and the same segment
+    built among others (rewrites) give the entry the driver-side probe
+    hash implies, for a bigint and a string column together: a probe of
+    any loaded value finds its bits, and the bitset holds no others."""
+    from carbondata_spark.bloom import build_blooms
+
+    a = spark.range(0, 500).select(
+        F.col("id").alias("k"), (F.col("id") % 7).cast("string").alias("s")
+    )
+    # distinct counts well inside their power-of-two size classes, so
+    # the approximate count that sizes m agrees with the exact one
+    b = spark.range(500, 580).select(
+        F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("s")
+    )
+    want = {
+        0: {"k": _oracle_entry("k", T.LongType(), list(range(500))),
+            "s": _oracle_entry("s", T.StringType(), [str(i % 7) for i in range(500)])},
+        1: {"k": _oracle_entry("k", T.LongType(), list(range(500, 580))),
+            "s": _oracle_entry("s", T.StringType(), [str(i % 3) for i in range(500, 580)])},
+    }
+    alone = {
+        t: build_blooms(df.withColumn("_t", F.lit(t)), "_t", ["k", "s"], {t: n})[t]
+        for t, df, n in ((0, a, 500), (1, b, 80))
+    }
+    tagged = a.withColumn("_t", F.lit(0)).unionByName(b.withColumn("_t", F.lit(1)))
+    grouped = build_blooms(tagged, "_t", ["k", "s"], {0: 500, 1: 80})
+    assert alone == grouped == want
+
+
+def test_bloom_build_one_job_at_32_segments(spark):
+    """Blooms of any number of segments come from ONE aggregation: one
+    Spark job with AQE off (AQE adds one for the shuffle stage) — pinned
+    at 32 tags, where a per-segment build would run 32 or more."""
+    from carbondata_spark.bloom import build_blooms
+
+    df = spark.range(0, 32 * 50).select(
+        (F.col("id") % 32).cast("int").alias("_tag"),
+        F.col("id").alias("k"),
+    )
+    df.count()  # materialize lineage outside the pinned window
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with count_jobs(spark) as c:
+            by_seg = build_blooms(df, "_tag", ["k"], {t: 50 for t in range(32)})
+        ran = c.n
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert ran == 1, f"bloom build ran {ran} jobs, expected 1"
+    assert by_seg[7]["k"] == _oracle_entry("k", T.LongType(), list(range(7, 1600, 32)))
+    assert len(by_seg) == 32 and all("k" in v for v in by_seg.values())
+
+
+def test_bloom_build_allnull_and_empty_segments_store_zero_bitsets(spark):
+    """A (segment, column) whose rows are all NULL (e.g. after UPDATE ...
+    SET c = NULL) stores the all-zero bitset, which prunes every point
+    probe, not a missing entry that forfeits pruning; so does a 0-row
+    segment, which is not read at all."""
+    import base64
+
+    from carbondata_spark.bloom import MIN_BITS, build_blooms
+
+    seg0 = spark.range(0, 40).select(F.col("id").alias("k"))
+    seg1 = seg0.select(F.lit(None).cast("long").alias("k"))  # all-NULL
+    tagged = seg0.withColumn("_tag", F.lit(0)).unionByName(
+        seg1.withColumn("_tag", F.lit(1))
+    )
+    got = build_blooms(tagged, "_tag", ["k"], {0: 40, 1: 40, 2: 0})
+    assert got[0]["k"] == _oracle_entry("k", T.LongType(), list(range(40)))
+    for tag in (1, 2):
+        assert got[tag]["k"] == _oracle_entry("k", T.LongType(), [])
+        assert got[tag]["k"]["m"] == MIN_BITS
+        assert not any(base64.b64decode(got[tag]["k"]["bits"]))
+    with count_jobs(spark) as c:
+        assert build_blooms(seg0.withColumn("_tag", F.lit(2)), "_tag", ["k"], {2: 0}) == {
+            2: {"k": _oracle_entry("k", T.LongType(), [])}
+        }
+    assert c.n == 0
+
+
+def test_bloom_build_sizes_large_segments_first_and_skips_saturated(spark, monkeypatch):
+    """A segment with more rows than MAX_BITS // BITS_PER_DISTINCT may
+    saturate, so it is sized by its own pass before the fill: a
+    saturating column stores no bloom and collects no positions, and a
+    large segment that does not saturate gets the same entry as a build
+    that trusts its row count."""
+    from carbondata_spark import bloom as B
+
+    big = B.MAX_BITS // B.BITS_PER_DISTINCT + 1
+    sat = spark.range(0, 2 * big).select(
+        F.lit(0).alias("_tag"), F.col("id").alias("k")
+    )
+    small = spark.range(0, 300).select(F.lit(1).alias("_tag"), F.col("id").alias("k"))
+    collected = []
+    frame = type(sat)
+    real = frame.collect
+
+    def spy(self):
+        rows = real(self)
+        collected.append(rows)
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
+    # tag 1 claims more rows than it has: it takes the sizing pass too
+    got = B.build_blooms(sat.unionByName(small), "_tag", ["k"], {0: 2 * big, 1: big})
+    monkeypatch.setattr(frame, "collect", real)
+    assert got[0] == {}
+    assert got[1]["k"] == _oracle_entry("k", T.LongType(), list(range(300)))
+    assert got[1] == B.build_blooms(small, "_tag", ["k"], {1: 300})[1]
+    sizing, fill = collected
+    assert sorted(r["_tag"] for r in sizing) == [0, 1]
+    assert {r["_tag"]: len(r["_p0"]) for r in fill}[0] == 0
+
+
+def test_bloom_table_load_runs_three_jobs(spark, tmp_path):
+    """A load into a bloom table writes its segment, then fills every
+    bloom in one aggregation over the segment read with the table
+    schema: three jobs with AQE on (write; the aggregation's shuffle
+    stage and result), no schema-inference job."""
+    from carbondata_spark.store import CarbonStore
+
+    store = CarbonStore(spark, str(tmp_path))
+    df = spark.range(0, 2000).select(
+        F.col("id").alias("k"), F.concat(F.lit("s"), F.col("id") % 9).alias("s")
+    )
+    store.create_table("t", df.schema, sort_columns=["k"], properties={"bloom_columns": "k,s"})
+    df.count()
+    with count_jobs(spark) as c:
+        store.load("t", df)
+    assert c.n <= 3, c.by_description
+    assert c.by_description["carbon:load:bloom"] == 2, c.by_description
+    assert set(c.by_description) == {"carbon:load:write", "carbon:load:bloom"}
+    (e,) = store.valid_segments("t")
+    assert e.blooms["k"] == _oracle_entry("k", T.LongType(), list(range(2000)))
+
+
+def test_update_of_other_columns_carries_blooms(spark, tmp_path):
+    """An UPDATE that assigns no bloom column keeps every rewrite's
+    source entries and runs no bloom job; one that assigns a bloom column
+    builds the rewrites' filters afresh."""
+    from carbondata_spark.store import CarbonStore
+
+    store = CarbonStore(spark, str(tmp_path))
+    df = spark.range(0, 400).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    store.create_table("t", df.schema, sort_columns=["k"], properties={"bloom_columns": "k"})
+    store.load("t", df.filter("k < 200"))
+    store.load("t", df.filter("k >= 200"))
+    before = {e.segment_id: e.blooms for e in store.valid_segments("t")}
+    with count_jobs(spark) as c:
+        assert store.update_rows("t", "v % 50 = 0", {"v": "-1"}) == 8
+    assert "carbon:update:bloom" not in c.by_description, c.by_description
+    assert c.by_description["carbon:update:detect"] >= 1, c.by_description
+    after = {e.segment_id: e for e in store.valid_segments("t")}
+    assert sorted(e.blooms["k"]["bits"] for e in after.values()) == sorted(
+        b["k"]["bits"] for b in before.values()
+    )
+    with count_jobs(spark) as c:
+        assert store.update_rows("t", "k = 10", {"k": "1000"}) == 1
+    assert c.by_description["carbon:update:bloom"] >= 1, c.by_description
+    assert store.scan("t", column="k", eq=1000).count() == 1
+    assert store.scan("t", column="k", eq=10).count() == 0
+
+
+def test_blooms_stay_sound_across_mutations(spark, tmp_path):
+    """A seeded run of loads, UPDATEs, DELETEs, MERGEs and compactions on
+    a table with a bigint and a string bloom column. After every step:
+    each live entry has the bits of each live value set (the
+    ``probe_positions`` oracle); a point scan on either column returns
+    what a model of the steps holds; entries of loads, compactions,
+    UPDATEs and MERGEs equal a fresh build of their segment, and a
+    DELETE's entries are supersets of an oracle build at their own
+    geometry, carried unchanged from the source segment."""
+    import base64
+    import random
+
+    from pyspark.sql import Row
+
+    from carbondata_spark.bloom import build_blooms
+    from carbondata_spark.store import CarbonStore
+
+    rng = random.Random(11)
+    store = CarbonStore(spark, str(tmp_path))
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("s", T.StringType()),
+            T.StructField("v", T.LongType()),
+        ]
+    )
+    store.create_table("t", schema, sort_columns=["k"], properties={"bloom_columns": "k,s"})
+    model: dict[int, tuple[str, int]] = {}
+    exact: dict[int, bool] = {}  # live segment -> entries equal a fresh build
+    nxt = 0
+
+    def load(_carry=None):
+        nonlocal nxt
+        keys = range(nxt, nxt + rng.randint(20, 60))
+        nxt = keys[-1] + 1
+        rows = {k: (f"s{rng.randint(0, 40)}", rng.randint(0, 9)) for k in keys}
+        store.load("t", spark.createDataFrame([(k, *r) for k, r in rows.items()], schema))
+        model.update(rows)
+        return "load", None
+
+    def window():
+        lo = rng.randint(0, max(0, nxt - 15))
+        return lo, lo + rng.randint(3, 15)
+
+    def update(carry):
+        lo, hi = window()
+        pred = f"k BETWEEN {lo} AND {hi}"
+        hit = [k for k in model if lo <= k <= hi]
+        if carry:
+            assert store.update_rows("t", pred, {"v": "v + 100"}) == len(hit)
+            for k in hit:
+                model[k] = (model[k][0], model[k][1] + 100)
+            return "update", True
+        assert store.update_rows("t", pred, {"s": "concat('u', s)"}) == len(hit)
+        for k in hit:
+            model[k] = ("u" + model[k][0], model[k][1])
+        return "update", False
+
+    def delete(_carry=None):
+        lo, hi = window()
+        hit = [k for k in model if lo <= k <= hi and model[k][1] % 2 == 0]
+        assert store.delete_rows("t", f"k BETWEEN {lo} AND {hi} AND v % 2 = 0") == len(hit)
+        for k in hit:
+            del model[k]
+        return "delete", True
+
+    def merge(carry):
+        nonlocal nxt
+        keys = rng.sample(sorted(model), min(len(model), 6)) + [nxt, nxt + 3]
+        nxt += 4
+        src = {k: (f"m{rng.randint(0, 5)}", rng.randint(0, 9)) for k in keys}
+        frame = spark.createDataFrame([Row(k=k, s=s, v=v) for k, (s, v) in src.items()], schema)
+        if carry:
+            store.merge_rows("t", frame, keys="k", update_cols=["v"])
+            for k, (s, v) in src.items():
+                model[k] = (model[k][0], v) if k in model else (s, v)
+        else:
+            store.merge_rows("t", frame, keys="k")
+            model.update(src)
+        return "merge", carry
+
+    def compact(_carry=None):
+        store.compact("t")
+        return "compact", None
+
+    def check(kind, carry, before):
+        live = {e.segment_id: e for e in store.valid_segments("t")}
+        for sid, e in live.items():
+            if sid in exact:
+                continue
+            origin = e.origin
+            if "rewrite_of" not in origin:
+                exact[sid] = True  # load, compaction, MERGE insert: fresh
+                continue
+            src = before[origin["rewrite_of"]]
+            if carry:
+                assert e.blooms == src.blooms, (kind, sid)
+                exact[sid] = exact[src.segment_id] and kind != "delete"
+            else:
+                exact[sid] = True
+        for sid in list(exact):
+            if sid not in live:
+                del exact[sid]
+        seg_rows: dict[int, list] = {sid: [] for sid in live}
+        for r in store.table("t", _tag_col="_seg").collect():
+            seg_rows[r["_seg"]].append(r)
+        assert sorted((r.k, r.s, r.v) for rs in seg_rows.values() for r in rs) == sorted(
+            (k, *r) for k, r in model.items()
+        ), kind
+        fresh_ids = [sid for sid in live if exact[sid]]
+        fresh = build_blooms(
+            store.table("t", segment_ids=fresh_ids, _tag_col="_seg"),
+            "_seg",
+            ["k", "s"],
+            {sid: live[sid].rows for sid in fresh_ids},
+        ) if fresh_ids else {}
+        for sid, e in live.items():
+            for c, dtype in (("k", T.LongType()), ("s", T.StringType())):
+                entry = e.blooms[c]
+                oracle = _oracle_entry(c, dtype, [r[c] for r in seg_rows[sid]], entry["m"])
+                have = base64.b64decode(entry["bits"])
+                need = base64.b64decode(oracle["bits"])
+                assert all(h & n == n for h, n in zip(have, need)), (kind, sid, c)
+                if exact[sid]:
+                    assert entry == fresh[sid][c] == oracle, (kind, sid, c)
+        probes = rng.sample(range(nxt + 5), 4)
+        for k in probes:
+            got = [(r.k, r.s, r.v) for r in store.scan("t", column="k", eq=k).collect()]
+            assert got == ([(k, *model[k])] if k in model else []), (kind, k)
+        s = rng.choice([r[0] for r in model.values()] or ["s0"])
+        n = store.scan("t", column="s", eq=s).count()
+        assert n == sum(r[0] == s for r in model.values()), (kind, s)
+
+    load()
+    load()
+    check("load", None, {})
+    # each of UPDATE and MERGE once leaving the bloom columns alone
+    # (carried entries) and once assigning one (fresh build)
+    steps = [
+        (load, None), (update, True), (delete, None), (merge, True), (update, False),
+        (delete, None), (merge, False), (compact, None), (delete, None),
+    ]
+    for step, carry in steps:
+        before = {e.segment_id: e for e in store.valid_segments("t")}
+        kind, carry = step(carry)
+        check(kind, carry, before)

@@ -348,11 +348,11 @@ def test_multi_segment_merge_per_source_rewrites_constant_jobs(spark, tmp_path, 
 
 
 def test_bloom_table_multi_segment_update_constant_jobs(spark, tmp_path, monkeypatch):
-    """r15: bloom collection for rewrite segments is GROUPED (two jobs
-    for all new segments, bloom.compute_segment_blooms_grouped) — an
-    UPDATE touching N segments of a bloom table must run the same job
-    count for N=2 and N=5, and the rewritten segments' blooms must
-    still point-prune correctly."""
+    """r15: blooms for rewrite segments come from one aggregation for
+    all new segments (bloom.build_blooms), or are carried from their
+    sources — an UPDATE touching N segments of a bloom table must run
+    the same job count for N=2 and N=5, and the rewritten segments'
+    blooms must still point-prune correctly."""
 
     def build(n_segs: int, name: str) -> CarbonStore:
         store = CarbonStore(spark, str(tmp_path / name))
@@ -390,7 +390,8 @@ def test_bloom_table_multi_segment_update_constant_jobs(spark, tmp_path, monkeyp
             assert len(staging) == 1, staging
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # grouped bloom collection: a per-segment loop would add >= 6 jobs
+    # v is no bloom column, so the rewrites carry their sources' blooms;
+    # a per-segment bloom build loop would add >= 6 jobs
     # (2 per extra segment) from 2 to 5 segments
     assert counts[5] <= counts[2] + 3, (
         f"bloom-table update job count grew with affected segments: {counts}"

@@ -302,34 +302,6 @@ def test_partitioned_table_spanning_delete(spark, tmp_path):
     assert store.table("sp").count() == 98
 
 
-def test_grouped_bloom_bit_identical_to_single_segment(spark):
-    """Hash parity by construction: the grouped collector
-    (compute_segment_blooms_grouped, r15) must emit byte-identical
-    bitsets to the single-segment collector for the same rows — both go
-    through the same _position_exprs builder, one with a literal m, one
-    with a tag→m map column."""
-    from carbondata_spark.bloom import (
-        compute_segment_blooms,
-        compute_segment_blooms_grouped,
-    )
-
-    a = spark.range(0, 500).select(
-        F.col("id").alias("k"), (F.col("id") % 7).cast("string").alias("s")
-    )
-    b = spark.range(500, 600).select(
-        F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("s")
-    )
-    singles = {
-        0: compute_segment_blooms(a, ["k", "s"]),
-        1: compute_segment_blooms(b, ["k", "s"]),
-    }
-    tagged = a.withColumn("_t", F.lit(0)).unionByName(
-        b.withColumn("_t", F.lit(1))
-    )
-    grouped = compute_segment_blooms_grouped(tagged, "_t", ["k", "s"])
-    assert grouped == singles
-
-
 def test_clean_files_gcs_orphan_rewrite_staging(spark, tmp_path):
     """A mutation killed between its staging write and the dir
     promotions leaves `.rewrite_staging_<id>` behind; CLEAN FILES GCs

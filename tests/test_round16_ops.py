@@ -1,8 +1,8 @@
 """Round-16 pins: crash consistency of the _write_rewrites promotion
 loop, 32-segment scale stress of the r15 single-job write paths, and the
-four r15 ADVICE fixes (grouped-bloom all-NULL parity, raw-spelling
-delimiter collision, compressed-member header peek, Scala char literals
-in the replay comment stripper).
+r15 ADVICE fixes (raw-spelling delimiter collision, compressed-member
+header peek, Scala char literals in the replay comment stripper). The
+all-NULL bloom pin lives in tests/test_bloom.py.
 
 Reference analogues: load-failure cleanup in
 CarbonDataRDDFactory.scala:527-558 (partial loads become clean-files
@@ -190,62 +190,6 @@ def test_wide_merge_32_segments_constant_jobs(spark, tmp_path):
     assert counts[8] == counts[32], (
         f"merge job count grew with affected-segment count: {counts}"
     )
-
-
-def test_grouped_bloom_exactly_two_jobs_at_32_segments(spark):
-    """compute_segment_blooms_grouped stays at exactly TWO distributed
-    jobs regardless of segment count (bloom.py:131 contract) — pinned
-    directly at 32 tags, where a per-segment collector would run 64."""
-    from carbondata_spark.bloom import compute_segment_blooms_grouped
-
-    df = spark.range(0, 32 * 50).select(
-        (F.col("id") % 32).cast("int").alias("_tag"),
-        F.col("id").alias("k"),
-    )
-    df.count()  # materialize lineage outside the pinned window
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        with count_jobs(spark) as c:
-            by_seg = compute_segment_blooms_grouped(df, "_tag", ["k"])
-        ran = c.n
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert ran == 2, f"grouped bloom collection ran {ran} jobs, expected 2"
-    assert len(by_seg) == 32 and all("k" in v for v in by_seg.values())
-
-
-# --------------------------------------------------------------------------
-# 3. ADVICE: grouped blooms for an all-NULL (segment, column)
-# --------------------------------------------------------------------------
-
-
-def test_grouped_blooms_allnull_column_bit_identical_to_single(spark):
-    """A (segment, column) whose surviving rows are all NULL (e.g. after
-    UPDATE ... SET c = NULL) must store the all-zero bitset that prunes
-    every point probe — bit-identical to compute_segment_blooms on the
-    same data, not a missing entry that forfeits pruning."""
-    from carbondata_spark.bloom import (
-        compute_segment_blooms,
-        compute_segment_blooms_grouped,
-    )
-
-    seg0 = spark.range(0, 40).select(F.col("id").alias("k"))
-    seg1 = seg0.select(F.lit(None).cast("long").alias("k"))  # all-NULL
-    tagged = seg0.withColumn("_tag", F.lit(0)).unionByName(
-        seg1.withColumn("_tag", F.lit(1))
-    )
-    grouped = compute_segment_blooms_grouped(tagged, "_tag", ["k"])
-    assert grouped[1].get("k") is not None, (
-        "all-NULL segment must still store a bloom (all-zero bitset)"
-    )
-    for tag, seg in ((0, seg0), (1, seg1)):
-        single = compute_segment_blooms(seg, ["k"])
-        assert grouped[tag] == single, f"parity broke for segment {tag}"
-    # and the all-zero bitset is genuinely all-zero
-    import base64
-
-    bits = base64.b64decode(grouped[1]["k"]["bits"])
-    assert not any(bits)
 
 
 # --------------------------------------------------------------------------

@@ -676,3 +676,33 @@ def test_compact_preserves_stream_origins_for_replay(store, spark):
         assert store.has_committed_origin("t", o), o
     assert not store.has_committed_origin("t", {"stream": "s", "epoch": 9})
     assert store.table("t").count() == 30
+
+
+@pytest.mark.parametrize("blooms", [False, True], ids=["plain", "bloom"])
+@pytest.mark.parametrize("parts", [[], ["city"]], ids=["flat", "partitioned"])
+def test_empty_load_keeps_table_usable(store, spark, parts, blooms):
+    """An empty load commits a 0-row segment. A partitioned write of no
+    rows leaves its directory without any parquet file; reads, scans,
+    IUD, MERGE and compaction must still work, and a bloom table stores
+    the all-zero bitset for the segment without reading it."""
+    import base64
+
+    from pyspark.sql import Row
+
+    props = {"bloom_columns": "id"} if blooms else {}
+    store.create_table("t", SCHEMA, sort_columns=["id"], partition_columns=parts, properties=props)
+    store.load("t", make_df(spark, n=30))
+    empty_id = store.load("t", make_df(spark, n=30).filter("id < 0"))
+    (empty,) = [e for e in store.valid_segments("t") if e.segment_id == empty_id]
+    assert empty.rows == 0
+    if blooms:
+        assert not any(base64.b64decode(empty.blooms["id"]["bits"]))
+    assert store.table("t").count() == 30
+    assert store.scan("t", column="id", eq=4).count() == 1
+    assert store.update_rows("t", "id = 4", {"age": "99"}) == 1
+    assert store.delete_rows("t", "id = 5") == 1
+    src = spark.createDataFrame([Row(id=6, city="paris", age=1), Row(id=500, city="wuhan", age=2)], SCHEMA)
+    assert store.merge_rows("t", src, keys="id") == {"updated": 1, "inserted": 1}
+    assert store.compact("t") is not None
+    got = {r.id: r.age for r in store.table("t").collect()}
+    assert len(got) == 30 and got[4] == 99 and 5 not in got and got[6] == 1 and got[500] == 2
