@@ -2,38 +2,72 @@
 
 Reference parity: CarbonContext.sql tries the Carbon DDL/DML grammar
 first and falls back to HiveQL for everything else
-(CarbonSqlParser.scala:161-177). Here the management grammar is a small
-regex router over the CarbonStore API; SELECT and any unmatched statement
-go straight to ``spark.sql`` after registering the store's tables as
-views — so the full Spark SQL surface is the query language, exactly as
-the reference delegates to HiveContext.
+(CarbonSqlParser.scala:161-177). Here the management grammar is a
+table of ``(pattern, handler)`` entries over the CarbonStore API, one
+entry per statement (``_ROUTES``, tried in order, first match wins);
+SELECT and any unmatched statement go straight to ``spark.sql`` after
+registering the store's tables as views — so the full Spark SQL surface
+is the query language, exactly as the reference delegates to HiveContext.
 
 Matching is case-insensitive over the ORIGINAL statement text and all
 identifiers/literals are extracted from the original (never a lowered
 copy), so mixed-case table/column names and quoted default values
-round-trip exactly; only keywords are case-folded.
+round-trip exactly; only keywords are case-folded. Whitespace runs
+outside quoted literals collapse to one space; literals keep theirs.
+Table names resolve case-insensitively against the store, like the
+reference's Hive-backed catalog. The store is one namespace, so every
+``<t>`` accepts an ignored ``schema.`` qualifier and ``IN <schema>``
+filters are no-ops.
 
-Supported statements (case-insensitive keywords):
+Supported statements (keywords case-insensitive; CUBE|TABLE marks two
+spellings of one statement):
 
-    CREATE TABLE <t> (<col> <type>, ...) [SORTED BY (c1, c2)]
-    CREATE CUBE <t> DIMENSIONS (c type, ...) MEASURES (m type, ...)
-        [OPTIONS ('k'='v', ...)]           -- CarbonSqlParser.scala:703-729
-    DROP TABLE <t> / DROP CUBE <t> / SHOW CUBES
     SHOW TABLES
-    SELECT ... FROM <t> AS OF TIMESTAMP '<iso>'   -- time-travel read
-    SHOW SEGMENTS FOR TABLE <t>            -- SHOW LOADS
-    DELETE SEGMENTS <id,...> FROM TABLE <t>  -- DELETE LOAD
-    DELETE SEGMENTS FROM TABLE <t> WHERE STARTTIME BEFORE '<ts>'
-    CLEAN FILES FOR TABLE <t>
+    SHOW [ALL] CUBES [IN s] [DETAIL]
+    SHOW SCHEMAS|DATABASES
+    USE s
+    CREATE TABLE [IF NOT EXISTS] <t> (<col> <type>, ...)
+        [SORTED BY (c, ...)] [PARTITIONED BY (c, ...)]
+    CREATE TABLE [IF NOT EXISTS] <t> (<col> <type>, ...)
+        [PARTITIONED BY (<col> <type>, ...)]
+        STORED BY 'org.apache.carbondata.format' [TBLPROPERTIES ('k'='v', ...)]
+                    -- CarbonSqlParser.scala:316-418
+    CREATE CUBE [IF NOT EXISTS] <t> DIMENSIONS (c type, ...)
+        [MEASURES (m type, ...)] [OPTIONS (PARTITIONER [...],
+        NO_DICTIONARY (c, ...), AGGREGATION [agg(m), ...], 'k'='v', ...)]
+                    -- CarbonSqlParser.scala:703-729
+    ALTER CUBE <t> [DROP (c, ...)] [ADD [DIMENSIONS (...)] [MEASURES (...)]]
+        [OPTIONS (NO_DICTIONARY (...), AGGREGATION [...], DEFAULTS [c=v, ...])]
+                    -- CarbonSqlParser.scala:731-776
+    ALTER TABLE <t> ADD COLUMNS (<col> <type>, ...) [DEFAULTS (c=v, ...)]
+    ALTER TABLE <t> DROP COLUMNS (c, ...)
     ALTER TABLE <t> COMPACT                -- MERGE
-    ALTER TABLE <t> ADD|DROP COLUMNS (...)
-    LOAD DATA INPATH '<path>' INTO TABLE <t> [OPTIONS('k'='v', ...)]
-                    -- CarbonSqlParser.scala:779-834 option surface
-    CREATE AGGREGATETABLE <name> FROM TABLE <fact>
-        GROUP BY (d1, ...) AGGREGATES (sum(m1), ...)
+    DROP CUBE|TABLE [IF EXISTS] <t>
+    DESCRIBE|DESC [FORMATTED|EXTENDED] <t>
+    SHOW CREATE CUBE <t>                   -- refused: designed out
+    LOAD DATA [LOCAL] INPATH '<path>' [OVERWRITE] INTO CUBE|TABLE <t>
+        [OPTIONS|PARTITIONDATA (...)] [FIELDS TERMINATED BY 'd']
+    LOAD DATA FACT FROM '<path>' [OVERWRITE] INTO CUBE|TABLE <t> [...]
+                    -- CarbonSqlParser.scala:779-834 option surface;
+                    -- DIMENSION FROM is refused (flat-table model)
+    SHOW SEGMENTS|LOADS FOR CUBE|TABLE <t> [LIMIT n]
+    DELETE LOAD|SEGMENTS <id,...> FROM CUBE|TABLE <t>
+    DELETE [SEGMENTS] FROM CUBE|TABLE <t> WHERE <col|STARTTIME> BEFORE '<ts>'
+    CLEAN FILES FOR CUBE|TABLE <t>
+    DELETE FROM [CUBE|TABLE] <t> WHERE <predicate>     -- row-level
+    UPDATE [CUBE|TABLE] <t> SET c = <expr>, ... [WHERE <predicate>]
+    MERGE INTO <t> USING <src> ON (k, ...) | ON t.k = s.k [AND ...]
+        [WHEN MATCHED THEN UPDATE SET * | c = s.c, ...]
+        [WHEN NOT MATCHED THEN INSERT *]
+                    -- row-level DELETE/UPDATE/MERGE on a table outside
+                    -- the store go to Spark unchanged
+    CREATE AGGREGATETABLE <dims and agg(m)s> FROM CUBE|TABLE <t>  -- autoN
+    CREATE AGGREGATETABLE <name> FROM CUBE|TABLE <t>
+        GROUP BY (d1, ...) AGGREGATES (agg(m1), ...)
                     -- CarbonSqlParser.scala:182-224
-    SHOW AGGREGATE TABLES FOR TABLE <t> / DROP AGGREGATE TABLE ...
-    DESCRIBE [FORMATTED] <t>
+    SHOW AGGREGATE TABLES [IN s | FOR CUBE|TABLE <t>]
+    DROP AGGREGATE TABLE [IF EXISTS] [<fact>.]<name> [ON CUBE|TABLE <t>]
+    SELECT ... FROM <t> AS OF TIMESTAMP '<iso>'   -- time-travel read
     <anything else>                        -- spark.sql passthrough; a
         simple ``SELECT dims, aggs FROM fact GROUP BY dims`` over a store
         table is transparently answered from a matching aggregate
@@ -44,14 +78,22 @@ Supported statements (case-insensitive keywords):
 from __future__ import annotations
 
 import glob
+import itertools
 import os
 import re
+from collections.abc import Iterator
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from carbondata_spark.plans.agg_table import (
+    choose_rollup,
+    create_aggregate_table,
+    drop_aggregate_table,
+    list_aggregate_tables,
+)
 from carbondata_spark.store import SEGMENT_SUCCESS, CarbonStore
 
 _TYPES = {
@@ -100,20 +142,84 @@ def _parse_type(s: str) -> T.DataType:
     raise ValueError(f"unsupported type: {s}")
 
 
-def _split_outside_quotes(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` occurrences that are not inside single quotes."""
-    parts, buf, inq = [], [], False
-    for ch in s:
-        if ch == "'":
-            inq = not inq
-            buf.append(ch)
-        elif ch == sep and not inq:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
+def _fields(cols_s: str | None) -> list[T.StructField]:
+    """``c1 type1, c2 type2, ...`` column definitions → StructFields."""
+    fields = []
+    for part in _split_cols(cols_s or ""):
+        cname, ctype = part.strip().split(None, 1)
+        fields.append(T.StructField(cname, _parse_type(ctype)))
+    return fields
+
+
+def _names(s: str | None) -> list[str]:
+    """``a, 'b', ...`` → [a, b]: a comma list of optionally quoted names."""
+    return [c.strip().strip("'\"") for c in (s or "").split(",") if c.strip()]
+
+
+def _measures(exprs: str) -> dict[str, list[str]]:
+    """``sum(a), count(a), max(b)`` → {a: [sum, count], b: [max]}."""
+    measures: dict[str, list[str]] = {}
+    for fn, col in re.findall(r"(\w+)\s*\(\s*(\w+)\s*\)", exprs):
+        measures.setdefault(col, []).append(fn.lower())
+    return measures
+
+
+def _defaults(s: str) -> dict[str, str]:
+    """``c = v, c2 = 'v2'`` → {c: v, c2: v2}, the default fills of added
+    columns."""
+    out: dict[str, str] = {}
+    for pair in _split_cols(s):
+        if "=" not in pair:
+            raise ValueError(f"DEFAULTS: cannot parse {pair!r}")
+        k, v = pair.split("=", 1)
+        out[k.strip()] = v.strip().strip("'\"")
+    return out
+
+
+def _lift(opts_s: str, clause: str) -> tuple[str | None, str]:
+    """Cut the first match of ``clause`` out of an OPTIONS body: returns
+    (its one group, or None when absent; the rest of the body)."""
+    m = re.search(clause, opts_s, _I)
+    if m is None:
+        return None, opts_s
+    return m.group(1), opts_s.replace(m.group(0), "")
+
+
+def _lift_dimension_options(opts_s: str) -> tuple[list[str], str | None, str]:
+    """The reference's structured cube OPTIONS clauses
+    (CarbonSqlParser.scala noDictionaryDims:975, aggregation:973) carry
+    bracketed payloads the flat k=v option parser cannot hold. Lift
+    NO_DICTIONARY (c, ...) and AGGREGATION [agg(m), ...] out first:
+    returns (no-dictionary names, aggregation list or None, the rest)."""
+    no_dict, opts_s = _lift(opts_s, r"no_dictionary\s*\(([^)]*)\)")
+    agg_exprs, opts_s = _lift(opts_s, r"aggregation\s*\[(.*?)\]")
+    return _names(no_dict), agg_exprs, opts_s
+
+
+def _dimension_sort_key(
+    dims: list[str],
+    no_dict: set[str],
+    part_cols: list[str],
+    types: dict[str, T.DataType],
+) -> list[str]:
+    """MDKey analogue: the dictionary dimensions form the sort prefix and
+    the NO_DICTIONARY (high-cardinality) ones follow — the reference's
+    own parser test pins the split (TestCarbonSqlParser.scala:59-84:
+    dimCols=[col3,col4] with the excluded col2 tracked separately), and
+    low-cardinality dims first keep long sorted runs for row-group
+    pruning. A hive-partition column is constant within its directory,
+    so it is left out. DECIMAL dims are left out too: pyarrow cannot
+    extract parquet column statistics for fixed-length decimals, so a
+    decimal sort column would fail stats collection at load — the column
+    stays fully queryable, it just contributes no segment pruning
+    (matches the reference, whose MDKey covers dictionary dimensions
+    only)."""
+    keep = [
+        d
+        for d in dims
+        if d not in part_cols and not isinstance(types[d], T.DecimalType)
+    ]
+    return [d for d in keep if d not in no_dict] + [d for d in keep if d in no_dict]
 
 
 def _parse_options(opts_s: str | None, strict: bool = False) -> dict[str, str]:
@@ -128,7 +234,7 @@ def _parse_options(opts_s: str | None, strict: bool = False) -> dict[str, str]:
     if not opts_s:
         return {}
     out: dict[str, str] = {}
-    for item in _split_outside_quotes(opts_s):
+    for item in filter(None, (p.strip() for p in _split_cols(opts_s))):
         m = (
             re.fullmatch(r"'([^']+)'\s*=\s*'([^']*)'", item)
             or re.fullmatch(r"(\w+)\s*=\s*'([^']*)'", item)
@@ -185,7 +291,7 @@ def _local_load_members(path: str) -> list[str] | None:
     containing a Spark-supported glob ('/data/part-*.csv') fails
     exists() but is still local — expand it with glob.glob so glob
     loads get validated too, instead of a misleading 'non-local path'
-    warning (r16 driver advice)."""
+    warning."""
     if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path) and not path.startswith(
         "file:"
     ):
@@ -230,774 +336,481 @@ class CarbonSession:
             self.spark.createDataFrame([], schema)
         )
 
-    def _resolve(self, name: str) -> str:
-        """Store table names resolve case-insensitively, like the
-        reference's Hive-backed catalog (its own sortexpr suite CREATEs
-        alldatatypescubeSort then LOADs INTO alldatatypescubesort).
-        Unknown names pass through so the store's own not-found error
-        fires with the user's spelling."""
-        return {t.lower(): t for t in self.store.tables()}.get(name.lower(), name)
-
     def sql(self, text: str) -> DataFrame:
-        s = " ".join(text.strip().rstrip(";").split())
+        """Run one statement: the first ``_ROUTES`` entry whose pattern
+        matches answers it, unless its handler declines with None; then
+        the rollup route; then Spark SQL. The store's table names are
+        listed once: each handler gets the entry's ``t`` group resolved
+        case-insensitively (an unknown name keeps the user's spelling, so
+        the store's own not-found error names it) and the
+        ``{lower: name}`` map."""
+        s = _squash(text.strip().rstrip(";"))
+        names = {t.lower(): t for t in self.store.tables()}
+        for pattern, handler in _ROUTES:
+            m = pattern.fullmatch(s)
+            if m is None:
+                continue
+            raw = m.groupdict().get("t")
+            out = handler(self, m, raw and names.get(raw.lower(), raw), names)
+            if out is not None:
+                return out
+        routed = self._try_rollup_route(s, names)
+        return routed if routed is not None else self._passthrough(s, names)
 
-        if re.fullmatch(r"show tables", s, _I):
-            return self._rows(
-                [{"table_name": t} for t in self.store.tables()], "table_name string"
-            )
+    # -- statement handlers: (self, match, resolved table, names) -----------
 
-        m = re.fullmatch(r"show (?:segments|loads) for table (\w+)", s, _I)
-        if m:
-            segs = self.store.show_segments(self._resolve(m.group(1)))
-            rows = [
-                {
-                    "segment_id": e["segment_id"],
-                    "status": e["status"],
-                    "rows": e["rows"],
-                    "load_start": datetime.fromtimestamp(
-                        e["load_start_ts"], tz=timezone.utc
-                    ).isoformat(),
-                }
-                for e in segs
-            ]
-            return self._rows(rows, "segment_id long, status string, rows long, load_start string")
+    def _show_segments(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        segs = self.store.show_segments(t)
+        if m["n"] is not None:
+            # LIMIT n = the n most recent loads, newest first
+            segs = sorted(segs, key=lambda e: -e["segment_id"])[: int(m["n"])]
+        rows = [
+            {
+                "segment_id": e["segment_id"],
+                "status": e["status"],
+                "rows": e["rows"],
+                "load_start": datetime.fromtimestamp(
+                    e["load_start_ts"], tz=timezone.utc
+                ).isoformat(),
+            }
+            for e in segs
+        ]
+        return self._rows(rows, "segment_id long, status string, rows long, load_start string")
 
-        # Reference-exact CUBE statement forms (CarbonSqlParser.scala:
-        # showLoads:1096, deleteLoadsByID:1102, deleteLoadsByDate:1110,
-        # cleanFiles:1120, dropCubeOrTable:856, showAggregateTables:836,
-        # createAggregateTable:182, showCube/showAllCubes:842-854): a
-        # reference user's statements run verbatim. The store is
-        # single-namespace, so the optional `schema.` qualifier every
-        # form allows is accepted and ignored, and IN <schema> filters
-        # are no-ops over the one namespace.
-        m = re.fullmatch(
-            r"show loads for cube (?:\w+\.)?(\w+)(?: limit (\d+))?", s, _I
-        )
-        if m:
-            segs = self.store.show_segments(self._resolve(m.group(1)))
-            if m.group(2) is not None:
-                # LIMIT n = the n most recent loads, newest first
-                segs = sorted(segs, key=lambda e: -e["segment_id"])[: int(m.group(2))]
-            rows = [
-                {
-                    "segment_id": e["segment_id"],
-                    "status": e["status"],
-                    "rows": e["rows"],
-                    "load_start": datetime.fromtimestamp(
-                        e["load_start_ts"], tz=timezone.utc
-                    ).isoformat(),
-                }
-                for e in segs
-            ]
-            return self._rows(rows, "segment_id long, status string, rows long, load_start string")
+    def _delete_segments(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        ids = [int(x) for x in m["ids"].replace(" ", "").split(",") if x]
+        return self._rows([{"deleted": self.store.delete_segments(t, ids)}], "deleted long")
 
-        m = re.fullmatch(r"delete load ([\d,\s]+) from cube (?:\w+\.)?(\w+)", s, _I)
-        if m:
-            ids = [int(x) for x in m.group(1).replace(" ", "").split(",") if x]
-            n = self.store.delete_segments(self._resolve(m.group(2)), ids)
-            return self._rows([{"deleted": n}], "deleted long")
-
-        m = re.fullmatch(
-            r"delete from cube (?:\w+\.)?(\w+) where (\w+) before '([^']+)'", s, _I
-        )
-        if m:
-            table, field = self._resolve(m.group(1)), m.group(2)
-            # the reference validates the field is a time dimension of the
-            # cube before deleting whole loads by date
-            # (CarbonSqlParser.scala:1110-1118); mirror that instead of
-            # silently accepting a typo'd column
-            schema_fields = {f.name.lower() for f in self.store.schema(table).fields}
-            if field.lower() not in schema_fields and field.lower() != "starttime":
-                raise ValueError(
-                    f"DELETE FROM CUBE: {field} is not a column of {table} "
-                    "(or the pseudo-column STARTTIME)"
-                )
-            ts = datetime.fromisoformat(m.group(3)).replace(tzinfo=timezone.utc).timestamp()
-            n = self.store.delete_segments_by_date(table, ts)
-            return self._rows([{"deleted": n}], "deleted long")
-
-        m = re.fullmatch(r"clean files for cube (?:\w+\.)?(\w+)", s, _I)
-        if m:
-            removed = self.store.clean_files(self._resolve(m.group(1)))
-            return self._rows([{"removed_segment": r} for r in removed], "removed_segment long")
-
-        m = re.fullmatch(r"show create cube (?:\w+\.)?(\w+).*", s, _I)
-        if m:
-            # the LAST start symbol of the reference parser
-            # (CarbonSqlParser.scala:175-177, showCreateCube:272-313):
-            # it re-emits a CREATE CUBE definition synthesized from a
-            # PRE-EXISTING Hive table definition — a legacy
-            # create-from-hive migration path this engine designs out
-            # (README §SQL surface). Reject loudly with the working
-            # alternatives instead of falling through to a baffling
-            # Spark parse error.
+    def _delete_before(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        # the reference validates the field is a time dimension of the
+        # cube before deleting whole loads by date
+        # (CarbonSqlParser.scala:1110-1118); mirror that instead of
+        # silently accepting a typo'd column
+        field = m["col"]
+        schema_fields = {f.name.lower() for f in self.store.schema(t).fields}
+        if field.lower() not in schema_fields and field.lower() != "starttime":
             raise ValueError(
-                "SHOW CREATE CUBE is not supported: the reference form "
-                "synthesizes a cube definition from a pre-existing Hive "
-                "table (legacy migration path, designed out). Use "
-                f"DESCRIBE EXTENDED {m.group(1)} for schema + properties "
-                f"and SHOW SEGMENTS FOR TABLE {m.group(1)} for loads"
+                f"DELETE FROM CUBE: {field} is not a column of {t} "
+                "(or the pseudo-column STARTTIME)"
             )
+        ts = datetime.fromisoformat(m["ts"]).replace(tzinfo=timezone.utc).timestamp()
+        return self._rows([{"deleted": self.store.delete_segments_by_date(t, ts)}], "deleted long")
 
-        m = re.fullmatch(r"drop cube if exists (?:\w+\.)?(\w+)", s, _I)
-        if m:
-            name = self._resolve(m.group(1))
-            if name in self.store.tables():
-                self.store.drop_table(name)
-                return self._rows([{"dropped": name}], "dropped string")
+    def _clean_files(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        removed = self.store.clean_files(t)
+        return self._rows([{"removed_segment": r} for r in removed], "removed_segment long")
+
+    def _show_create_cube(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        # the LAST start symbol of the reference parser
+        # (CarbonSqlParser.scala:175-177, showCreateCube:272-313): it
+        # re-emits a CREATE CUBE definition synthesized from a
+        # PRE-EXISTING Hive table definition — a legacy create-from-hive
+        # migration path this engine designs out (README §SQL surface).
+        # Reject loudly with the working alternatives instead of falling
+        # through to a baffling Spark parse error.
+        raise ValueError(
+            "SHOW CREATE CUBE is not supported: the reference form "
+            "synthesizes a cube definition from a pre-existing Hive "
+            "table (legacy migration path, designed out). Use "
+            f"DESCRIBE EXTENDED {t} for schema + properties "
+            f"and SHOW SEGMENTS FOR TABLE {t} for loads"
+        )
+
+    def _drop(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        if m["ie"] and t.lower() not in names:
             return self._rows([], "dropped string")
+        self.store.drop_table(t)
+        # a view the passthrough registered would otherwise keep
+        # answering for the table and fail on its deleted files
+        self.spark.catalog.dropTempView(t)
+        return self._rows([{"dropped": t}], "dropped string")
 
-        m = re.fullmatch(
-            r"drop aggregate table (?:if exists )?(?:(\w+)\.)?(\w+)", s, _I
-        )
-        if m:
-            from carbondata_spark.plans.agg_table import (
-                drop_aggregate_table,
-                list_aggregate_tables,
+    def _drop_aggregate(self, m: re.Match, t: str | None, names: dict[str, str]) -> DataFrame:
+        # auto-named aggregates (auto0, auto1, ...) can exist on several
+        # facts, so an unqualified name that several facts carry is an
+        # error. ON <t>, or a dotted qualifier naming a store table,
+        # picks the fact; any other qualifier is the (single-namespace)
+        # schema and is ignored.
+        name = m["a"]
+        fact = t or names.get((m["q"] or "").lower())
+        facts = [
+            f
+            for f in names.values()
+            if (fact is None or f == fact) and name in list_aggregate_tables(self.store, f)
+        ]
+        if len(facts) > 1:
+            raise ValueError(
+                f"aggregate table {name} exists on several cubes "
+                f"({', '.join(sorted(facts))}): qualify as "
+                f"<cube>.{name} to disambiguate"
             )
+        if facts:
+            drop_aggregate_table(self.store, facts[0], name)
+            return self._rows([{"dropped": name}], "dropped string")
+        if m["ie"]:
+            return self._rows([], "dropped string")
+        raise ValueError(f"aggregate table {name} not found on {fact or 'any cube'}")
 
-            qual, name = m.group(1), m.group(2)
-            if_exists = "if exists" in s.lower()
-            # auto-named aggregates (auto0, auto1, ...) can exist on
-            # several facts (ADVICE r11): a dotted qualifier that names a
-            # store table disambiguates as fact.aggregate; any other
-            # qualifier is the (single-namespace) schema and is ignored.
-            facts = [
-                f
-                for f in self.store.tables()
-                if name in list_aggregate_tables(self.store, f)
-            ]
-            if qual and qual in self.store.tables():
-                facts = [f for f in facts if f == qual]
-            if len(facts) > 1:
-                raise ValueError(
-                    f"aggregate table {name} exists on several cubes "
-                    f"({', '.join(sorted(facts))}): qualify as "
-                    f"<cube>.{name} to disambiguate"
-                )
-            if facts:
-                drop_aggregate_table(self.store, facts[0], name)
-                return self._rows([{"dropped": name}], "dropped string")
-            if if_exists:
-                return self._rows([], "dropped string")
-            raise ValueError(f"aggregate table {name} not found on any cube")
-
-        m = re.fullmatch(r"show aggregate tables(?: in \w+)?", s, _I)
-        if m:
-            from carbondata_spark.plans.agg_table import list_aggregate_tables
-
-            rows = [
-                {"fact_table": fact, "aggregate_table": n}
-                for fact in self.store.tables()
-                for n in list_aggregate_tables(self.store, fact)
-            ]
-            return self._rows(rows, "fact_table string, aggregate_table string")
-
-        m = re.fullmatch(
-            r"create aggregatetable (.+) from cube (?:\w+\.)?(\w+)", s, _I
-        )
-        if m:
-            from carbondata_spark.plans.agg_table import (
-                create_aggregate_table,
-                list_aggregate_tables,
-            )
-
-            fact = m.group(2)
-            group_cols: list[str] = []
-            measures: dict[str, list[str]] = {}
-            for item in _split_cols(m.group(1)):
-                item = item.strip()
-                fm = re.fullmatch(r"(\w+)\s*\(\s*(\w+)\s*\)", item)
-                if fm:
-                    measures.setdefault(fm.group(2), []).append(fm.group(1).lower())
-                elif re.fullmatch(r"\w+", item):
-                    group_cols.append(item)
-                else:
-                    raise ValueError(f"CREATE AGGREGATETABLE: cannot parse {item!r}")
-            # the reference auto-names its aggregate tables; pick the
-            # first free autoN on this fact
-            existing = set(list_aggregate_tables(self.store, fact))
-            i = 0
-            while f"auto{i}" in existing:
-                i += 1
-            name = f"auto{i}"
-            create_aggregate_table(self.store, fact, name, group_cols, measures)
-            return self._rows([{"created": name}], "created string")
-
-        m = re.fullmatch(r"show (?:all )?cubes(?: in \w+)?( detail)?", s, _I)
-        if m and m.group(1):
-            rows = []
-            for t in self.store.tables():
-                segs = self.store.show_segments(t)
-                ok = [e for e in segs if e["status"] == SEGMENT_SUCCESS]
-                rows.append(
-                    {
-                        "cube_name": t,
-                        "valid_segments": len(ok),
-                        "rows": sum(e["rows"] or 0 for e in ok),
-                    }
-                )
-            return self._rows(rows, "cube_name string, valid_segments long, rows long")
-        if m:
+    def _show_aggregates(self, m: re.Match, t: str | None, names: dict[str, str]) -> DataFrame:
+        if t is not None:
             return self._rows(
-                [{"cube_name": t} for t in self.store.tables()], "cube_name string"
-            )
-
-        if re.fullmatch(r"show (?:schemas|databases)", s, _I):
-            return self._rows([{"namespace": "default"}], "namespace string")
-        if re.fullmatch(r"use \w+", s, _I):
-            # single-namespace store: USE is accepted for script parity
-            return self._rows([{"ok": True}], "ok boolean")
-
-        m = re.fullmatch(r"delete segments ([\d,\s]+) from table (\w+)", s, _I)
-        if m:
-            ids = [int(x) for x in m.group(1).replace(" ", "").split(",") if x]
-            n = self.store.delete_segments(self._resolve(m.group(2)), ids)
-            return self._rows([{"deleted": n}], "deleted long")
-
-        # Row-level IUD over store tables (copy-on-write segment rewrite,
-        # store.delete_rows/update_rows). Ordering matters: the
-        # load-retention form `DELETE FROM CUBE x WHERE f BEFORE 'd'`
-        # matched above, so a WHERE reaching here is a row predicate.
-        m = re.fullmatch(
-            r"delete from (?:table |cube )?(?:\w+\.)?(\w+) where (.+)", s, _I
-        )
-        if m and self._resolve(m.group(1)) in self.store.tables():
-            n = self.store.delete_rows(self._resolve(m.group(1)), m.group(2))
-            return self._rows([{"deleted_rows": n}], "deleted_rows long")
-
-        m = re.fullmatch(
-            r"update (?:table |cube )?(?:\w+\.)?(\w+) set (.+)", s, _I
-        )
-        if m and self._resolve(m.group(1)) in self.store.tables():
-            # the WHERE split must be quote-aware: UPDATE t SET
-            # note = 'x where y' carries the keyword inside a literal
-            # (ADVICE r11 — a lazy regex split produced a bogus parse)
-            rest = m.group(2)
-            wi = _find_keyword(rest, "where")
-            set_s = rest[:wi].strip() if wi >= 0 else rest
-            pred = rest[wi + len("where") :].strip() if wi >= 0 else "true"
-            assignments: dict[str, str] = {}
-            for item in _split_cols(set_s):
-                if "=" not in item:
-                    raise ValueError(f"UPDATE SET: cannot parse {item!r}")
-                c, expr = item.split("=", 1)
-                assignments[c.strip()] = expr.strip()
-            n = self.store.update_rows(self._resolve(m.group(1)), pred, assignments)
-            return self._rows([{"updated_rows": n}], "updated_rows long")
-
-        # MERGE INTO (upsert, store.merge_rows — beyond the reference
-        # era, like row-level IUD; the statement mirrors the modern SQL
-        # standard's MERGE in the shapes merge_rows supports). USING
-        # names a store table or a registered Spark view. ON is either a
-        # bare key list `ON (k1, k2)` or a same-column equality chain
-        # `ON t.k = s.k AND ...`. UPDATE SET supports `*` (all non-key
-        # columns from the source) or `c = s.c` self-assignments;
-        # computed updates need the merge_rows API. WHEN NOT MATCHED
-        # THEN INSERT * appends unmatched source rows; omitting WHEN
-        # MATCHED gives the insert-only (idempotent backfill) merge.
-        m = re.fullmatch(
-            r"merge into (?:\w+\.)?(\w+) using (?:\w+\.)?(\w+) on (.+?)"
-            r"( when matched then update set (?:\*|.+?))?"
-            r"( when not matched then insert \*)?",
-            s,
-            _I,
-        )
-        if m and self._resolve(m.group(1)) in self.store.tables():
-            return self._merge_stmt(
-                self._resolve(m.group(1)), m.group(2), m.group(3), m.group(4), m.group(5)
-            )
-
-        m = re.fullmatch(
-            r"delete segments from table (\w+) where starttime before '([^']+)'", s, _I
-        )
-        if m:
-            ts = datetime.fromisoformat(m.group(2)).replace(tzinfo=timezone.utc).timestamp()
-            n = self.store.delete_segments_by_date(m.group(1), ts)
-            return self._rows([{"deleted": n}], "deleted long")
-
-        m = re.fullmatch(r"show aggregate tables for table (\w+)", s, _I)
-        if m:
-            from carbondata_spark.plans.agg_table import list_aggregate_tables
-
-            return self._rows(
-                [{"aggregate_table": n} for n in list_aggregate_tables(self.store, m.group(1))],
+                [{"aggregate_table": n} for n in list_aggregate_tables(self.store, t)],
                 "aggregate_table string",
             )
+        rows = [
+            {"fact_table": fact, "aggregate_table": n}
+            for fact in names.values()
+            for n in list_aggregate_tables(self.store, fact)
+        ]
+        return self._rows(rows, "fact_table string, aggregate_table string")
 
-        m = re.fullmatch(r"drop aggregate table (\w+) on table (\w+)", s, _I)
-        if m:
-            from carbondata_spark.plans.agg_table import drop_aggregate_table
+    def _create_aggregate(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        if m["g"] is not None:
+            name = m["items"].strip()
+            if not re.fullmatch(r"\w+", name):
+                raise ValueError(f"CREATE AGGREGATETABLE: cannot parse {name!r}")
+            create_aggregate_table(self.store, t, name, _names(m["g"]), _measures(m["aggs"]))
+        else:
+            # the reference's own form lists group columns and agg(m)
+            # items together and auto-names the table
+            items = [i.strip() for i in _split_cols(m["items"])]
+            for item in items:
+                if not re.fullmatch(r"\w+|\w+\s*\(\s*\w+\s*\)", item):
+                    raise ValueError(f"CREATE AGGREGATETABLE: cannot parse {item!r}")
+            group_cols = [i for i in items if re.fullmatch(r"\w+", i)]
+            name = self._auto_aggregate(t, group_cols, _measures(m["items"]))
+        return self._rows([{"created": name}], "created string")
 
-            drop_aggregate_table(self.store, m.group(2), m.group(1))
-            return self._rows([{"dropped": m.group(1)}], "dropped string")
+    def _auto_aggregate(
+        self, fact: str, group_cols: list[str], measures: dict[str, list[str]]
+    ) -> str:
+        """Create the fact's aggregate table under the first free autoN
+        name (the reference auto-names its aggregate tables)."""
+        existing = set(list_aggregate_tables(self.store, fact))
+        name = next(f"auto{i}" for i in itertools.count() if f"auto{i}" not in existing)
+        create_aggregate_table(self.store, fact, name, group_cols, measures)
+        return name
 
-        m = re.fullmatch(
-            r"create aggregatetable (\w+) from table (\w+)"
-            r" group by \(([\w\s,]+)\) aggregates \((.+)\)",
-            s,
-            _I,
-        )
-        if m:
-            from carbondata_spark.plans.agg_table import create_aggregate_table
-
-            name, fact = m.group(1), m.group(2)
-            group_cols = [c.strip() for c in m.group(3).split(",")]
-            measures: dict[str, list[str]] = {}
-            for fn, col in re.findall(r"(\w+)\s*\(\s*(\w+)\s*\)", m.group(4)):
-                measures.setdefault(col, []).append(fn.lower())
-            create_aggregate_table(self.store, fact, name, group_cols, measures)
-            return self._rows([{"created": name}], "created string")
-
-        m = re.fullmatch(
-            r"load data (?:local )?inpath '([^']+)'( overwrite)? "
-            r"into (?:table|cube) (?:\w+\.)?(\w+)"
-            r"(?: options\s*\((.+)\))?",
-            s,
-            _I,
-        )
-        if m:
-            # OVERWRITE atomically invalidates all prior segments in the
-            # same manifest commit (loadDataNew,
-            # CarbonSqlParser.scala:795-805 isOverwrite)
-            seg_id = self._load_data(
-                m.group(1),
-                m.group(3),
-                _parse_options(m.group(4), strict=True),
-                mode="overwrite" if m.group(2) else "append",
+    def _show_cubes(self, m: re.Match, t: str | None, names: dict[str, str]) -> DataFrame:
+        if not m["detail"]:
+            return self._rows([{"cube_name": c} for c in names.values()], "cube_name string")
+        rows = []
+        for c in names.values():
+            ok = [e for e in self.store.show_segments(c) if e["status"] == SEGMENT_SUCCESS]
+            rows.append(
+                {
+                    "cube_name": c,
+                    "valid_segments": len(ok),
+                    "rows": sum(e["rows"] or 0 for e in ok),
+                }
             )
-            return self._rows([{"segment_id": seg_id}], "segment_id long")
+        return self._rows(rows, "cube_name string, valid_segments long, rows long")
 
-        # The legacy star-schema load (loadData,
-        # CarbonSqlParser.scala:779-793): LOAD DATA FACT FROM 'path'
-        # [OVERWRITE] INTO CUBE x [OPTIONS|PARTITIONDATA (...)] [FIELDS
-        # TERMINATED BY 'd']. The flat-table model folds dimensions into
-        # the fact (SURVEY.md §1), so DIMENSION FROM is rejected loudly
-        # rather than half-loaded.
-        if re.match(r"load data fact from", s, _I):
-            if re.search(r" dimension from ", s, _I):
+    # Row-level IUD over store tables (copy-on-write segment rewrite,
+    # store.delete_rows/update_rows/merge_rows). A table outside the
+    # store declines, so Spark answers for its own tables.
+
+    def _delete_rows(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame | None:
+        if t.lower() not in names:
+            return None
+        n = self.store.delete_rows(t, m["pred"])
+        return self._rows([{"deleted_rows": n}], "deleted_rows long")
+
+    def _update_rows(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame | None:
+        if t.lower() not in names:
+            return None
+        # the WHERE split must be quote-aware: UPDATE t SET note = 'x
+        # where y' carries the keyword inside a literal, which a regex
+        # split would take for the clause
+        rest = m["rest"]
+        wi = _find_keyword(rest, "where")
+        set_s = rest[:wi].strip() if wi >= 0 else rest
+        pred = rest[wi + len("where") :].strip() if wi >= 0 else "true"
+        assignments: dict[str, str] = {}
+        for item in _split_cols(set_s):
+            if "=" not in item:
+                raise ValueError(f"UPDATE SET: cannot parse {item!r}")
+            c, expr = item.split("=", 1)
+            assignments[c.strip()] = expr.strip()
+        n = self.store.update_rows(t, pred, assignments)
+        return self._rows([{"updated_rows": n}], "updated_rows long")
+
+    def _merge(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame | None:
+        """MERGE INTO → store.merge_rows (upsert — beyond the reference
+        era, like row-level IUD; the statement mirrors the modern SQL
+        standard's MERGE in the shapes merge_rows supports). USING names
+        a store table or a registered Spark view. ON is either a bare key
+        list ``ON (k1, k2)`` or a same-column equality chain
+        ``ON t.k = s.k AND ...``. UPDATE SET supports ``*`` (all non-key
+        columns from the source) or ``c = s.c`` self-assignments;
+        computed updates need the merge_rows API. WHEN NOT MATCHED THEN
+        INSERT * appends unmatched source rows; omitting WHEN MATCHED
+        gives the insert-only (idempotent backfill) merge. Column names
+        resolve case-insensitively like the rest of the dialect."""
+        if t.lower() not in names:
+            return None
+        source = m["src"]
+        if source.lower() in names:
+            src = self.store.table(names[source.lower()])
+        else:
+            try:
+                src = self.spark.table(source)
+            except Exception as exc:
                 raise ValueError(
-                    "LOAD DATA ... DIMENSION FROM is not supported: the "
-                    "flat-table model folds dimensions into the fact table "
-                    "(load them as columns of the fact CSV instead)"
+                    f"MERGE USING {source}: not a store table or a "
+                    "registered Spark view"
+                ) from exc
+        by_lower = {f.name.lower(): f.name for f in self.store.schema(t).fields}
+
+        def resolve(name: str, what: str) -> str:
+            actual = by_lower.get(name.lower())
+            if actual is None:
+                raise ValueError(f"MERGE {what}: {name} is not a column of {t}")
+            return actual
+
+        on_s = m["on"].strip()
+        keys: list[str] = []
+        lm = re.fullmatch(r"\(\s*(\w+(?:\s*,\s*\w+)*)\s*\)", on_s)
+        if lm:
+            keys = [resolve(c.strip(), "ON") for c in lm.group(1).split(",")]
+        else:
+            for part in re.split(r"\s+and\s+", on_s, flags=_I):
+                pm = re.fullmatch(
+                    r"\(?\s*(?:\w+\.)?(\w+)\s*=\s*(?:\w+\.)?(\w+)\s*\)?",
+                    part.strip(),
                 )
-            m = re.fullmatch(
-                # FROM'path' with no space is the spelling the reference's
-                # own test suite uses (AllDataTypesTestCaseAggregate.scala:50)
-                r"load data fact from\s*'([^']+)'( overwrite)? into cube (?:\w+\.)?(\w+)"
-                r"(?: (?:options|partitiondata)\s*\((.+?)\))?"
-                r"(?: fields terminated by '([^']+)')?",
-                s,
-                _I,
+                if not pm or pm.group(1).lower() != pm.group(2).lower():
+                    raise ValueError(
+                        f"MERGE ON: unsupported condition {part.strip()!r} — "
+                        "use a key list ON (k1, k2) or same-column "
+                        "equalities t.k = s.k [AND ...]"
+                    )
+                keys.append(resolve(pm.group(1), "ON"))
+        if m["matched"] is None and m["insert"] is None:
+            raise ValueError(
+                "MERGE needs WHEN MATCHED THEN UPDATE SET and/or "
+                "WHEN NOT MATCHED THEN INSERT *"
             )
-            if m:
-                opts = _parse_options(m.group(4), strict=True)
-                if m.group(5):
-                    opts.setdefault("delimiter", m.group(5))
-                seg_id = self._load_data(
-                    m.group(1),
-                    m.group(3),
-                    opts,
-                    mode="overwrite" if m.group(2) else "append",
-                )
-                return self._rows([{"segment_id": seg_id}], "segment_id long")
-
-        m = re.fullmatch(r"clean files for table (\w+)", s, _I)
-        if m:
-            removed = self.store.clean_files(self._resolve(m.group(1)))
-            return self._rows([{"removed_segment": r} for r in removed], "removed_segment long")
-
-        # ALTER CUBE — the reference's restructure statement
-        # (CarbonSqlParser.scala:731-776; clause grammar :226-250):
-        # ALTER CUBE [s.]c [DROP (cols)] [ADD [DIMENSIONS (...)]
-        # [MEASURES (...)] [WITH relations]] [OPTIONS (
-        # [NO_DICTIONARY(...)] [AGGREGATION[...]] [DEFAULTS [c=v, ...]])].
-        # WITH dimension relations are star-schema — rejected loudly,
-        # same treatment as LOAD DATA ... DIMENSION FROM.
-        m = re.fullmatch(
-            r"alter cube (?:(\w+)\.)?(\w+)"
-            r"(?: drop \(([^)]*)\))?"
-            r"( add(?: dimensions \((.+?)\))?(?: measures \((.+?)\))?"
-            r"( with .+?)?)?"
-            r"(?: options \((.+)\))?",
-            s,
-            _I,
+        update_cols: list[str] | None
+        if m["matched"] is None:
+            update_cols = []  # insert-only merge
+        else:
+            set_s = re.sub(
+                r"^\s*when matched then update set\s*", "", m["matched"], flags=_I
+            ).strip()
+            if set_s == "*":
+                update_cols = None
+            else:
+                update_cols = []
+                for item in _split_cols(set_s):
+                    am = re.fullmatch(
+                        r"\s*(?:\w+\.)?(\w+)\s*=\s*(?:\w+\.)?(\w+)\s*", item
+                    )
+                    if not am or am.group(1).lower() != am.group(2).lower():
+                        raise ValueError(
+                            "MERGE UPDATE SET: unsupported assignment "
+                            f"{item.strip()!r} — only c = s.c self-"
+                            "assignments or SET *; computed updates need "
+                            "the store.merge_rows API"
+                        )
+                    update_cols.append(resolve(am.group(1), "UPDATE SET"))
+        res = self.store.merge_rows(
+            t, src, keys, update_cols=update_cols, insert=m["insert"] is not None
         )
-        if (
-            m
-            and m.group(2) in self.store.tables()
-            and (m.group(3) or m.group(4) or m.group(8))
-        ):
-            return self._alter_cube(
-                cube=m.group(2),
-                drop_s=m.group(3),
-                has_add=bool(m.group(4)),
-                dims_s=m.group(5),
-                meas_s=m.group(6),
-                with_s=m.group(7),
-                opts_s=m.group(8),
-            )
+        return self._rows([res], "updated long, inserted long")
 
-        m = re.fullmatch(
-            r"alter table (\w+) add columns \((.+?)\)(?: defaults \((.+?)\))?", s, _I
+    def _load(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        # The flat-table model folds dimensions into the fact (SURVEY.md
+        # §1), so the legacy star-schema DIMENSION FROM file mapping
+        # (loadData, CarbonSqlParser.scala:779-793) is rejected loudly
+        # rather than half-loaded.
+        if m["dim"]:
+            raise ValueError(
+                "LOAD DATA ... DIMENSION FROM is not supported: the "
+                "flat-table model folds dimensions into the fact table "
+                "(load them as columns of the fact CSV instead)"
+            )
+        opts = _parse_options(m["opts"], strict=True)
+        if m["delim"]:
+            opts.setdefault("delimiter", m["delim"])
+        # OVERWRITE atomically invalidates all prior segments in the
+        # same manifest commit (loadDataNew,
+        # CarbonSqlParser.scala:795-805 isOverwrite)
+        seg_id = self._load_data(
+            m["path"], t, opts, mode="overwrite" if m["ow"] else "append"
         )
-        if m:
-            name, cols_s, defs_s = self._resolve(m.group(1)), m.group(2), m.group(3)
-            fields = []
-            for part in _split_cols(cols_s):
-                cname, ctype = part.strip().split(None, 1)
-                fields.append(T.StructField(cname, _parse_type(ctype)))
-            defaults = {}
-            if defs_s:
-                for pair in _split_cols(defs_s):
-                    k, v = pair.split("=", 1)
-                    defaults[k.strip()] = v.strip().strip("'\"")
-            self.store.alter_add_columns(name, fields, defaults=defaults)
-            return self._rows(
-                [{"added": f.name} for f in fields], "added string"
-            )
+        return self._rows([{"segment_id": seg_id}], "segment_id long")
 
-        m = re.fullmatch(r"alter table (\w+) drop columns \(([\w\s,]+)\)", s, _I)
-        if m:
-            cols = [c.strip() for c in m.group(2).split(",")]
-            self.store.alter_drop_columns(self._resolve(m.group(1)), cols)
-            return self._rows([{"dropped": c} for c in cols], "dropped string")
+    def _add_columns(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        fields = _fields(m["cols"])
+        self.store.alter_add_columns(t, fields, defaults=_defaults(m["defs"] or ""))
+        return self._rows([{"added": f.name} for f in fields], "added string")
 
-        m = re.fullmatch(r"alter table (\w+) compact", s, _I)
-        if m:
-            new_id = self.store.compact(self._resolve(m.group(1)))
-            return self._rows(
-                [{"new_segment": new_id if new_id is not None else -1}], "new_segment long"
-            )
+    def _drop_columns(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        cols = _names(m["cols"])
+        self.store.alter_drop_columns(t, cols)
+        return self._rows([{"dropped": c} for c in cols], "dropped string")
 
+    def _compact(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        new_id = self.store.compact(t)
+        return self._rows(
+            [{"new_segment": new_id if new_id is not None else -1}], "new_segment long"
+        )
+
+    def _describe(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
         # DESC is a full alias; plain DESCRIBE lists COLUMNS (the
         # reference routes it to Spark's DescribeCommand,
         # CarbonSqlParser.scala:1006-1021 — a Hive-style (col_name,
         # data_type, comment) listing, dims/measures annotated);
         # EXTENDED/FORMATTED appends the detailed-table-information
         # section (DescribeFormattedCommand) as (key, value) rows.
-        m = re.fullmatch(
-            r"(?:describe|desc)( formatted| extended)? (?:\w+\.)?(\w+)", s, _I
-        )
-        if m:
-            table = self._resolve(m.group(2))
-            d = self.store.describe(table)
-            # a NO_DICTIONARY / DICTIONARY_EXCLUDE column is still a
-            # DIMENSION — the reference tracks it as a no-dictionary dim,
-            # not a measure (TestCarbonSqlParser.scala:59-84 pins the
-            # split: dimCols vs noDictionary, both dimension-side)
-            props_d = d.get("properties", {}) or {}
-            dims = set(props_d.get("dictionary_include", "").split(","))
-            dims |= {
-                c for c in props_d.get("dictionary_exclude", "").split(",") if c
+        d = self.store.describe(t)
+        # a NO_DICTIONARY / DICTIONARY_EXCLUDE column is still a
+        # DIMENSION — the reference tracks it as a no-dictionary dim,
+        # not a measure (TestCarbonSqlParser.scala:59-84 pins the
+        # split: dimCols vs noDictionary, both dimension-side)
+        props_d = d.get("properties", {}) or {}
+        dims = set(props_d.get("dictionary_include", "").split(","))
+        dims |= {
+            c for c in props_d.get("dictionary_exclude", "").split(",") if c
+        }
+        rows = [
+            {
+                "col_name": f.name,
+                "data_type": f.dataType.simpleString(),
+                "comment": "dimension" if f.name in dims else "measure"
+                if dims != {""} else "",
             }
-            rows = [
-                {
-                    "col_name": f.name,
-                    "data_type": f.dataType.simpleString(),
-                    "comment": "dimension" if f.name in dims else "measure"
-                    if dims != {""} else "",
-                }
-                for f in self.store.schema(table).fields
+            for f in self.store.schema(t).fields
+        ]
+        if m["detail"]:
+            rows.append(
+                {"col_name": "# detailed table information", "data_type": "", "comment": ""}
+            )
+            rows += [
+                {"col_name": k, "data_type": str(v), "comment": ""}
+                for k, v in d.items()
             ]
-            if m.group(1):
-                rows.append(
-                    {"col_name": "# detailed table information", "data_type": "", "comment": ""}
-                )
-                rows += [
-                    {"col_name": k, "data_type": str(v), "comment": ""}
-                    for k, v in d.items()
-                ]
-            return self._rows(rows, "col_name string, data_type string, comment string")
+        return self._rows(rows, "col_name string, data_type string, comment string")
 
-        m = re.fullmatch(r"drop table (\w+)", s, _I)
-        if m:
-            self.store.drop_table(self._resolve(m.group(1)))
-            return self._rows([{"dropped": m.group(1)}], "dropped string")
+    def _created(self, t: str, created: bool) -> DataFrame:
+        """A CREATE's result: the new table, or no row when IF NOT EXISTS
+        found it already there."""
+        return self._rows([{"created": t}] if created else [], "created string")
 
-        # CREATE CUBE — the reference's primary DDL front door
-        # (CarbonSqlParser.scala:703-729; model cubeSchema.scala:107-126):
-        # an explicit dimension/measure split. Dimensions become the sort
-        # columns (MDKey clustering analogue) and are recorded in
-        # dictionary_include; integer MEASURES surface as double (the
-        # reference's `case "int" => "double"` coercion,
-        # CarbonDatasourceRelation.scala:194-208) via the existing
-        # int_measures_as_double property hook.
-        m = re.fullmatch(
-            # `dimensions(`/`measures(` with no space before the paren is
-            # how the reference's own tests spell it
-            # (AllDataTypesTestCaseAggregate.scala:41)
-            # MEASURES is optional in the reference grammar: its own
-            # typed suites create measure-less cubes (sortexpr/
-            # TimestampDataTypeTestCase.scala:36 `CREATE CUBE
-            # timestamptypecube DIMENSIONS (...) OPTIONS (...)`).
-            r"create cube (if not exists )?(?:\w+\.)?(\w+)"
-            r" dimensions\s*\((.+?)\)(?: measures\s*\((.+?)\))?"
-            r"(?: options\s*\((.+)\))?",
-            s,
-            _I,
-        )
-        if m:
-            exists_ok = bool(m.group(1))
-            name, dims_s = m.group(2), m.group(3)
-            meas_s = m.group(4) or ""
-            opts_s = m.group(5) or ""
-            if exists_ok and name in self.store.tables():
-                return self._rows([], "created string")
-            fields, dim_names, meas_names = [], [], []
-            dim_types: dict[str, T.DataType] = {}
-            for part in _split_cols(dims_s):
-                cname, ctype = part.strip().split(None, 1)
-                fields.append(T.StructField(cname, _parse_type(ctype)))
-                dim_names.append(cname)
-                dim_types[cname] = fields[-1].dataType
-            for part in _split_cols(meas_s) if meas_s else []:
-                cname, ctype = part.strip().split(None, 1)
-                fields.append(T.StructField(cname, _parse_type(ctype)))
-                meas_names.append(cname)
-            # The reference's structured OPTIONS clauses
-            # (CarbonSqlParser.scala — noDictionaryDims:975,
-            # aggregation:973, partitioner:983) carry bracketed payloads
-            # the flat k=v option parser cannot hold: lift them out
-            # first, parse the remainder as plain options.
-            if re.search(r"\bcolumn_groups\b", opts_s, _I):
-                # The reference carries COLUMN_GROUPS only as a
-                # TBLPROPERTIES key of the Hive-syntax CREATE TABLE
-                # (CarbonSqlParser.scala:461-490 reads it from
-                # tableProperties; the CREATE CUBE options parser,
-                # :283-311, accepts only AGGREGATION and PARTITIONER) —
-                # reject loudly instead of failing as unrecognized syntax.
-                raise ValueError(
-                    "COLUMN_GROUPS is not a CREATE CUBE option: use the "
-                    "Hive-syntax form CREATE TABLE ... STORED BY "
-                    "'org.apache.carbondata.format' TBLPROPERTIES "
-                    "('COLUMN_GROUPS'='(c1,c2),...'), where it is accepted "
-                    "and recorded. The row-major physical layout itself is "
-                    "subsumed by Parquet's columnar row-group encoding, so "
-                    "query results are identical with or without it."
-                )
-            part_cols, agg_exprs = None, None
-            props_extra: dict[str, str] = {}
-            pm = re.search(r"partitioner\s*\[(.*?)\]", opts_s, _I)
-            if pm:
-                body = pm.group(1)
-                cm = re.search(r"columns\s*=\s*\(([^)]*)\)", body, _I)
-                if cm:
-                    part_cols = [c.strip().strip("'\"") for c in cm.group(1).split(",")]
-                    unknown = [c for c in part_cols if c not in dim_names]
-                    if unknown:
-                        raise ValueError(
-                            f"PARTITIONER columns must be dimensions: {unknown}"
-                        )
-                km = re.search(r"class\s*=\s*'([^']*)'", body, _I)
-                if km:
-                    # recorded for round-tripping; hive partitioning on
-                    # the columns IS the hash-partitioner analogue here
-                    props_extra["partitioner_class"] = km.group(1)
-                nm = re.search(r"partition_count\s*=\s*(\d+)", body, _I)
-                if nm:
-                    props_extra["partition_count"] = nm.group(1)
-                opts_s = opts_s.replace(pm.group(0), "")
-            dm = re.search(r"no_dictionary\s*\(([^)]*)\)", opts_s, _I)
-            if dm:
-                props_extra["dictionary_exclude"] = ",".join(
-                    c.strip().strip("'\"") for c in dm.group(1).split(",")
-                )
-                opts_s = opts_s.replace(dm.group(0), "")
-            am = re.search(r"aggregation\s*\[(.*?)\]", opts_s, _I)
-            if am:
-                agg_exprs = am.group(1)
-                opts_s = opts_s.replace(am.group(0), "")
-            props = _parse_options(opts_s.strip().strip(",") or None)
-            props.update(props_extra)
-            excluded = set(props.get("dictionary_exclude", "").split(","))
-            props.setdefault(
-                "dictionary_include",
-                ",".join(c for c in dim_names if c not in excluded),
+    def _create_cube(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        """CREATE CUBE — the reference's primary DDL front door
+        (CarbonSqlParser.scala:703-729; model cubeSchema.scala:107-126):
+        an explicit dimension/measure split. Dimensions become the sort
+        columns (MDKey clustering analogue) and are recorded in
+        dictionary_include; integer MEASURES surface as double (the
+        reference's `case "int" => "double"` coercion,
+        CarbonDatasourceRelation.scala:194-208) via the existing
+        int_measures_as_double property hook."""
+        opts_s = m["opts"] or ""
+        if re.search(r"\bcolumn_groups\b", opts_s, _I):
+            # The reference carries COLUMN_GROUPS only as a TBLPROPERTIES
+            # key of the Hive-syntax CREATE TABLE
+            # (CarbonSqlParser.scala:461-490 reads it from
+            # tableProperties; the CREATE CUBE options parser, :283-311,
+            # accepts only AGGREGATION and PARTITIONER) — reject loudly
+            # instead of failing as unrecognized syntax.
+            raise ValueError(
+                "COLUMN_GROUPS is not a CREATE CUBE option: use the "
+                "Hive-syntax form CREATE TABLE ... STORED BY "
+                "'org.apache.carbondata.format' TBLPROPERTIES "
+                "('COLUMN_GROUPS'='(c1,c2),...'), where it is accepted "
+                "and recorded. The row-major physical layout itself is "
+                "subsumed by Parquet's columnar row-group encoding, so "
+                "query results are identical with or without it."
             )
-            props.setdefault("int_measures_as_double", "true")
-            self.store.create_table(
-                name,
-                T.StructType(fields),
-                # a hive-partition column is constant within its
-                # directory — sort on the remaining dims. MDKey analogue:
-                # NO_DICTIONARY (high-cardinality) dims sort AFTER the
-                # dictionary dims (TestCarbonSqlParser.scala:59-84 pins
-                # the dimCols/noDictionary split) — low-cardinality dims
-                # first keep long sorted runs for row-group pruning.
-                # DECIMAL dims are excluded from the sort/zone-map set:
-                # pyarrow cannot extract parquet column statistics for
-                # fixed-length decimals, so a decimal sort column would
-                # fail stats collection at load — the column stays fully
-                # queryable, it just contributes no segment pruning
-                # (matches the reference, whose MDKey covers dictionary
-                # dimensions only).
-                sort_columns=[
-                    c
-                    for c in dim_names
-                    if c not in excluded
-                    and c not in (part_cols or [])
-                    and not isinstance(dim_types[c], T.DecimalType)
-                ]
-                + [
-                    c
-                    for c in dim_names
-                    if c in excluded
-                    and c not in (part_cols or [])
-                    and not isinstance(dim_types[c], T.DecimalType)
-                ],
-                partition_columns=part_cols,
-                properties=props,
-            )
-            if agg_exprs:
-                # AGGREGATION [sum(x), ...] pre-declares the cube's
-                # rollup: an aggregate table over all dimensions,
-                # refreshed per load like any other (plans/agg_table)
-                from carbondata_spark.plans.agg_table import create_aggregate_table
-
-                measures: dict[str, list[str]] = {}
-                for fn_, col_ in re.findall(r"(\w+)\s*\(\s*(\w+)\s*\)", agg_exprs):
-                    measures.setdefault(col_, []).append(fn_.lower())
-                create_aggregate_table(self.store, name, "auto0", dim_names, measures)
-            return self._rows([{"created": name}], "created string")
-
-        m = re.fullmatch(r"drop cube (\w+)", s, _I)
-        if m:
-            self.store.drop_table(self._resolve(m.group(1)))
-            return self._rows([{"dropped": m.group(1)}], "dropped string")
-
-        # Hive-syntax CREATE TABLE ... STORED BY — the form migrating
-        # users actually have in scripts (CarbonSqlParser.scala:316-418
-        # nodeToPlan/prepareTableModel; run verbatim by
-        # ColumnGroupDataTypesTestCase.scala:34). Dimension/measure split
-        # per the reference rule (extractDimColsAndNoDictionaryFields /
-        # extractMsrColsFromFields, :532-630): string/array/struct
-        # columns are dimensions (DICTIONARY_EXCLUDE'd ones become
-        # no-dictionary dimensions), DICTIONARY_INCLUDE promotes numeric
-        # columns to dimensions, everything else is a measure.
-        m = re.fullmatch(
-            r"create table (if not exists )?(?:(\w+)\.)?(\w+)\s*\((.+?)\)"
-            r"(?: partitioned by \((.+?)\))?"
-            r" stored by '([^']+)'"
-            r"(?: tblproperties\s*\((.+)\))?",
-            s,
-            _I,
-        )
-        if m:
-            return self._create_table_hive(
-                exists_ok=bool(m.group(1)),
-                name=m.group(3),
-                cols_s=m.group(4),
-                part_s=m.group(5),
-                handler=m.group(6),
-                props_s=m.group(7),
-            )
-
-        m = re.fullmatch(
-            r"create table (\w+) \((.+?)\)"
-            r"(?: sorted by \(([\w\s,]+)\))?"
-            r"(?: partitioned by \(([\w\s,]+)\))?",
-            s,
-            _I,
-        )
-        if m:
-            name, cols_s, sort_s, part_s = m.group(1), m.group(2), m.group(3), m.group(4)
-            fields = []
-            for part in _split_cols(cols_s):
-                cname, ctype = part.strip().split(None, 1)
-                fields.append(T.StructField(cname, _parse_type(ctype)))
-            sort_cols = [c.strip() for c in sort_s.split(",")] if sort_s else None
-            if sort_cols:
-                # same decimal zone-map limitation as the CREATE CUBE path
-                # (pyarrow cannot read parquet decimal statistics)
-                types = {f.name.lower(): f.dataType for f in fields}
-                dropped = [
-                    c
-                    for c in sort_cols
-                    if isinstance(types.get(c.lower()), T.DecimalType)
-                ]
-                if dropped:
-                    import warnings
-
-                    warnings.warn(
-                        f"SORTED BY: decimal column(s) {dropped} cannot "
-                        "carry zone-map statistics and were dropped from "
-                        "the sort key",
-                        stacklevel=2,
+        dims = _fields(m["dims"])
+        dim_names = [f.name for f in dims]
+        props_extra: dict[str, str] = {}
+        # PARTITIONER [CLASS = '...', COLUMNS = (...), PARTITION_COUNT = n]
+        # (partitioner:983): hive partitioning on the columns IS the
+        # hash-partitioner analogue here; class and count are recorded
+        # for round-tripping
+        part, opts_s = _lift(opts_s, r"partitioner\s*\[(.*?)\]")
+        part_cols = None
+        if part is not None:
+            cm = re.search(r"columns\s*=\s*\(([^)]*)\)", part, _I)
+            if cm:
+                part_cols = _names(cm.group(1))
+                unknown = [c for c in part_cols if c not in dim_names]
+                if unknown:
+                    raise ValueError(
+                        f"PARTITIONER columns must be dimensions: {unknown}"
                     )
-                # an explicitly-empty remainder stays [] (user asked for
-                # THIS clustering; do not silently fall back to the
-                # default dims-sorted set by passing None)
-                sort_cols = [c for c in sort_cols if c not in dropped]
-            part_cols = [c.strip() for c in part_s.split(",")] if part_s else None
-            self.store.create_table(
-                name,
-                T.StructType(fields),
-                sort_columns=sort_cols,
-                partition_columns=part_cols,
-            )
-            return self._rows([{"created": name}], "created string")
-
-        # Rollup routing: a simple GROUP BY over a store fact table is
-        # answered from a matching aggregate table when derivable.
-        routed = self._try_rollup_route(s)
-        if routed is not None:
-            return routed
-
-        # Time travel in SQL: `FROM <t> AS OF TIMESTAMP '<iso>'` registers
-        # a view of the historical segment set (store.table(as_of_ts=...))
-        # under a mangled name and rewrites the reference — the SELECT
-        # surface for the manifest's invalidation timestamps.
-        by_lower = {t.lower(): t for t in self.store.tables()}
-        stmt_asof_views: set[str] = set()  # views THIS statement references
-
-        def _asof_sub(m: re.Match) -> str:
-            tname = by_lower[m.group(1).lower()]
-            dt = datetime.fromisoformat(m.group(2))
-            # honor an explicit offset; only ASSUME UTC for naive literals
-            # (replace() on an aware datetime would silently discard the
-            # offset and shift the historical view)
-            dt = dt.replace(tzinfo=timezone.utc) if dt.tzinfo is None else dt
-            ts = dt.timestamp()
-            view = f"{tname}_asof_{int(ts * 1000)}"
-            self.store.table(tname, as_of_ts=ts).createOrReplaceTempView(view)
-            self._asof_views.setdefault(tname, set()).add(view)
-            stmt_asof_views.add(view)
-            return view
-
-        s = re.sub(
-            r"\b(\w+) as of timestamp '([^']+)'",
-            lambda m: _asof_sub(m) if m.group(1).lower() in by_lower else m.group(0),
-            s,
-            flags=_I,
+            km = re.search(r"class\s*=\s*'([^']*)'", part, _I)
+            if km:
+                props_extra["partitioner_class"] = km.group(1)
+            nm = re.search(r"partition_count\s*=\s*(\d+)", part, _I)
+            if nm:
+                props_extra["partition_count"] = nm.group(1)
+        no_dict, agg_exprs, opts_s = _lift_dimension_options(opts_s)
+        if no_dict:
+            props_extra["dictionary_exclude"] = ",".join(no_dict)
+        props = _parse_options(opts_s.strip().strip(",") or None)
+        props.update(props_extra)
+        excluded = set(props.get("dictionary_exclude", "").split(","))
+        props.setdefault(
+            "dictionary_include",
+            ",".join(c for c in dim_names if c not in excluded),
         )
+        props.setdefault("int_measures_as_double", "true")
+        created = self.store.create_table(
+            t,
+            T.StructType(dims + _fields(m["meas"])),
+            sort_columns=_dimension_sort_key(
+                dim_names, excluded, part_cols or [], {f.name: f.dataType for f in dims}
+            ),
+            partition_columns=part_cols,
+            properties=props,
+            if_not_exists=bool(m["ine"]),
+        )
+        if created and agg_exprs:
+            # AGGREGATION [sum(x), ...] pre-declares the cube's rollup: an
+            # aggregate table over all dimensions, refreshed per load like
+            # any other (plans/agg_table)
+            self._auto_aggregate(t, dim_names, _measures(agg_exprs))
+        return self._created(t, created)
 
-        # passthrough: register ONLY the store tables the statement
-        # references as views, then run Spark SQL. Building a view is
-        # O(#segments) driver work (manifest read + per-segment scan
-        # union), so registering every table on every sql() call would be
-        # O(#tables × #segments) per statement; token matching keeps it
-        # proportional to the statement. False positives (a table name in
-        # a string literal) cost one extra view build, never correctness.
-        tokens = {tok.lower() for tok in re.findall(r"[A-Za-z_]\w*", s)}
-        for tname in self.store.tables():
-            if tname.lower() in tokens:
-                self.store.register_view(tname)
-        df = self.spark.sql(s)
-        # Bound catalog growth — a polling session issuing fresh
-        # timestamps would otherwise accumulate an analyzed
-        # union-of-segments plan per call, forever. Dropping is DEFERRED
-        # until after spark.sql() so a statement referencing the same
-        # table at two timestamps (snapshot diff) keeps both views live
-        # through analysis; spark.sql analyzes eagerly, so the returned
-        # DataFrame holds resolved relations and survives the drop.
-        if stmt_asof_views:
-            for views in self._asof_views.values():
-                for v in views - stmt_asof_views:
-                    self.spark.catalog.dropTempView(v)
-                views &= stmt_asof_views
-            self._asof_views = {t: v for t, v in self._asof_views.items() if v}
-        return df
+    def _create_table(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame:
+        if m["handler"] is not None:
+            return self._create_table_hive(m, t)
+        fields = _fields(m["cols"])
+        sort_cols = _names(m["sort"]) if m["sort"] else None
+        if sort_cols:
+            # same decimal zone-map limitation as the CREATE CUBE path
+            # (pyarrow cannot read parquet decimal statistics)
+            types = {f.name.lower(): f.dataType for f in fields}
+            dropped = [
+                c
+                for c in sort_cols
+                if isinstance(types.get(c.lower()), T.DecimalType)
+            ]
+            if dropped:
+                import warnings
+
+                warnings.warn(
+                    f"SORTED BY: decimal column(s) {dropped} cannot "
+                    "carry zone-map statistics and were dropped from "
+                    "the sort key",
+                    stacklevel=3,
+                )
+            # an explicitly-empty remainder stays [] (user asked for
+            # THIS clustering; do not silently fall back to the
+            # default dims-sorted set by passing None)
+            sort_cols = [c for c in sort_cols if c not in dropped]
+        created = self.store.create_table(
+            t,
+            T.StructType(fields),
+            sort_columns=sort_cols,
+            partition_columns=_names(m["parts"]) or None,
+            if_not_exists=bool(m["ine"]),
+        )
+        return self._created(t, created)
 
     # -- LOAD DATA ---------------------------------------------------------
 
@@ -1024,11 +837,6 @@ class CarbonSession:
                 "keywords + documented extensions) — refusing to silently "
                 "ignore a load-shaping option"
             )
-        # Cube names resolve case-insensitively, like the reference's
-        # Hive-backed catalog: its own sortexpr suite CREATEs
-        # alldatatypescubeSort and LOADs INTO alldatatypescubesort
-        # (AllDataTypesTestCaseSort.scala:36-37).
-        table = {t.lower(): t for t in self.store.tables()}.get(table.lower(), table)
         fmt = opts.get("format", "csv").lower()
         if fmt == "parquet":
             df = self.spark.read.parquet(path)
@@ -1131,9 +939,8 @@ class CarbonSession:
                     # (e.g. '{a,b}.csv'), or a glob matching only
                     # directories — the per-file validation has nothing
                     # to check, which must be said, not silently skipped
-                    # (r17 driver advice: this branch used to fall
-                    # through with neither an error nor the non-local
-                    # warning).
+                    # (neither an error nor the non-local warning would
+                    # otherwise tell the caller).
                     import warnings
 
                     warnings.warn(
@@ -1310,18 +1117,17 @@ class CarbonSession:
 
     # -- Hive-syntax CREATE TABLE ... STORED BY ------------------------------
 
-    def _create_table_hive(
-        self,
-        exists_ok: bool,
-        name: str,
-        cols_s: str,
-        part_s: str | None,
-        handler: str,
-        props_s: str | None,
-    ) -> DataFrame:
+    def _create_table_hive(self, m: re.Match, t: str) -> DataFrame:
         """CREATE TABLE ... STORED BY 'org.apache.carbondata.format'
         [TBLPROPERTIES (...)] — the reference's Hive-compatible DDL
-        (CarbonSqlParser.scala:316-418).
+        (CarbonSqlParser.scala:316-418), the form migrating users
+        actually have in scripts (run verbatim by
+        ColumnGroupDataTypesTestCase.scala:34). Dimension/measure split
+        per the reference rule (extractDimColsAndNoDictionaryFields /
+        extractMsrColsFromFields, :532-630): string/array/struct columns
+        are dimensions (DICTIONARY_EXCLUDE'd ones become no-dictionary
+        dimensions), DICTIONARY_INCLUDE promotes numeric columns to
+        dimensions, everything else is a measure.
 
         TBLPROPERTIES keys (quoted, case-insensitive):
 
@@ -1346,6 +1152,7 @@ class CarbonSession:
         (TOK_TABLEPARTCOLS, :380-390); they join the schema and become
         hive partition directories — the partitioner analogue.
         """
+        handler = m["handler"]
         if handler.strip().lower() != "org.apache.carbondata.format":
             # the reference sys.errors on any other storage handler
             # (CarbonSqlParser.scala:404-407 "Not a carbon format request")
@@ -1354,19 +1161,9 @@ class CarbonSession:
                 "only 'org.apache.carbondata.format' routes through the "
                 "carbon DDL"
             )
-        if exists_ok and name in self.store.tables():
-            return self._rows([], "created string")
-
-        fields: list[T.StructField] = []
-        for part in _split_cols(cols_s):
-            cname, ctype = part.strip().split(None, 1)
-            fields.append(T.StructField(cname, _parse_type(ctype)))
-        part_cols: list[str] = []
-        if part_s:
-            for part in _split_cols(part_s):
-                cname, ctype = part.strip().split(None, 1)
-                fields.append(T.StructField(cname, _parse_type(ctype)))
-                part_cols.append(cname)
+        part_fields = _fields(m["pcols"])
+        fields = _fields(m["cols"]) + part_fields
+        part_cols = [f.name for f in part_fields]
 
         # quote-aware split + per-piece validation: a malformed pair
         # (unquoted key, stray text, mismatched quote styles) must reach
@@ -1374,7 +1171,7 @@ class CarbonSession:
         # TBLPROPERTIES (COLUMN_GROUPS='(a,b)') with an unquoted key
         # would otherwise create the table with the property ignored
         tbl_props: dict[str, str] = {}
-        for piece in _split_cols(props_s or ""):
+        for piece in _split_cols(m["props"] or ""):
             if not piece.strip():
                 continue
             pm = re.fullmatch(
@@ -1402,21 +1199,13 @@ class CarbonSession:
             )
 
         by_name = {f.name.lower(): f for f in fields}
-        dict_include = [
-            c.strip()
-            for c in tbl_props.get("dictionary_include", "").split(",")
-            if c.strip()
-        ]
-        dict_exclude = [
-            c.strip()
-            for c in tbl_props.get("dictionary_exclude", "").split(",")
-            if c.strip()
-        ]
+        dict_include = _names(tbl_props.get("dictionary_include"))
+        dict_exclude = _names(tbl_props.get("dictionary_exclude"))
         for c in dict_include + dict_exclude:
             if c.lower() not in by_name:
                 raise ValueError(
                     f"DICTIONARY_INCLUDE/EXCLUDE column {c} is not a "
-                    f"column of {name}"
+                    f"column of {t}"
                 )
 
         def _stringish(f: T.StructField) -> bool:
@@ -1433,7 +1222,7 @@ class CarbonSession:
             c for c in dict_exclude if _stringish(by_name[c.lower()])
         ]
 
-        excl = {c.lower() for c in dict_exclude}
+        no_dict = {by_name[c.lower()].name for c in dict_exclude}
         incl = {c.lower() for c in dict_include}
         dims = [
             f.name
@@ -1442,9 +1231,7 @@ class CarbonSession:
         ]
 
         props: dict[str, str] = {
-            "dictionary_include": ",".join(
-                d for d in dims if d.lower() not in excl
-            ),
+            "dictionary_include": ",".join(d for d in dims if d not in no_dict),
             # reference quirk preserved for drop-in parity: integer
             # MEASURES surface as double (CarbonDatasourceRelation.scala:
             # 194-208) on every carbon DDL path, Hive-syntax included
@@ -1471,7 +1258,7 @@ class CarbonSession:
                     if member.lower() not in by_name:
                         raise ValueError(
                             f"COLUMN_GROUPS member {member} is not a "
-                            f"column of {name}"
+                            f"column of {t}"
                         )
                     if member.lower() not in dims_l:
                         raise ValueError(
@@ -1489,91 +1276,55 @@ class CarbonSession:
                 for g in groups
             )
 
-        # MDKey analogue: dictionary dimensions form the sort prefix, the
-        # no-dictionary (high-cardinality) dims are appended AFTER them —
-        # the reference's own parser test pins the split
-        # (TestCarbonSqlParser.scala:59-84: dimCols=[col3,col4] with the
-        # excluded col2 tracked separately). Clustering-wise this is also
-        # the right 100 TB order: low-cardinality dims first give long
-        # sorted runs; a high-cardinality prefix would destroy them.
-        dict_dims = [d for d in dims if d.lower() not in excl]
-        no_dict_dims = [d for d in dims if d.lower() in excl]
-        # decimal dims excluded from the sort/zone-map set, like the
-        # CREATE CUBE path (pyarrow cannot read parquet decimal stats)
-        ftypes = {f.name: f.dataType for f in fields}
-        self.store.create_table(
-            name,
+        created = self.store.create_table(
+            t,
             T.StructType(fields),
-            sort_columns=[
-                d
-                for d in dict_dims + no_dict_dims
-                if d not in part_cols
-                and not isinstance(ftypes.get(d), T.DecimalType)
-            ],
+            sort_columns=_dimension_sort_key(
+                dims, no_dict, part_cols, {f.name: f.dataType for f in fields}
+            ),
             partition_columns=part_cols or None,
             properties=props,
+            if_not_exists=bool(m["ine"]),
         )
-        return self._rows([{"created": name}], "created string")
+        return self._created(t, created)
 
     # -- ALTER CUBE ----------------------------------------------------------
 
-    def _alter_cube(
-        self,
-        cube: str,
-        drop_s: str | None,
-        has_add: bool,
-        dims_s: str | None,
-        meas_s: str | None,
-        with_s: str | None,
-        opts_s: str | None,
-    ) -> DataFrame:
-        """ALTER CUBE (CarbonSqlParser.scala:731-776): DROP drops columns
-        from reads of every segment; ADD DIMENSIONS/MEASURES appends
-        columns visible over old segments with OPTIONS(DEFAULTS[...])
-        values (the reference's restructure default-fill,
-        RestructureUtil); added dimensions join dictionary_include so
-        DESCRIBE keeps annotating them; added integer measures follow the
-        table's int→double parity quirk. OPTIONS clauses: DEFAULTS
-        [col=val, ...] must name added columns; NO_DICTIONARY(...) must
-        name added string dimensions — accepted and validated, with no
-        physical effect to record: the global dictionary is designed out,
-        Parquet dictionary-encodes per column chunk automatically;
-        AGGREGATION [agg(col), ...] declares the next auto-named rollup
-        over the cube's dimensions, same as CREATE AGGREGATETABLE."""
-        cube = self._resolve(cube)
-        if with_s:
+    def _alter_cube(self, m: re.Match, t: str, names: dict[str, str]) -> DataFrame | None:
+        """ALTER CUBE (CarbonSqlParser.scala:731-776; clause grammar
+        :226-250): DROP drops columns from reads of every segment; ADD
+        DIMENSIONS/MEASURES appends columns visible over old segments
+        with OPTIONS(DEFAULTS[...]) values (the reference's restructure
+        default-fill, RestructureUtil); added dimensions join
+        dictionary_include so DESCRIBE keeps annotating them; added
+        integer measures follow the table's int→double parity quirk.
+        OPTIONS clauses: DEFAULTS [col=val, ...] must name added columns;
+        NO_DICTIONARY(...) must name added string dimensions — accepted
+        and validated, with no physical effect to record: the global
+        dictionary is designed out, Parquet dictionary-encodes per column
+        chunk automatically; AGGREGATION [agg(col), ...] declares the
+        next auto-named rollup over the cube's dimensions, same as
+        CREATE AGGREGATETABLE. WITH dimension relations are star-schema
+        — rejected loudly, same treatment as LOAD DATA ... DIMENSION
+        FROM. A statement with no clause is not this one: it declines."""
+        if not (m["drop"] or m["add"] or m["opts"]):
+            return None
+        if m["with"]:
             raise ValueError(
                 "ALTER CUBE ... WITH dimension relations is not supported: "
                 "the flat-table model folds dimensions into the fact table "
                 "(add them as plain columns instead)"
             )
-        if has_add and not (dims_s or meas_s):
+        if m["add"] and not (m["dims"] or m["meas"]):
             # mirror the reference's loud empty-ADD error (:745-747)
             raise ValueError(
                 "empty ADD definition found. Please provide the "
                 "dimensions/measures to be added."
             )
 
-        opts_s = opts_s or ""
-        no_dict: list[str] = []
-        dm = re.search(r"no_dictionary\s*\(([^)]*)\)", opts_s, _I)
-        if dm:
-            no_dict = [c.strip().strip("'\"") for c in dm.group(1).split(",") if c.strip()]
-            opts_s = opts_s.replace(dm.group(0), "")
-        agg_exprs: str | None = None
-        am = re.search(r"aggregation\s*\[(.*?)\]", opts_s, _I)
-        if am:
-            agg_exprs = am.group(1)
-            opts_s = opts_s.replace(am.group(0), "")
-        defaults: dict[str, str] = {}
-        fm = re.search(r"defaults\s*\[(.*?)\]", opts_s, _I)
-        if fm:
-            for pair in _split_cols(fm.group(1)):
-                if "=" not in pair:
-                    raise ValueError(f"DEFAULTS: cannot parse {pair!r}")
-                k, v = pair.split("=", 1)
-                defaults[k.strip()] = v.strip().strip("'\"")
-            opts_s = opts_s.replace(fm.group(0), "")
+        no_dict, agg_exprs, opts_s = _lift_dimension_options(m["opts"] or "")
+        fills, opts_s = _lift(opts_s, r"defaults\s*\[(.*?)\]")
+        defaults = _defaults(fills or "")
         if opts_s.strip(" ,"):
             raise ValueError(
                 f"ALTER CUBE OPTIONS: unrecognized {opts_s.strip(' ,')!r} "
@@ -1582,28 +1333,22 @@ class CarbonSession:
             )
 
         actions: list[dict[str, str]] = []
-        if drop_s:
-            cols = [c.strip().strip("'\"") for c in drop_s.split(",") if c.strip()]
-            self.store.alter_drop_columns(cube, cols)
+        if m["drop"]:
+            cols = _names(m["drop"])
+            self.store.alter_drop_columns(t, cols)
             actions += [{"action": "dropped", "column": c} for c in cols]
 
-        add_dims: list[T.StructField] = []
-        add_meas: list[T.StructField] = []
-        if dims_s:
-            for part in _split_cols(dims_s):
-                cname, ctype = part.strip().split(None, 1)
-                add_dims.append(T.StructField(cname, _parse_type(ctype)))
-        if meas_s:
-            props = self.store.describe(cube).get("properties", {}) or {}
-            coerce = props.get("int_measures_as_double", "false").lower() == "true"
-            for part in _split_cols(meas_s):
-                cname, ctype = part.strip().split(None, 1)
-                dt = _parse_type(ctype)
-                if coerce and isinstance(
-                    dt, (T.IntegerType, T.LongType, T.ShortType)
-                ):
-                    dt = T.DoubleType()
-                add_meas.append(T.StructField(cname, dt))
+        add_dims = _fields(m["dims"])
+        add_meas = _fields(m["meas"])
+        if add_meas:
+            props = self.store.describe(t).get("properties", {}) or {}
+            if props.get("int_measures_as_double", "false").lower() == "true":
+                add_meas = [
+                    T.StructField(f.name, T.DoubleType())
+                    if isinstance(f.dataType, (T.IntegerType, T.LongType, T.ShortType))
+                    else f
+                    for f in add_meas
+                ]
         if add_dims or add_meas:
             added = {f.name for f in add_dims + add_meas}
             unknown = sorted(set(defaults) - added)
@@ -1635,21 +1380,17 @@ class CarbonSession:
                     "NO_DICTIONARY applies only to string/complex "
                     f"dimensions: {bad_type}"
                 )
-            self.store.alter_add_columns(cube, add_dims + add_meas, defaults=defaults)
+            self.store.alter_add_columns(t, add_dims + add_meas, defaults=defaults)
             if add_dims:
                 # keep DESCRIBE's dimension annotation + future sort
                 # behavior consistent: added dims join dictionary_include
                 from carbondata_spark.lock import file_lock
 
                 excl = {c.lower() for c in no_dict}
-                with file_lock(self.store._schema_path(cube)):
-                    meta = self.store._read_schema(cube)
+                with file_lock(self.store._schema_path(t)):
+                    meta = self.store._read_schema(t)
                     tprops = meta.setdefault("properties", {})
-                    cur = [
-                        c
-                        for c in tprops.get("dictionary_include", "").split(",")
-                        if c
-                    ]
+                    cur = _names(tprops.get("dictionary_include"))
                     tprops["dictionary_include"] = ",".join(
                         cur
                         + [
@@ -1659,15 +1400,11 @@ class CarbonSession:
                         ]
                     )
                     if no_dict:
-                        cur_ex = [
-                            c
-                            for c in tprops.get("dictionary_exclude", "").split(",")
-                            if c
-                        ]
+                        cur_ex = _names(tprops.get("dictionary_exclude"))
                         tprops["dictionary_exclude"] = ",".join(
                             cur_ex + [c for c in no_dict if c not in cur_ex]
                         )
-                    self.store._write_schema(cube, meta)
+                    self.store._write_schema(t, meta)
             actions += [
                 {"action": "added", "column": f.name} for f in add_dims + add_meas
             ]
@@ -1677,122 +1414,31 @@ class CarbonSession:
             )
 
         if agg_exprs:
-            from carbondata_spark.plans.agg_table import (
-                create_aggregate_table,
-                list_aggregate_tables,
-            )
-
-            props = self.store.describe(cube).get("properties", {}) or {}
-            dims = [
-                c for c in props.get("dictionary_include", "").split(",") if c
-            ]
+            props = self.store.describe(t).get("properties", {}) or {}
+            dims = _names(props.get("dictionary_include"))
             if not dims:
                 raise ValueError(
                     "ALTER CUBE AGGREGATION: cube has no recorded "
                     "dimensions to group the rollup by"
                 )
-            measures: dict[str, list[str]] = {}
-            for fn_, col_ in re.findall(r"(\w+)\s*\(\s*(\w+)\s*\)", agg_exprs):
-                measures.setdefault(col_, []).append(fn_.lower())
-            existing = set(list_aggregate_tables(self.store, cube))
-            i = 0
-            while f"auto{i}" in existing:
-                i += 1
-            create_aggregate_table(self.store, cube, f"auto{i}", dims, measures)
-            actions.append({"action": "aggregation", "column": f"auto{i}"})
+            name = self._auto_aggregate(t, dims, _measures(agg_exprs))
+            actions.append({"action": "aggregation", "column": name})
 
         return self._rows(actions, "action string, column string")
 
-    def _merge_stmt(
-        self,
-        table: str,
-        source_name: str,
-        on_s: str,
-        matched_s: str | None,
-        notmatched_s: str | None,
-    ) -> DataFrame:
-        """MERGE INTO route → store.merge_rows (see the router comment
-        for the supported grammar). Identifiers resolve case-
-        insensitively like the rest of the dialect."""
-        if source_name in self.store.tables():
-            src = self.store.table(source_name)
-        else:
-            try:
-                src = self.spark.table(source_name)
-            except Exception as exc:
-                raise ValueError(
-                    f"MERGE USING {source_name}: not a store table or a "
-                    "registered Spark view"
-                ) from exc
-        by_lower = {f.name.lower(): f.name for f in self.store.schema(table).fields}
+    # -- rollup routing and the passthrough ----------------------------------
 
-        def resolve(name: str, what: str) -> str:
-            actual = by_lower.get(name.lower())
-            if actual is None:
-                raise ValueError(f"MERGE {what}: {name} is not a column of {table}")
-            return actual
-
-        on_s = on_s.strip()
-        keys: list[str] = []
-        lm = re.fullmatch(r"\(\s*(\w+(?:\s*,\s*\w+)*)\s*\)", on_s)
-        if lm:
-            keys = [resolve(c.strip(), "ON") for c in lm.group(1).split(",")]
-        else:
-            for part in re.split(r"\s+and\s+", on_s, flags=_I):
-                pm = re.fullmatch(
-                    r"\(?\s*(?:\w+\.)?(\w+)\s*=\s*(?:\w+\.)?(\w+)\s*\)?",
-                    part.strip(),
-                )
-                if not pm or pm.group(1).lower() != pm.group(2).lower():
-                    raise ValueError(
-                        f"MERGE ON: unsupported condition {part.strip()!r} — "
-                        "use a key list ON (k1, k2) or same-column "
-                        "equalities t.k = s.k [AND ...]"
-                    )
-                keys.append(resolve(pm.group(1), "ON"))
-        if matched_s is None and notmatched_s is None:
-            raise ValueError(
-                "MERGE needs WHEN MATCHED THEN UPDATE SET and/or "
-                "WHEN NOT MATCHED THEN INSERT *"
-            )
-        update_cols: list[str] | None
-        if matched_s is None:
-            update_cols = []  # insert-only merge
-        else:
-            set_s = re.sub(
-                r"^\s*when matched then update set\s*", "", matched_s, flags=_I
-            ).strip()
-            if set_s == "*":
-                update_cols = None
-            else:
-                update_cols = []
-                for item in _split_cols(set_s):
-                    am = re.fullmatch(
-                        r"\s*(?:\w+\.)?(\w+)\s*=\s*(?:\w+\.)?(\w+)\s*", item
-                    )
-                    if not am or am.group(1).lower() != am.group(2).lower():
-                        raise ValueError(
-                            "MERGE UPDATE SET: unsupported assignment "
-                            f"{item.strip()!r} — only c = s.c self-"
-                            "assignments or SET *; computed updates need "
-                            "the store.merge_rows API"
-                        )
-                    update_cols.append(resolve(am.group(1), "UPDATE SET"))
-        res = self.store.merge_rows(
-            table, src, keys, update_cols=update_cols, insert=notmatched_s is not None
-        )
-        return self._rows([res], "updated long, inserted long")
-
-    # -- rollup routing ----------------------------------------------------
-
-    def _try_rollup_route(self, s: str) -> DataFrame | None:
+    def _try_rollup_route(self, s: str, names: dict[str, str]) -> DataFrame | None:
         """Answer ``SELECT <dims|aggs> FROM <fact> [WHERE <dim preds>]
         GROUP BY <dims>`` from a matching aggregate table
         (plans/agg_table.rewrite_aggregate algebra). Returns None when the
         statement is not that shape, the table has no rollups, or an
         aggregate is not derivable — the caller then falls through to the
         normal Spark SQL passthrough, so routing is always
-        semantics-preserving.
+        semantics-preserving. The fact must be spelled exactly as stored:
+        a routed result names unaliased aggregates ``<fn>_<col>``, not
+        Spark's ``<fn>(<col>)``, so a case-mismatched spelling keeps
+        Spark's answer and its column names.
 
         WHERE routing rule: every column the predicate references must be
         a dimension of the chosen rollup (filter cols join the required
@@ -1802,15 +1448,13 @@ class CarbonSession:
         predicate touching a measure (or anything not a fact column)
         disqualifies routing."""
         m = re.fullmatch(
-            r"select (.+?) from (\w+)(?: where (.+))? group by ([\w\s,]+)", s, _I
+            r"select (.+?) from (\w+)(?: where (.+))? group by ([\w\s,]+)", s, _I | re.S
         )
         if not m:
             return None
         fact, where_s = m.group(2), m.group(3)
-        if fact not in self.store.tables():
+        if names.get(fact.lower()) != fact:
             return None
-        from carbondata_spark.plans.agg_table import choose_rollup
-
         group_cols = [c.strip() for c in m.group(4).split(",")]
         filter_cols: set[str] = set()
         if where_s:
@@ -1872,24 +1516,106 @@ class CarbonSession:
         res = summary.groupBy(*group_cols).agg(*aggs)
         return res.select(*[F.col(alias) for _, _, alias in out_cols])
 
+    def _passthrough(self, s: str, names: dict[str, str]) -> DataFrame:
+        """Spark SQL over the store's tables registered as views."""
+        # Time travel in SQL: `FROM <t> AS OF TIMESTAMP '<iso>'` registers
+        # a view of the historical segment set (store.table(as_of_ts=...))
+        # under a mangled name and rewrites the reference — the SELECT
+        # surface for the manifest's invalidation timestamps.
+        stmt_asof_views: set[str] = set()  # views THIS statement references
+
+        def _asof_sub(m: re.Match) -> str:
+            tname = names.get(m.group(1).lower())
+            if tname is None:
+                return m.group(0)
+            dt = datetime.fromisoformat(m.group(2))
+            # honor an explicit offset; only ASSUME UTC for naive literals
+            # (replace() on an aware datetime would silently discard the
+            # offset and shift the historical view)
+            dt = dt.replace(tzinfo=timezone.utc) if dt.tzinfo is None else dt
+            ts = dt.timestamp()
+            view = f"{tname}_asof_{int(ts * 1000)}"
+            self.store.table(tname, as_of_ts=ts).createOrReplaceTempView(view)
+            self._asof_views.setdefault(tname, set()).add(view)
+            stmt_asof_views.add(view)
+            return view
+
+        s = re.sub(r"\b(\w+) as of timestamp '([^']+)'", _asof_sub, s, flags=_I)
+
+        # register ONLY the store tables the statement references as
+        # views, then run Spark SQL. Building a view is O(#segments)
+        # driver work (manifest read + per-segment scan union), so
+        # registering every table on every sql() call would be
+        # O(#tables × #segments) per statement; token matching keeps it
+        # proportional to the statement. False positives (a table name in
+        # a string literal) cost one extra view build, never correctness.
+        tokens = {tok.lower() for tok in re.findall(r"[A-Za-z_]\w*", s)}
+        for lower, tname in names.items():
+            if lower in tokens:
+                self.store.register_view(tname)
+        df = self.spark.sql(s)
+        # Bound catalog growth — a polling session issuing fresh
+        # timestamps would otherwise accumulate an analyzed
+        # union-of-segments plan per call, forever. Dropping is DEFERRED
+        # until after spark.sql() so a statement referencing the same
+        # table at two timestamps (snapshot diff) keeps both views live
+        # through analysis; spark.sql analyzes eagerly, so the returned
+        # DataFrame holds resolved relations and survives the drop.
+        if stmt_asof_views:
+            for views in self._asof_views.values():
+                for v in views - stmt_asof_views:
+                    self.spark.catalog.dropTempView(v)
+                views &= stmt_asof_views
+            self._asof_views = {t: v for t, v in self._asof_views.items() if v}
+        return df
+
+
+def _quoted(s: str) -> Iterator[tuple[int, str, bool]]:
+    """(index, char, inside a quoted literal) for each character of
+    ``s``; both quote characters of a literal count as inside. Single
+    and double quotes delimit literals. A quote escaped by doubling ('')
+    closes and reopens the literal, so it needs no special case."""
+    quote: str | None = None
+    for i, ch in enumerate(s):
+        if quote:
+            if ch == quote:
+                quote = None
+            yield i, ch, True
+        elif ch in "'\"":
+            quote = ch
+            yield i, ch, True
+        else:
+            yield i, ch, False
+
+
+def _squash(s: str) -> str:
+    """Collapse each whitespace run outside quoted literals to one space
+    and trim the ends, so the patterns can spell a gap as one space;
+    literals keep their whitespace byte for byte."""
+    out: list[str] = []
+    gap = False
+    for _, ch, quoted in _quoted(s):
+        if ch.isspace() and not quoted:
+            gap = bool(out)
+            continue
+        if gap:
+            out.append(" ")
+            gap = False
+        out.append(ch)
+    return "".join(out)
+
 
 def _split_cols(s: str) -> list[str]:
     """Split a column list on commas not inside <> or () (decimal(10,2),
     array<...>) and not inside string literals (UPDATE ... SET
     c = 'a, b', ...)."""
     out, depth, cur = [], 0, []
-    quote: str | None = None
-    for ch in s:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch in "<(":
+    for _, ch, quoted in _quoted(s):
+        if not quoted and ch in "<(":
             depth += 1
-        elif ch in ">)":
+        elif not quoted and ch in ">)":
             depth -= 1
-        if ch == "," and depth == 0 and quote is None:
+        if ch == "," and depth == 0 and not quoted:
             out.append("".join(cur))
             cur = []
         else:
@@ -1901,17 +1627,92 @@ def _split_cols(s: str) -> list[str]:
 
 def _find_keyword(s: str, kw: str) -> int:
     """Index of the first whole-word ``kw`` outside single/double-quoted
-    string literals (case-insensitive), or -1. A quote escaped by
-    doubling ('') toggles the state twice and lands back inside the
-    literal, so no special case is needed."""
+    string literals (case-insensitive), or -1."""
     pat = re.compile(rf"\b{kw}\b", _I)
-    quote: str | None = None
-    for i, ch in enumerate(s):
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif pat.match(s, i):
+    for i, _, quoted in _quoted(s):
+        if not quoted and pat.match(s, i):
             return i
     return -1
+
+
+# A table name: the named group ``t`` that CarbonSession.sql resolves
+# against the store, after an optional schema qualifier the
+# single-namespace store ignores.
+_T = r"(?:\w+\.)?(?P<t>\w+)"
+
+# One entry per statement, tried in order; the first whose pattern
+# matches the whole (whitespace-squashed) statement answers it, unless
+# its handler returns None. Patterns match case-insensitively, and `.`
+# also matches a newline kept inside a quoted literal.
+_ROUTES = [
+    (re.compile(p, _I | re.S), handler)
+    for p, handler in [
+        (r"show tables", lambda self, m, t, names: self._rows(
+            [{"table_name": n} for n in names.values()], "table_name string")),
+        (rf"show (?:segments|loads) for (?:table|cube) {_T}(?: limit (?P<n>\d+))?",
+         CarbonSession._show_segments),
+        (rf"delete (?:load|segments) (?P<ids>[\d,\s]+) from (?:table|cube) {_T}",
+         CarbonSession._delete_segments),
+        (rf"delete (?:segments )?from (?:table|cube) {_T}"
+         r" where (?P<col>\w+) before '(?P<ts>[^']+)'",
+         CarbonSession._delete_before),
+        (rf"clean files for (?:table|cube) {_T}", CarbonSession._clean_files),
+        (rf"show create cube {_T}.*", CarbonSession._show_create_cube),
+        (rf"drop (?:table|cube) (?P<ie>if exists )?{_T}", CarbonSession._drop),
+        (rf"drop aggregate table (?P<ie>if exists )?(?:(?P<q>\w+)\.)?(?P<a>\w+)"
+         rf"(?: on (?:table|cube) {_T})?",
+         CarbonSession._drop_aggregate),
+        (rf"show aggregate tables(?: in \w+| for (?:table|cube) {_T})?",
+         CarbonSession._show_aggregates),
+        # `<name> ... GROUP BY (...) AGGREGATES (...)`, or the reference's
+        # auto-named `<dims and agg(m)s> FROM ...`
+        (rf"create aggregatetable (?P<items>.+?) from (?:table|cube) {_T}"
+         r"(?: group by \((?P<g>[\w\s,]+)\) aggregates \((?P<aggs>.+)\))?",
+         CarbonSession._create_aggregate),
+        (r"show (?:all )?cubes(?: in \w+)?(?P<detail> detail)?", CarbonSession._show_cubes),
+        (r"show (?:schemas|databases)", lambda self, m, t, names: self._rows(
+            [{"namespace": "default"}], "namespace string")),
+        # single-namespace store: USE is accepted for script parity
+        (r"use \w+", lambda self, m, t, names: self._rows([{"ok": True}], "ok boolean")),
+        (rf"delete from (?:table |cube )?{_T} where (?P<pred>.+)", CarbonSession._delete_rows),
+        (rf"update (?:table |cube )?{_T} set (?P<rest>.+)", CarbonSession._update_rows),
+        (rf"merge into {_T} using (?:\w+\.)?(?P<src>\w+) on (?P<on>.+?)"
+         r"(?P<matched> when matched then update set (?:\*|.+?))?"
+         r"(?P<insert> when not matched then insert \*)?",
+         CarbonSession._merge),
+        # FROM'path' with no space is the spelling the reference's own
+        # test suite uses (AllDataTypesTestCaseAggregate.scala:50)
+        (r"load data (?:(?:local )?inpath|fact from)\s*'(?P<path>[^']+)'"
+         r"(?P<dim> dimension from .+?)?(?P<ow> overwrite)?"
+         rf" into (?:table|cube) {_T}"
+         r"(?: (?:options|partitiondata)\s*\((?P<opts>.+?)\))?"
+         r"(?: fields terminated by '(?P<delim>[^']+)')?",
+         CarbonSession._load),
+        (rf"alter cube {_T}"
+         r"(?: drop \((?P<drop>[^)]*)\))?"
+         r"(?P<add> add(?: dimensions \((?P<dims>.+?)\))?(?: measures \((?P<meas>.+?)\))?"
+         r"(?P<with> with .+?)?)?"
+         r"(?: options \((?P<opts>.+)\))?",
+         CarbonSession._alter_cube),
+        (rf"alter table {_T} add columns \((?P<cols>.+?)\)(?: defaults \((?P<defs>.+?)\))?",
+         CarbonSession._add_columns),
+        (rf"alter table {_T} drop columns \((?P<cols>[\w\s,]+)\)", CarbonSession._drop_columns),
+        (rf"alter table {_T} compact", CarbonSession._compact),
+        (rf"(?:describe|desc)(?P<detail> formatted| extended)? {_T}", CarbonSession._describe),
+        # `dimensions(`/`measures(` with no space before the paren is how
+        # the reference's own tests spell it
+        # (AllDataTypesTestCaseAggregate.scala:41); MEASURES is optional:
+        # its typed suites create measure-less cubes
+        # (sortexpr/TimestampDataTypeTestCase.scala:36)
+        (rf"create cube (?P<ine>if not exists )?{_T}"
+         r" dimensions\s*\((?P<dims>.+?)\)(?: measures\s*\((?P<meas>.+?)\))?"
+         r"(?: options\s*\((?P<opts>.+)\))?",
+         CarbonSession._create_cube),
+        # the plain form (SORTED BY) or the Hive-syntax STORED BY form
+        (rf"create table (?P<ine>if not exists )?{_T}\s*\((?P<cols>.+?)\)"
+         r"(?:(?: sorted by \((?P<sort>[\w\s,]+)\))?(?: partitioned by \((?P<parts>[\w\s,]+)\))?"
+         r"|(?: partitioned by \((?P<pcols>.+?)\))? stored by '(?P<handler>[^']+)'"
+         r"(?: tblproperties\s*\((?P<props>.+)\))?)",
+         CarbonSession._create_table),
+    ]
+]

@@ -381,8 +381,9 @@ class CarbonStore:
         partition_columns: list[str] | None = None,
         properties: dict[str, str] | None = None,
         if_not_exists: bool = False,
-    ) -> None:
-        """CREATE CUBE equivalent.
+    ) -> bool:
+        """CREATE CUBE equivalent. Returns False when ``if_not_exists``
+        finds the table already there, True when it was created.
 
         ``sort_columns`` defaults to the dimension columns (string /
         timestamp typed), mirroring the reference's dims-are-sorted rule
@@ -397,7 +398,7 @@ class CarbonStore:
         tdir = self._table_dir(table)
         if os.path.exists(self._schema_path(table)):
             if if_not_exists:
-                return
+                return False
             raise ValueError(f"table {table} already exists")
         os.makedirs(tdir, exist_ok=True)
         properties = properties or {}
@@ -451,6 +452,7 @@ class CarbonStore:
         }
         self._write_schema(table, meta)
         self._write_status(table, [])
+        return True
 
     def drop_table(self, table: str) -> None:
         self._read_schema(table)  # raise if missing
@@ -1191,9 +1193,12 @@ class CarbonStore:
         ('minor'); segments already larger than ``major_size_rows`` are
         left alone — they are re-merged only by an explicit ``compact``
         ('major'). Call after streaming ingest or frequent small loads.
+        Empty (0-row) segments do not count toward the threshold — a
+        compaction they trigger would rewrite the few real segments for
+        nothing — but a compaction that runs folds them away too.
         """
         segs = [e for e in self.valid_segments(table) if e.rows < major_size_rows]
-        if len(segs) < minor_threshold:
+        if sum(1 for e in segs if e.rows > 0) < minor_threshold:
             return None
         return self.compact(table, segment_ids=[e.segment_id for e in segs])
 

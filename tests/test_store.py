@@ -226,6 +226,24 @@ def test_auto_compact_minor_policy(store, spark):
     assert store.table("t").count() == 900
 
 
+def test_auto_compact_counts_only_nonempty_segments(store, spark):
+    """Empty segments never trigger a minor compaction (one real load
+    plus three empty ones is not four small segments), but a compaction
+    that runs folds them away with the real ones."""
+    store.create_table("t", SCHEMA, sort_columns=["city"])
+    store.load("t", make_df(spark))
+    for _ in range(3):
+        store.load("t", make_df(spark).filter("id < 0"))
+    assert store.auto_compact("t", minor_threshold=4) is None
+    for i in range(1, 4):
+        store.load("t", make_df(spark, offset=i * 100))
+    new_id = store.auto_compact("t", minor_threshold=4)
+    assert [e.segment_id for e in store.valid_segments("t")] == [new_id]
+    statuses = [e["status"] for e in store.show_segments("t")]
+    assert statuses.count("Compacted") == 7
+    assert store.table("t").count() == 400
+
+
 def test_scan_prunes_segments_by_manifest_stats(store, spark, sf_dir):
     """Segments with disjoint sort-key ranges: a bounded scan must read
     only matching segment dirs (manifest zone-map pruning)."""
