@@ -104,7 +104,7 @@ def build_ivf_adc_index(
     """
     cents = train_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
     cents_t = f"{index_name}_centroids"
-    if cents_t in store.tables():
+    if store.has_table(cents_t):
         store.drop_table(cents_t)
     store.create_table(cents_t, cents.schema, sort_columns=[])
     store.load(cents_t, cents)
@@ -130,7 +130,7 @@ def build_ivf_adc_index(
         )
     )
     codes_t = f"{index_name}_codes"
-    if codes_t in store.tables():
+    if store.has_table(codes_t):
         store.drop_table(codes_t)
     store.create_table(
         codes_t, coded.schema, sort_columns=["vid"], partition_columns=["cid"]

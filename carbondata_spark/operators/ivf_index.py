@@ -48,7 +48,7 @@ def build_ivf_index(
     """
     cents = train_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
     cents_t = f"{index_name}_centroids"
-    if cents_t in store.tables():
+    if store.has_table(cents_t):
         store.drop_table(cents_t)
     store.create_table(cents_t, cents.schema, sort_columns=[])
     store.load(cents_t, cents)
@@ -63,7 +63,7 @@ def build_ivf_index(
     )
     assigned = _assign(data, cents)
     assign_t = f"{index_name}_assign"
-    if assign_t in store.tables():
+    if store.has_table(assign_t):
         store.drop_table(assign_t)
     # Hive-partition the assignment on cid (one directory per bucket,
     # store PARTITIONER support) so a search's probe join prunes whole

@@ -107,78 +107,6 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("lang_pred", pred)
 
 
-def tfidf_top_terms(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Top-k characteristic terms per document by TF-IDF
-    (tf * ln(N/df), natural log, rank ties broken by term).
-
-    Plan: ONE word explode → (doc, word) tf aggregate → document
-    frequency derived FROM the tf rows (tf already holds one row per
-    (doc, word), so df = plain count per word — no second explode over
-    the corpus and no countDistinct expand; the duplicated tf subplan
-    collapses into a ReusedExchange) → shuffle join on the word key →
-    per-doc in-row top-k (sort+slice of a collect_list aggregate — no
-    sort-based window exec). Both shuffles key on high-cardinality,
-    well-distributed values (doc×word, word); nothing is collected to
-    the driver or broadcast, so the operator scales with the corpus —
-    on a heavy-tailed 100-TB vocabulary (billions of keys) the df side
-    cannot fit a broadcast, and the word-key shuffle join is the
-    scale-safe plan (AQE still turns it into a broadcast join
-    automatically when the vocabulary happens to be small).
-    """
-    from carbondata_spark.functions import dround, ensure_parallelism, repersist
-
-    df = ensure_parallelism(df)
-    words = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.lower(F.col(text_col)))).alias("w"),
-    )
-    # Persist tf: it feeds BOTH the scored join and the df derivation, and
-    # Spark's ReusedExchange only deduplicates the scan+repartition below
-    # the aggregate, not the aggregate itself (observed in the executed
-    # plan: two identical hashpartitioning(doc_id, w) exchanges) — without
-    # the persist the corpus is exploded and aggregated twice. tf is one
-    # row per (doc, word), far smaller than the exploded token stream;
-    # MEMORY_AND_DISK spills rather than OOMs at 100-TB scale, and
-    # recomputing-twice is strictly more expensive than one spill pass.
-    tf = words.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
-    tf = repersist("tfidf_tf", tf)
-    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
-    n_docs = df.count()
-    scored = tf.join(dfreq, "w").select(
-        "doc_id",
-        F.col("w").alias("term"),
-        dround(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 4).alias("tfidf"),
-    )
-    # top-k per doc via an in-row sort+slice of a collect_list aggregate
-    # instead of a row_number window: one hash aggregate keyed on doc_id,
-    # no sort-based window exec over every (doc, term) row (~10% faster
-    # at sf0.1; same tie-break: tfidf desc, then term — the struct sorts
-    # on (-tfidf, term) ascending). Per-doc state is the doc's term list,
-    # the same bound as the window partition it replaces.
-    top = F.slice(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    (-F.col("tfidf")).alias("o1"),
-                    F.col("term").alias("t"),
-                    F.col("tfidf").alias("v"),
-                )
-            )
-        ),
-        1,
-        k,
-    )
-    agg = scored.groupBy("doc_id").agg(top.alias("top"))
-    return agg.select("doc_id", F.posexplode("top").alias("rank0", "r")).select(
-        "doc_id",
-        F.col("r.t").alias("term"),
-        F.col("r.v").alias("tfidf"),
-        (F.col("rank0") + 1).cast("int").alias("rank"),
-    )
-
-
 def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Document fingerprinting.
 
@@ -322,9 +250,10 @@ def with_unigram_nll(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 
         nll = sum_w c_dw * -ln(count_w / total_tokens) / sum_w c_dw
 
-    Plan: one explode -> per-(doc, word) counts (persisted: feeds both
-    the corpus distribution and the scoring join, same rationale as
-    tfidf_top_terms) -> corpus counts by word -> word-key shuffle join ->
+    Plan: one explode -> per-(doc, word) counts (persisted: they feed
+    both the corpus distribution and the scoring join, and Spark's
+    ReusedExchange would not share the aggregate itself) -> corpus
+    counts by word -> word-key shuffle join ->
     per-doc aggregate. The 1-row total-token frame broadcasts. State per
     key is a count; nothing collects to the driver. The model hook for a
     real LM is the same join shape with an external (word, logp) table.

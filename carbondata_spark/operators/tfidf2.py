@@ -1,35 +1,38 @@
-"""Round-13 rewrite of TF-IDF top-terms — the LIVE implementation behind
-the ``p_text_tfidf`` headline query (query_defs/olap3.py delegates here;
-``text.tfidf_top_terms`` remains as the v1 API and the equivalence
-oracle in tests/test_tfidf2.py).
+"""TF-IDF top-terms: the top-k characteristic terms per document by
+tf * ln(N/df) (natural log, rank ties broken by term). This is the
+implementation behind the ``p_text_tfidf`` registry row
+(query_defs/olap3.py delegates here); tests/test_tfidf2.py pins its rows
+against a driver-side Python oracle.
 
-What changes vs the v1 plan (text.py:110-180):
+Plan: one explode -> (doc, word) tf aggregate -> df(w) as a COUNT
+WINDOW over ``partitionBy(w)`` -> per-doc in-row top-k.
 
-- The document-frequency JOIN becomes a COUNT WINDOW over
-  ``partitionBy(w)``: tf is one row per (doc, word), so df(w) is a plain
-  per-partition count — no ordering, no frame, no sort. This removes the
-  dfreq hash aggregate, its exchange, AND the join's re-exchange of tf
-  on the word key: one exchange on ``w`` does both.
-- With the join gone, tf feeds exactly one consumer, so the persist
-  (and its memory footprint) goes away — the plan is a single linear
-  pipeline: explode → tf aggregate → window on w → per-doc in-row top-k.
-- Exchange count drops 4 → 3; measured at sf0.1: 1.31 s → 0.79 s
-  (−40%), results bit-identical (same dround, same tie-break).
-- (r13) ``n_docs`` is no longer an eager ``df.count()`` driver action:
-  it is a one-row aggregate crossJoin-broadcast into the scored frame,
-  so the whole operator is ONE lazy Spark job. The count subtree prunes
-  every column (ReadSchema struct<> on a parquet input — a pure
+- tf is one row per (doc, word), so df(w) is a plain per-partition
+  count — no ordering, no frame, no sort. A dfreq aggregate joined back
+  on the word key would add a hash aggregate, its exchange AND a
+  re-exchange of tf; one exchange on ``w`` does both here.
+- tf feeds exactly one consumer, so nothing is persisted: the plan is a
+  single linear pipeline. Against the join-and-persist plan it has 3
+  exchanges instead of 4; measured at sf0.1: 1.31 s -> 0.79 s (−40%),
+  same rows.
+- ``n_docs`` is not an eager ``df.count()`` driver action: it is a
+  one-row aggregate crossJoin-broadcast into the scored frame, so the
+  whole operator is ONE lazy Spark job. The count subtree prunes every
+  column (ReadSchema struct<> on a parquet input — a pure
   footer/metadata count). n_docs must come from the INPUT frame, not
-  the tf frame: documents with empty text have no tf rows but DO count
-  toward N (pinned by tests/test_tfidf2.py's empty-doc case).
+  the tf frame: every input row counts toward N (pinned by
+  tests/test_tfidf2.py's empty-doc case).
+- top-k per doc is an in-row sort+slice of a collect_list aggregate
+  instead of a row_number window: one hash aggregate keyed on doc_id,
+  no sort-based window exec over every (doc, term) row. The struct
+  sorts on (-tfidf, term) ascending, which is the tie-break.
 
-Scale notes (100 TB): the window partitions on the word key — the same
-high-cardinality, well-distributed key the old join shuffled on, so no
-new skew exposure; per-partition state is a running count (no buffering
-of rows: count(*) over an unordered unbounded frame is a two-pass
-partition scan, not a sort). The n_docs side of the nested-loop join is
-exactly one row, broadcast. Everything else (in-row top-k instead of a
-row_number window, one explode) is unchanged from the v1 rationale.
+Scale notes (100 TB): the window partitions on the word key — a
+high-cardinality, well-distributed key, so no skew exposure; per-
+partition state is a running count (no buffering of rows: count(*) over
+an unordered unbounded frame is a two-pass partition scan, not a sort).
+The n_docs side of the nested-loop join is exactly one row, broadcast.
+Nothing is collected to the driver.
 """
 
 from __future__ import annotations
@@ -43,15 +46,15 @@ from carbondata_spark.operators.text import _words
 def tfidf_top_terms_v2(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
-    """Drop-in replacement for ``text.tfidf_top_terms`` (identical
-    columns, values, and tie-breaks — pinned in tests/test_tfidf2.py)."""
+    """(doc_id, term, tfidf, rank) for the top ``k`` terms of each
+    document; tfidf is rounded to 4 places the way DuckDB rounds."""
     from carbondata_spark.functions import dround, ensure_parallelism
 
     # One-row N aggregate, computed from the RAW input (before the
     # parallelism repartition, so the count subtree carries no exchange;
     # on a parquet source it scans zero columns). bigint/bigint division
-    # in Spark SQL is double division — bit-identical to the former
-    # F.lit(float(n_docs)) literal for any count < 2^53.
+    # in Spark SQL is double division; both counts convert to double
+    # exactly below 2^53.
     n = df.agg(F.count(F.lit(1)).alias("n_docs"))
     df = ensure_parallelism(df)
     words = df.select(

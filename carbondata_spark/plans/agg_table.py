@@ -110,7 +110,7 @@ def refresh_aggregate_table(agg: AggregateTable) -> None:
 
     covered: set[int] = set()
     sound = True
-    if target in store.tables():
+    if store.has_table(target):
         for e in store.valid_segments(target):
             if "fact_segments" not in e.origin:
                 # a summary segment with no provenance tag (e.g. written
@@ -159,7 +159,7 @@ def drop_aggregate_table(store: CarbonStore, fact: str, name: str) -> None:
     agg = AggregateTable(store, fact, name)
     os.remove(agg.meta_path)
     target = f"{fact}_agg_{name}"
-    if target in store.tables():
+    if store.has_table(target):
         store.drop_table(target)
 
 
@@ -176,7 +176,7 @@ def _coverage_current(store: CarbonStore, fact: str, name: str, live: set[int]) 
     them; our routing extension therefore carries its own guard.
     Cost: O(#summary segments) manifest reads, driver-side, no scan."""
     target = f"{fact}_agg_{name}"
-    if target not in store.tables():
+    if not store.has_table(target):
         return False
     covered: set[int] = set()
     for e in store.valid_segments(target):

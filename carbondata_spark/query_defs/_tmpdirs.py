@@ -1,13 +1,13 @@
-"""Process-lifetime temp directories for query_defs build caches.
+"""Process-lifetime temp directories and the build-once registry fixtures
+that live in them.
 
-store_q / lifecycle_q build store tables and format dumps once per
-(sf_dir, Spark app) and cache the paths in module-level ``_BUILT``
-dicts — the driver pays each build once, but the trees used to outlive
-the process (ADVICE r10). This registry hands out ``tempfile.mkdtemp``
-directories and removes every one at interpreter exit; by then the
-JVM is either stopped or no longer reading them, so a plain rmtree is
-safe. Callers keep caching the *paths*; only the lifetime is managed
-here.
+Registry rows and the headline fact tables read fixtures (stores,
+format dumps, JDBC databases) that cost a Spark job or more to build.
+``built`` builds each one once per (name, sf_dir, Spark app), the way
+the reference suites build a cube in ``beforeAll``, and hands it a
+fresh directory from ``mkdtemp``. Every such directory is removed at
+interpreter exit, the ``afterAll`` half: by then the JVM is either
+stopped or no longer reading them, so a plain rmtree is safe.
 """
 
 from __future__ import annotations
@@ -15,8 +15,12 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+from typing import Any, Callable, TypeVar
+
+T = TypeVar("T")
 
 _DIRS: list[str] = []
+_BUILT: dict[tuple[str, str | None, str], Any] = {}
 
 
 def mkdtemp(prefix: str) -> str:
@@ -24,6 +28,18 @@ def mkdtemp(prefix: str) -> str:
     path = tempfile.mkdtemp(prefix=prefix)
     _DIRS.append(path)
     return path
+
+
+def built(spark, name: str, build: Callable[[str], T], sf_dir: str | None = None) -> T:
+    """``build(dir)``, run once per (name, sf_dir, Spark app).
+
+    ``dir`` is a fresh ``carbondata_<name>_*`` directory removed at exit.
+    A build that raises is not cached, so the next call builds again.
+    """
+    key = (name, sf_dir, spark.sparkContext.applicationId)
+    if key not in _BUILT:
+        _BUILT[key] = build(mkdtemp(prefix=f"carbondata_{name}_"))
+    return _BUILT[key]
 
 
 @atexit.register

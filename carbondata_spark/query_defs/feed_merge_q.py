@@ -1,9 +1,9 @@
 """Feed × MERGE INTO × compaction composition under the driver gate.
 
-r13 landed the two newest manifest-provenance features in isolation:
-MERGE INTO (store.merge_rows — CDC upsert with an atomic two-segment
-swap) and exact feed-across-compaction (compacted_from provenance). This
-row certifies their INTERACTION — the steady-state CDC loop a 100 TB
+Two manifest-provenance features are each tested on their own: MERGE
+INTO (store.merge_rows — CDC upsert with an atomic two-segment swap) and
+exact feed-across-compaction (compacted_from provenance). This row
+certifies their INTERACTION — the steady-state CDC loop a 100 TB
 training-corpus table actually runs:
 
 1. three loads land (segments 0/1/2); a consumer drains them and
@@ -21,9 +21,9 @@ training-corpus table actually runs:
    whole.
 
 A feed that re-delivers corrected rows, re-delivers the compacted
-merge, or loses the insert set changes the hash. Promoted from the
-local test (tests/test_merge.py::test_merge_feed_delivers_only_inserts)
-composed with the compaction path, per the r13 review.
+merge, or loses the insert set changes the hash. It is the local test
+tests/test_merge.py::test_merge_feed_delivers_only_inserts composed
+with the compaction path.
 
 Reference parity: the manifest surface is the reference's tablestatus
 (LoadMetadataDetails.java timestamps + MERGED status,
@@ -37,21 +37,17 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from carbondata_spark.queries import register, t
+from carbondata_spark.query_defs._tmpdirs import built
 
 _SHIFT = 1_000_000_000  # insert keys: disjoint from any real o_orderkey
 
-# (sf_dir, app_id) -> (store path, checkpoint ts)
-_BUILT: dict[tuple[str, str], tuple[str, float]] = {}
-
 
 def _store(spark: SparkSession, sf_dir: str):
+    """(store, checkpoint ts), built once per (sf_dir, Spark app)."""
     from carbondata_spark.operators.segment_feed import manifest_clock
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT:
-        path = mkdtemp(prefix="carbondata_feedmergeq_")
+    def build(path: str) -> tuple[str, float]:
         store = CarbonStore(spark, path)
         orders = t(spark, sf_dir, "orders")
         store.create_table("ord", orders.schema, sort_columns=["o_orderkey"])
@@ -80,11 +76,10 @@ def _store(spark: SparkSession, sf_dir: str):
 
         # maintenance window: merge the two untouched drained loads
         store.compact("ord", segment_ids=[seg_a, seg_b])
-        _BUILT[key] = (path, ckpt)
-    path, ckpt = _BUILT[key]
-    from carbondata_spark.store import CarbonStore as _CS
+        return path, ckpt
 
-    return _CS(spark, path), ckpt
+    path, ckpt = built(spark, "feedmergeq", build, sf_dir)
+    return CarbonStore(spark, path), ckpt
 
 
 @register(

@@ -21,19 +21,15 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from carbondata_spark.queries import register, t
-
-# (sf_dir, app_id) -> (store path, checkpoint ts)
-_BUILT: dict[tuple[str, str], tuple[str, float]] = {}
+from carbondata_spark.query_defs._tmpdirs import built
 
 
 def _feed_store(spark: SparkSession, sf_dir: str):
+    """(store, checkpoint ts), built once per (sf_dir, Spark app)."""
     from carbondata_spark.operators.segment_feed import manifest_clock
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT:
-        path = mkdtemp(prefix="carbondata_feedq_")
+    def build(path: str) -> tuple[str, float]:
         store = CarbonStore(spark, path)
         orders = t(spark, sf_dir, "orders")
         store.create_table("ord", orders.schema, sort_columns=["o_orderkey"])
@@ -45,25 +41,19 @@ def _feed_store(spark: SparkSession, sf_dir: str):
         store.delete_rows(
             "ord", "o_orderkey % 2 = 0 AND o_totalprice < 50000"
         )
-        _BUILT[key] = (path, ckpt)
-    path, ckpt = _BUILT[key]
-    from carbondata_spark.store import CarbonStore as _CS
+        return path, ckpt
 
-    return _CS(spark, path), ckpt
-
-
-# (sf_dir, app_id) -> (store path, checkpoint ts) for the compaction run
-_BUILT_COMPACT: dict[tuple[str, str], tuple[str, float]] = {}
+    path, ckpt = built(spark, "feedq", build, sf_dir)
+    return CarbonStore(spark, path), ckpt
 
 
 def _feed_compact_store(spark: SparkSession, sf_dir: str):
+    """(store, checkpoint ts) for the compaction run, built once per
+    (sf_dir, Spark app)."""
     from carbondata_spark.operators.segment_feed import manifest_clock
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT_COMPACT:
-        path = mkdtemp(prefix="carbondata_feedcq_")
+    def build(path: str) -> tuple[str, float]:
         store = CarbonStore(spark, path)
         orders = t(spark, sf_dir, "orders")
         store.create_table("ord", orders.schema, sort_columns=["o_orderkey"])
@@ -74,11 +64,10 @@ def _feed_compact_store(spark: SparkSession, sf_dir: str):
         # provenance must keep the merge OUT of the feed
         store.compact("ord")
         store.load("ord", orders.filter(F.col("o_orderkey") % 3 == 2))
-        _BUILT_COMPACT[key] = (path, ckpt)
-    path, ckpt = _BUILT_COMPACT[key]
-    from carbondata_spark.store import CarbonStore as _CS
+        return path, ckpt
 
-    return _CS(spark, path), ckpt
+    path, ckpt = built(spark, "feedcq", build, sf_dir)
+    return CarbonStore(spark, path), ckpt
 
 
 @register(
@@ -89,9 +78,9 @@ def _feed_compact_store(spark: SparkSession, sf_dir: str):
     """,
     doc="Incremental feed across a COMPACTION: two drained loads merged "
     "after the checkpoint, then a third load. compacted_from provenance "
-    "(store.compact, r13) proves the merge re-materializes only drained "
-    "rows, so changes_since(checkpoint) is EXACTLY the third load — the "
-    "r12 re-delivery limit, closed. A feed that re-delivers the merged "
+    "(store.compact) proves the merge re-materializes only drained "
+    "rows, so changes_since(checkpoint) is EXACTLY the third load, with "
+    "no re-delivery. A feed that re-delivers the merged "
     "rows or misses the new segment changes the hash.",
 )
 def q_feed_across_compaction(spark, sf_dir):

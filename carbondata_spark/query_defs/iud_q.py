@@ -1,9 +1,9 @@
 """Row-level DELETE/UPDATE under the driver's DuckDB differential gate.
 
-Round 11 landed copy-on-write row-level IUD (store.delete_rows /
-update_rows: affected segments rewritten, manifest swapped atomically —
-store.py:1053-1190) with local tests only (tests/test_iud.py). This row
-puts the full path in front of the hard signal: customer is loaded INTO
+Copy-on-write row-level IUD (store.delete_rows / update_rows: affected
+segments rewritten, manifest swapped atomically) is covered by local
+tests (tests/test_iud.py). This row puts the full path in front of the
+hard signal: customer is loaded INTO
 a store table as TWO segments, mutated through the SQL front door
 (``DELETE FROM`` + multi-assignment ``UPDATE ... SET ... WHERE``), and
 the surviving rows must match DuckDB applying the same mutations as
@@ -22,20 +22,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from carbondata_spark.queries import r2, register, t
-
-# (sf_dir, app_id) -> store path; the store is built and mutated ONCE
-# per process+session, then read by every subsequent call.
-_BUILT: dict[tuple[str, str], str] = {}
+from carbondata_spark.query_defs._tmpdirs import built
 
 
 def _iud_store(spark: SparkSession, sf_dir: str):
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
+    """customer as two segments, mutated once per (sf_dir, Spark app)
+    through the SQL front door, then read by every later call."""
     from carbondata_spark.sql import CarbonSession
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT:
-        path = mkdtemp(prefix="carbondata_iudq_")
+    def build(path: str) -> str:
         store = CarbonStore(spark, path)
         cust = t(spark, sf_dir, "customer")
         store.create_table("cust", cust.schema, sort_columns=["c_custkey"])
@@ -50,24 +46,18 @@ def _iud_store(spark: SparkSession, sf_dir: str):
             "c_acctbal = c_acctbal + 100.0 "
             "WHERE c_mktsegment = 'BUILDING'"
         )
-        _BUILT[key] = path
-    return CarbonStore(spark, _BUILT[key])
+        return path
 
-
-# (sf_dir, app_id) -> store path for the MERGE scenario
-_BUILT_MERGE: dict[tuple[str, str], str] = {}
+    return CarbonStore(spark, built(spark, "iudq", build, sf_dir))
 
 
 def _merge_store(spark: SparkSession, sf_dir: str):
-    """orders as two segments, then ONE MERGE (store.merge_rows, r13)
+    """orders as two segments, then ONE MERGE (store.merge_rows)
     applying updates (+1.0 to o_totalprice on keys ending in 3) and
     inserts (the same rows re-keyed +20M) in a single atomic swap."""
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT_MERGE:
-        path = mkdtemp(prefix="carbondata_mergeq_")
+    def build(path: str) -> str:
         store = CarbonStore(spark, path)
         orders = t(spark, sf_dir, "orders")
         store.create_table("ord", orders.schema, sort_columns=["o_orderkey"])
@@ -83,8 +73,9 @@ def _merge_store(spark: SparkSession, sf_dir: str):
             )
         )
         store.merge_rows("ord", source, keys="o_orderkey")
-        _BUILT_MERGE[key] = path
-    return CarbonStore(spark, _BUILT_MERGE[key])
+        return path
+
+    return CarbonStore(spark, built(spark, "mergeq", build, sf_dir))
 
 
 @register(
@@ -100,7 +91,7 @@ def _merge_store(spark: SparkSession, sf_dir: str):
            round(o_totalprice + 1.0, 2) AS totalprice
     FROM orders WHERE o_orderkey % 10 = 3
     """,
-    doc="MERGE INTO (upsert, r13): orders as two segments, one "
+    doc="MERGE INTO (upsert): orders as two segments, one "
     "merge_rows call applies price updates to keys ending in 3 AND "
     "inserts the same rows re-keyed +20M — zone-map candidate pruning, "
     "one-job semi-join detection, one source join, one atomic swap. "
@@ -115,22 +106,15 @@ def q_store_merge(spark, sf_dir):
     )
 
 
-# (sf_dir, app_id) -> store path for the pruned-mutation scenario
-_BUILT_PRUNED: dict[tuple[str, str], str] = {}
-
-
 def _iud_pruned_store(spark: SparkSession, sf_dir: str):
     """Three RANGE-DISJOINT segments on the sort column, then mutations
-    keyed on that column — the r13 zone-map/bloom pre-prune path: the
+    keyed on that column — the zone-map/bloom pre-prune path: the
     DELETE's detection job reads only segment 0, the point UPDATE's only
     segment 2 (pinned structurally in tests/test_iud_scale.py; THIS row
     certifies the pruned path cannot skip rows it must touch)."""
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT_PRUNED:
-        path = mkdtemp(prefix="carbondata_iudpq_")
+    def build(path: str) -> str:
         store = CarbonStore(spark, path)
         cust = t(spark, sf_dir, "customer")
         store.create_table(
@@ -153,8 +137,9 @@ def _iud_pruned_store(spark: SparkSession, sf_dir: str):
             f"c_custkey IN ({q2 + 1}, {q2 + 3})",
             {"c_acctbal": "c_acctbal - 50.0"},
         )
-        _BUILT_PRUNED[key] = path
-    return CarbonStore(spark, _BUILT_PRUNED[key])
+        return path
+
+    return CarbonStore(spark, built(spark, "iudpq", build, sf_dir))
 
 
 @register(
@@ -169,7 +154,7 @@ def _iud_pruned_store(spark: SparkSession, sf_dir: str):
     FROM customer, b
     WHERE c_custkey > CAST(floor(b.q1 / 2.0) AS BIGINT)
     """,
-    doc="Pruned row-level IUD (r13): three range-disjoint segments on "
+    doc="Pruned row-level IUD: three range-disjoint segments on "
     "the sort column, a range DELETE whose zone-map pre-prune confines "
     "detection to segment 0 and a bloom-eligible point UPDATE confined "
     "to segment 2 — the surviving table must equal DuckDB's rewrite of "

@@ -2,8 +2,8 @@
 
 The JDBC input path (sources/formats.read_jdbc — reference parity:
 JdbcRDDExt / JdbcResultSetRDD, integration/spark/.../rdd/JdbcRDDExt.scala,
-incl. the range-partitioned parallel read) was certified only by local
-tests (tests/test_jdbc.py). This row puts the full round-trip in front
+incl. the range-partitioned parallel read) is covered by local tests
+(tests/test_jdbc.py). This row puts the full round-trip in front
 of the hard signal: customer is written INTO an embedded Derby database
 over JDBC, read back as a 4-slice range-partitioned scan, and every row
 must match DuckDB reading the ORIGINAL parquet. Bad bound arithmetic in
@@ -22,19 +22,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from carbondata_spark.queries import register, t
+from carbondata_spark.query_defs._tmpdirs import built
 
 _DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
-# (sf_dir, app_id) -> (url, lower, upper); written once per process+app
-_BUILT: dict[tuple[str, str], tuple[str, int, int]] = {}
-
 
 def _derby_dim(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
+    """(url, lower, upper) of the Derby copy of customer, written once
+    per (sf_dir, Spark app)."""
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT:
-        home = mkdtemp(prefix="carbondata_jdbcq_")
+    def build(home: str) -> tuple[str, int, int]:
         # keep derby.log out of the driver's cwd; no-op if another Derby
         # (the metastore) already booted this JVM — the db path below is
         # absolute, so the home only steers the log file
@@ -52,8 +49,9 @@ def _derby_dim(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
             .mode("overwrite")
             .save()
         )
-        _BUILT[key] = (url, int(lo), int(hi))
-    return _BUILT[key]
+        return url, int(lo), int(hi)
+
+    return built(spark, "jdbcq", build, sf_dir)
 
 
 @register(

@@ -1,14 +1,14 @@
-"""Lifecycle + source-format contract queries (round 10): put the
-remaining "verified locally only" SURVEY.md §2 lines under the driver's
-DuckDB differential gate.
+"""Lifecycle + source-format contract queries: put SURVEY.md §2 lines
+that local tests already verify under the driver's DuckDB differential
+gate as well.
 
 - ``q_store_compacted`` — DELETE LOAD + MERGE (compaction) + CLEAN
   FILES in front of the hard signal: the reference's segment
   maintenance loop (cubeSchema.scala:1678-1736 delete loads,
-  :2138-2173 merge; CarbonMergerRDD.scala:31-234) previously certified
-  only by the local suite (tests/test_store.py).
+  :2138-2173 merge; CarbonMergerRDD.scala:31-234), also covered by the
+  local suite (tests/test_store.py).
 - ``q_skew_salted_join`` — the explicit skew remedy
-  (functions.salted_join) previously certified only by
+  (functions.salted_join), also covered by
   tests/test_skew_and_csv_ts.py: the salt must be a pure partitioning
   artifact, i.e. the salted join's aggregate equals the plain join's.
 - ``q_source_json`` / ``q_source_orc`` — the JSON/ORC ingestion paths
@@ -18,28 +18,19 @@ DuckDB differential gate.
   ORIGINAL parquet — a row lost or a value mangled in either direction
   mismatches the hash.
 
-Build artifacts (store tables, JSON/ORC dumps) are cached per
-(process, sf_dir, Spark app) exactly like store_q's store build, so the
-driver pays each round-trip once; the trees are registered with
-``_tmpdirs.mkdtemp`` and removed at process exit (ADVICE r10 — they
-used to leak per run).
+Build artifacts (store tables, JSON/ORC dumps) are built once per
+(sf_dir, Spark app) through ``_tmpdirs.built``, so the driver pays each
+round-trip once and the trees are removed at process exit.
 """
 
 from __future__ import annotations
-
-from carbondata_spark.query_defs._tmpdirs import mkdtemp
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from carbondata_spark.functions import dround, dsum, salted_join
 from carbondata_spark.queries import register, t
-
-_BUILT: dict[tuple[str, str, str], str] = {}
-
-
-def _cache_key(kind: str, spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    return (kind, sf_dir, spark.sparkContext.applicationId)
+from carbondata_spark.query_defs._tmpdirs import built
 
 
 def _compacted_store(spark: SparkSession, sf_dir: str):
@@ -48,21 +39,18 @@ def _compacted_store(spark: SparkSession, sf_dir: str):
     clean_files — the full maintenance cycle, then queried."""
     from carbondata_spark.store import CarbonStore
 
-    key = _cache_key("compact", spark, sf_dir)
-    if key in _BUILT:
-        return CarbonStore(spark, _BUILT[key])
+    def build(path: str) -> str:
+        store = CarbonStore(spark, path)
+        orders = t(spark, sf_dir, "orders")
+        store.create_table("orders_l", orders.schema, sort_columns=["o_orderkey"])
+        for m in (0, 1, 2):
+            store.load("orders_l", orders.filter(F.col("o_orderkey") % 3 == m))
+        store.delete_segments("orders_l", [1])
+        store.compact("orders_l")
+        store.clean_files("orders_l", stale_in_progress_s=0.0)
+        return path
 
-    path = mkdtemp(prefix="carbondata_lifecycle_")
-    store = CarbonStore(spark, path)
-    orders = t(spark, sf_dir, "orders")
-    store.create_table("orders_l", orders.schema, sort_columns=["o_orderkey"])
-    for m in (0, 1, 2):
-        store.load("orders_l", orders.filter(F.col("o_orderkey") % 3 == m))
-    store.delete_segments("orders_l", [1])
-    store.compact("orders_l")
-    store.clean_files("orders_l", stale_in_progress_s=0.0)
-    _BUILT[key] = path
-    return store
+    return CarbonStore(spark, built(spark, "lifecycle", build, sf_dir))
 
 
 @register(
@@ -122,12 +110,12 @@ def q_skew_salted_join(spark, sf_dir):
 
 
 def _json_path(spark: SparkSession, sf_dir: str) -> str:
-    key = _cache_key("json", spark, sf_dir)
-    if key not in _BUILT:
-        path = mkdtemp(prefix="carbondata_json_") + "/documents"
+    def build(base: str) -> str:
+        path = base + "/documents"
         t(spark, sf_dir, "documents").write.mode("overwrite").json(path)
-        _BUILT[key] = path
-    return _BUILT[key]
+        return path
+
+    return built(spark, "json", build, sf_dir)
 
 
 @register(
@@ -156,16 +144,16 @@ def q_source_json(spark, sf_dir):
 
 
 def _orc_path(spark: SparkSession, sf_dir: str) -> str:
-    key = _cache_key("orc", spark, sf_dir)
-    if key not in _BUILT:
-        from carbondata_spark.sources.formats import write_orc
+    from carbondata_spark.sources.formats import write_orc
 
-        path = mkdtemp(prefix="carbondata_orc_") + "/events"
+    def build(base: str) -> str:
+        path = base + "/events"
         write_orc(
             t(spark, sf_dir, "events").select("event_id", "event_type", "value"), path
         )
-        _BUILT[key] = path
-    return _BUILT[key]
+        return path
+
+    return built(spark, "orc", build, sf_dir)
 
 
 @register(

@@ -48,7 +48,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from carbondata_spark.query_defs._tmpdirs import mkdtemp
+from carbondata_spark.query_defs._tmpdirs import built
 from carbondata_spark.queries import r2, register
 
 CSV_PATH = "/root/reference/integration/spark/src/test/resources/100_olap.csv"
@@ -135,11 +135,10 @@ ORACLE_VIEW = (
     "timestampformat='%Y-%-m-%-d %H:%M:%S'))"
 )
 
-_BUILT: dict[str, str] = {}  # app_id -> store path (fixture is sf-independent)
-
 
 def _cube(spark):
-    """Build the cube once per Spark app via the verbatim DDL + LOAD."""
+    """The cube, built once per Spark app (it does not depend on the
+    scale factor) via the verbatim DDL + LOAD."""
     from carbondata_spark.sql import CarbonSession
     from carbondata_spark.store import CarbonStore
 
@@ -147,15 +146,15 @@ def _cube(spark):
     # session-scoped analogue carries the timestamp format the fixture
     # needs (CarbonProperties.java default).
     props = {"carbon.timestamp.format": "yyyy-MM-dd HH:mm:ss"}
-    app = spark.sparkContext.applicationId
-    if app in _BUILT:
-        return CarbonSession(spark, CarbonStore(spark, _BUILT[app]), properties=props)
-    base = mkdtemp(prefix="carbondata_olap100_")
-    cs = CarbonSession(spark, CarbonStore(spark, base), properties=props)
-    cs.sql(CREATE_CUBE)
-    cs.sql(LOAD_FACT)
-    _BUILT[app] = base
-    return cs
+
+    def build(base: str) -> str:
+        cs = CarbonSession(spark, CarbonStore(spark, base), properties=props)
+        cs.sql(CREATE_CUBE)
+        cs.sql(LOAD_FACT)
+        return base
+
+    store = CarbonStore(spark, built(spark, "olap100", build))
+    return CarbonSession(spark, store, properties=props)
 
 
 def _verbatim(stmt: str, round_cols: tuple[str, ...] = (), scale: int = 2):

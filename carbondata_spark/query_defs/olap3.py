@@ -163,9 +163,8 @@ def q_custom_agg_mad(spark, sf_dir):
     "job, n_docs broadcast as a 1-row aggregate).",
 )
 def p_text_tfidf(spark, sf_dir):
-    # r13: swapped from text.tfidf_top_terms to the v2 plan
-    # (operators/tfidf2.py — join-free df(w), −40% at sf0.1); v1 stays
-    # as the row-identity oracle in tests/test_tfidf2.py.
+    # operators/tfidf2.py: df(w) from a count window, no join on the word
+    # key (−40% at sf0.1 against the join plan)
     from carbondata_spark.operators.tfidf2 import tfidf_top_terms_v2
 
     return tfidf_top_terms_v2(t(spark, sf_dir, "documents"), k=3)

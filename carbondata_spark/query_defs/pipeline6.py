@@ -1,5 +1,5 @@
-"""Training-data pipeline queries, part 6 (round 12): the two operators
-that landed (tested + plan-pinned) in round 11 without driver rows.
+"""Training-data pipeline queries, part 6: driver rows for two operators
+that local tests and plan pins already cover.
 
 - ``p_sim_ivf_adc`` — the composed IVF-ADC index (operators/ivf_adc.py):
   int8 codes hive-partitioned on centroid id, searched by dequantizing
@@ -29,38 +29,29 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from carbondata_spark.queries import register, t
-
-# (sf_dir, app_id) -> store path; handles rebuilt per call around the
-# CURRENT session (the driver owns its SparkSession) — same lifecycle
-# pattern as ivf_q._ivf_store.
-_BUILT: dict[tuple[str, str], str] = {}
+from carbondata_spark.query_defs._tmpdirs import built
 
 _N_CENTROIDS = 8
 
 
 def _ivf_adc_store(spark: SparkSession, sf_dir: str):
-    """Build (once per process+session) the persisted IVF-ADC index:
+    """The persisted IVF-ADC index, built once per (sf_dir, Spark app):
     centroids + int8-coded cid-partitioned codes, ingested as TWO
     segments then compacted — the incremental-build production shape."""
     from carbondata_spark.operators.ivf_adc import build_ivf_adc_index
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT:
-        path = mkdtemp(prefix="carbondata_ivfadcq_")
-        store = CarbonStore(spark, path)
+    def build(path: str) -> str:
         build_ivf_adc_index(
-            store,
+            CarbonStore(spark, path),
             "emb_adc",
             t(spark, sf_dir, "embeddings"),
             n_centroids=_N_CENTROIDS,
             loads=2,
         )
-        _BUILT[key] = path
-    from carbondata_spark.store import CarbonStore as _CS
+        return path
 
-    return _CS(spark, _BUILT[key])
+    return CarbonStore(spark, built(spark, "ivfadcq", build, sf_dir))
 
 
 @register(

@@ -1,8 +1,8 @@
-"""Round-14 pipeline additions: lexical retrieval (BM25), duplicate-
-aware loss weighting, snapshot diffing, and streaming CDC upsert.
+"""Pipeline queries, part 7: lexical retrieval (BM25), duplicate-aware
+loss weighting, snapshot diffing, and streaming CDC upsert.
 
-Four capabilities a 100 TB training-data pipeline runs daily that the
-registry did not yet certify end-to-end:
+Four capabilities a 100 TB training-data pipeline runs daily, certified
+end-to-end:
 
 - ``p_bm25_topk`` — Okapi BM25 ranked retrieval (operators/bm25.py):
   query-targeted corpus mining and the lexical leg of hybrid retrieval
@@ -15,7 +15,7 @@ registry did not yet certify end-to-end:
   incremental re-embedding, takedown verification.
 - ``q_stream_merge_upsert`` — Structured Streaming foreachBatch →
   store.merge_rows (streaming/upsert.py): the continuous-CDC
-  composition of r13's MERGE INTO with the streaming segment protocol;
+  composition of MERGE INTO with the streaming segment protocol;
   each micro-batch upserts a per-key aggregate into a store table and
   the FINAL TABLE STATE is the oracle-checked result.
 """
@@ -208,10 +208,6 @@ def p_hybrid_rrf(spark: SparkSession, sf_dir: str):
     return rrf_fuse({"lex": lex, "vec": vec}, topk=10)
 
 
-# (sf_dir, app_id) -> store path with the drained profiles table
-_BUILT: dict[tuple[str, str], str] = {}
-
-
 def per_user_agg(batch):
     """The merge-shaped per-batch transform: one row per user with the
     batch's aggregates (module-level so tests can replay an epoch —
@@ -224,59 +220,59 @@ def per_user_agg(batch):
 
 
 def _profiles_store(spark: SparkSession, sf_dir: str):
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
+    """The store with the drained profiles table, built once per
+    (sf_dir, Spark app)."""
+    from carbondata_spark.query_defs._tmpdirs import built, mkdtemp
     from carbondata_spark.store import CarbonStore
     from carbondata_spark.streaming.upsert import stream_merge
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key in _BUILT:
-        return CarbonStore(spark, _BUILT[key])
-    base = mkdtemp(prefix="carbondata_streammerge_")
-    store = CarbonStore(spark, base)
-    events = t(spark, sf_dir, "events")
+    def build(base: str) -> str:
+        store = CarbonStore(spark, base)
+        events = t(spark, sf_dir, "events")
 
-    # Base table: zeroed profiles for users hashing to the UPDATE
-    # cohorts; the user_id % 3 == 2 cohort is absent and must arrive
-    # through merge's INSERT path.
-    profile = lambda df: df.select(  # noqa: E731
-        "user_id",
-        F.lit(0.0).alias("total_value"),
-        F.lit(0).cast("long").alias("n_events"),
-        F.lit(None).cast("string").alias("last_ts"),
-    )
-    seed = profile(
-        events.filter(F.col("user_id") % _INSERT_MOD != 2).select("user_id").distinct()
-    )
-    store.create_table("profiles", seed.schema, sort_columns=["user_id"])
-    store.load("profiles", seed)
+        # Base table: zeroed profiles for users hashing to the UPDATE
+        # cohorts; the user_id % 3 == 2 cohort is absent and must arrive
+        # through merge's INSERT path.
+        profile = lambda df: df.select(  # noqa: E731
+            "user_id",
+            F.lit(0.0).alias("total_value"),
+            F.lit(0).cast("long").alias("n_events"),
+            F.lit(None).cast("string").alias("last_ts"),
+        )
+        seed = profile(
+            events.filter(F.col("user_id") % _INSERT_MOD != 2).select("user_id").distinct()
+        )
+        store.create_table("profiles", seed.schema, sort_columns=["user_id"])
+        store.load("profiles", seed)
 
-    # Stage the event log as one parquet file per user cohort so each
-    # micro-batch (maxFilesPerTrigger=1) carries a DISJOINT key set —
-    # the final state is then batch-order independent, hence
-    # oracle-expressible as one GROUP BY over the whole log.
-    stage = mkdtemp(prefix="carbondata_streammerge_stage_")
-    for cohort in range(_INSERT_MOD):
-        events.filter(F.col("user_id") % _INSERT_MOD == cohort).coalesce(
-            1
-        ).write.mode("append").parquet(stage)
+        # Stage the event log as one parquet file per user cohort so each
+        # micro-batch (maxFilesPerTrigger=1) carries a DISJOINT key set —
+        # the final state is then batch-order independent, hence
+        # oracle-expressible as one GROUP BY over the whole log.
+        stage = mkdtemp(prefix="carbondata_streammerge_stage_")
+        for cohort in range(_INSERT_MOD):
+            events.filter(F.col("user_id") % _INSERT_MOD == cohort).coalesce(
+                1
+            ).write.mode("append").parquet(stage)
 
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+        )
 
-    q = stream_merge(
-        store,
-        "profiles",
-        stream,
-        keys="user_id",
-        checkpoint_dir=mkdtemp(prefix="carbondata_streammerge_ckpt_"),
-        transform=per_user_agg,
-    )
-    q.awaitTermination()
-    _BUILT[key] = base
-    return store
+        q = stream_merge(
+            store,
+            "profiles",
+            stream,
+            keys="user_id",
+            checkpoint_dir=mkdtemp(prefix="carbondata_streammerge_ckpt_"),
+            transform=per_user_agg,
+        )
+        q.awaitTermination()
+        return base
+
+    return CarbonStore(spark, built(spark, "streammerge", build, sf_dir))
 
 
 @register(

@@ -1,4 +1,4 @@
-"""Driver row for the reference-suite front-door paths fixed in r14.
+"""Driver row for the reference-suite front-door paths.
 
 tests/test_reference_suites.py replays all 26 active reference
 acceptance classes locally; this row pushes the specific front-door
@@ -40,24 +40,24 @@ LOAD = (
     " PARTITIONDATA(DELIMITER ',', QUOTECHAR '\"')"
 )
 
-_BUILT: dict[str, str] = {}  # app_id -> store path (fixture is sf-independent)
-
 
 def _cube(spark: SparkSession):
-    from carbondata_spark.query_defs._tmpdirs import mkdtemp
+    """The cube, built once per Spark app (it does not depend on the
+    scale factor)."""
+    from carbondata_spark.query_defs._tmpdirs import built
     from carbondata_spark.sql import CarbonSession
     from carbondata_spark.store import CarbonStore
 
     props = {"carbon.timestamp.format": "dd-MM-yyyy"}
-    app = spark.sparkContext.applicationId
-    if app in _BUILT:
-        return CarbonSession(spark, CarbonStore(spark, _BUILT[app]), properties=props)
-    base = mkdtemp(prefix="carbondata_refsuite_q_")
-    cs = CarbonSession(spark, CarbonStore(spark, base), properties=props)
-    cs.sql(CREATE)
-    cs.sql(LOAD)
-    _BUILT[app] = base
-    return cs
+
+    def build(base: str) -> str:
+        cs = CarbonSession(spark, CarbonStore(spark, base), properties=props)
+        cs.sql(CREATE)
+        cs.sql(LOAD)
+        return base
+
+    store = CarbonStore(spark, built(spark, "refsuite_q", build))
+    return CarbonSession(spark, store, properties=props)
 
 
 def q_ref_typed_cube_load(spark: SparkSession, sf_dir: str):

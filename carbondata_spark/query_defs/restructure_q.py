@@ -1,8 +1,8 @@
 """ALTER CUBE restructure driver row.
 
-Upgrades the one SURVEY §2.10 item whose correctness column still reads
-"local" (VERDICT r16: "ALTER CUBE restructure — yes — local") to a full
-driver-oracle row: the reference's restructure statement driven through
+Puts the SURVEY §2.10 ALTER CUBE restructure item, which local tests
+cover, under a full driver-oracle row: the reference's restructure
+statement driven through
 the SQL front door end-to-end, with the post-restructure scan checked
 against a closed-form DuckDB oracle.
 
@@ -20,9 +20,38 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from carbondata_spark.queries import register
-from carbondata_spark.query_defs._tmpdirs import mkdtemp
+from carbondata_spark.query_defs._tmpdirs import built
 
-_BUILT: dict[tuple, str] = {}
+
+def _cube_session(spark: SparkSession, sf_dir: str):
+    """A session over the restructured cube, built once per (sf_dir,
+    Spark app): segment 0 loaded before the ALTER, segment 1 after."""
+    from carbondata_spark.catalog import table_path
+    from carbondata_spark.sql import CarbonSession
+    from carbondata_spark.store import CarbonStore
+
+    def build(base: str) -> str:
+        cs = CarbonSession(spark, CarbonStore(spark, base))
+        cs.sql(
+            "CREATE CUBE cust_cube"
+            " DIMENSIONS (c_mktsegment string)"
+            " MEASURES (c_acctbal double, c_custkey bigint)"
+        )
+        load = (
+            f"LOAD DATA INPATH '{table_path(sf_dir, 'customer')}'"
+            " INTO TABLE cust_cube OPTIONS('format'='parquet')"
+        )
+        cs.sql(load)  # segment 0: pre-restructure schema
+        cs.sql(
+            "ALTER CUBE cust_cube DROP (c_acctbal)"
+            " ADD MEASURES (c_nationkey bigint)"
+            " OPTIONS (DEFAULTS [c_nationkey=-1])"
+        )
+        cs.sql(load)  # segment 1: carries real c_nationkey values
+        return base
+
+    store = CarbonStore(spark, built(spark, "altercube", build, sf_dir))
+    return CarbonSession(spark, store)
 
 
 @register(
@@ -56,33 +85,7 @@ _BUILT: dict[tuple, str] = {}
     "rounding is needed.",
 )
 def q_alter_cube_restructure(spark: SparkSession, sf_dir: str):
-    from carbondata_spark.catalog import table_path
-    from carbondata_spark.sql import CarbonSession
-    from carbondata_spark.store import CarbonStore
-
-    key = (sf_dir, spark.sparkContext.applicationId, "alter_cube")
-    if key not in _BUILT:
-        base = mkdtemp(prefix="carbondata_altercube_")
-        cs = CarbonSession(spark, CarbonStore(spark, base))
-        cs.sql(
-            "CREATE CUBE cust_cube"
-            " DIMENSIONS (c_mktsegment string)"
-            " MEASURES (c_acctbal double, c_custkey bigint)"
-        )
-        load = (
-            f"LOAD DATA INPATH '{table_path(sf_dir, 'customer')}'"
-            " INTO TABLE cust_cube OPTIONS('format'='parquet')"
-        )
-        cs.sql(load)  # segment 0: pre-restructure schema
-        cs.sql(
-            "ALTER CUBE cust_cube DROP (c_acctbal)"
-            " ADD MEASURES (c_nationkey bigint)"
-            " OPTIONS (DEFAULTS [c_nationkey=-1])"
-        )
-        cs.sql(load)  # segment 1: carries real c_nationkey values
-        _BUILT[key] = base
-    cs = CarbonSession(spark, CarbonStore(spark, _BUILT[key]))
-    return cs.sql(
+    return _cube_session(spark, sf_dir).sql(
         "SELECT c_mktsegment,"
         " count(*) AS cnt,"
         " sum(c_custkey) AS sum_cust,"

@@ -1,10 +1,8 @@
 """Partition pruning + aggregate-table routing under the driver gate.
 
-Both were implemented and locally tested since r2 (tests/
-test_partitioned.py, tests/test_sql_and_agg.py) but carried no
-driver-facing CORRECTNESS row — the r6 verdict's coverage table lists
-them as the last in-scope §2 items whose correctness column says
-"local". These rows close that:
+Both are locally tested (tests/test_partitioned.py,
+tests/test_sql_and_agg.py); these rows put them under the driver's
+CORRECTNESS check as well:
 
 - ``q_store_partition_pruned``: orders ingested into a PARTITIONER
   table (hive-layout ``o_orderstatus=X`` directories per segment,
@@ -31,21 +29,16 @@ them as the last in-scope §2 items whose correctness column says
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from carbondata_spark.functions import dsum
 from carbondata_spark.queries import register, t
-
-# (sf_dir, app_id) -> store path; CarbonStore handles are rebuilt per
-# call around the CURRENT session (the driver owns its SparkSession).
-_BUILT: dict[tuple[str, str], str] = {}
+from carbondata_spark.query_defs._tmpdirs import built
 
 
 def _routing_store(spark: SparkSession, sf_dir: str):
-    """Build (once per process+session) the two routed tables:
+    """The two routed tables, built once per (sf_dir, Spark app):
 
     - ``orders_part``: PARTITIONER on o_orderstatus, 2 segments split
       on o_orderkey parity — every partition value appears in both
@@ -57,9 +50,7 @@ def _routing_store(spark: SparkSession, sf_dir: str):
     from carbondata_spark.plans.agg_table import create_aggregate_table
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _BUILT:
-        path = tempfile.mkdtemp(prefix="carbondata_routingq_")
+    def build(path: str) -> str:
         store = CarbonStore(spark, path)
         orders = t(spark, sf_dir, "orders")
 
@@ -83,8 +74,9 @@ def _routing_store(spark: SparkSession, sf_dir: str):
         )
         # this load's built-in refresh appends the incremental partial
         store.load("orders_fact", orders.filter(F.col("o_orderkey") % 2 == 1))
-        _BUILT[key] = path
-    return CarbonStore(spark, _BUILT[key])
+        return path
+
+    return CarbonStore(spark, built(spark, "routingq", build, sf_dir))
 
 
 @register(

@@ -1,9 +1,9 @@
 """Store-backed contract queries: the CarbonStore scan path under the
 driver's DuckDB differential gate.
 
-Round 1 verified the store (segments, schema evolution, zone-map
-pruning) only in local tests; every driver-checked query read raw
-parquet. These queries put the rebuilt core scan path — the analogue of
+Local tests verify the store (segments, schema evolution, zone-map
+pruning), but a driver-checked query that reads raw parquet exercises
+none of it. These queries put the rebuilt core scan path — the analogue of
 the reference's CarbonQueryRDD segment union
 (integration/spark/.../rdd/CarbonQueryRDD.scala:61-200) and driver-side
 block pruning (hadoop/.../CarbonInputFormat.java:177-201) — in front of
@@ -14,7 +14,7 @@ must match DuckDB reading the ORIGINAL parquet. If segment union,
 evolution alignment, default filling, or zone-map pruning drop or
 duplicate a single row, the hash mismatches.
 
-The store build is cached per (process, sf_dir, Spark app): ~15k rows at
+The store is built once per (sf_dir, Spark app): ~15k rows at
 the driver's sf0.01, built once, reused by all three queries.
 """
 
@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import datetime
 import os
-from carbondata_spark.query_defs._tmpdirs import mkdtemp
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -30,16 +29,13 @@ from pyspark.sql import types as T
 
 from carbondata_spark.functions import dround, dsum
 from carbondata_spark.queries import register, t
-
-# (sf_dir, app_id) -> store_path; the CarbonStore object is rebuilt per
-# call around the CURRENT session (the driver owns its SparkSession).
-_BUILT: dict[tuple[str, str], str] = {}
+from carbondata_spark.query_defs._tmpdirs import built
 
 _YEAR_BUCKETS = [(1995, 1996), (1997, 1998), (1999, 2000), (2001, 2002)]
 
 
 def _orders_store(spark: SparkSession, sf_dir: str):
-    """Build (once per process+session) the two store tables:
+    """The two store tables, built once per (sf_dir, Spark app):
 
     - ``orders_c``: 3 segments split by o_orderkey % 3, with an
       ALTER ADD COLUMNS (channel, default 'legacy') between the second
@@ -51,37 +47,34 @@ def _orders_store(spark: SparkSession, sf_dir: str):
     """
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key in _BUILT:
-        return CarbonStore(spark, _BUILT[key])
+    def build(path: str) -> str:
+        store = CarbonStore(spark, path)
+        orders = t(spark, sf_dir, "orders")
 
-    path = mkdtemp(prefix="carbondata_storeq_")
-    store = CarbonStore(spark, path)
-    orders = t(spark, sf_dir, "orders")
-
-    store.create_table("orders_c", orders.schema)
-    store.load("orders_c", orders.filter(F.col("o_orderkey") % 3 == 0))
-    store.load("orders_c", orders.filter(F.col("o_orderkey") % 3 == 1))
-    store.alter_add_columns(
-        "orders_c",
-        [T.StructField("channel", T.StringType())],
-        defaults={"channel": "legacy"},
-    )
-    store.load(
-        "orders_c",
-        orders.filter(F.col("o_orderkey") % 3 == 2).withColumn("channel", F.lit("web")),
-    )
-
-    store.create_table("orders_by_year", orders.schema)
-    for lo, hi in _YEAR_BUCKETS:
-        seg = orders.filter(
-            (F.col("o_orderdate") >= F.lit(datetime.datetime(lo, 1, 1)))
-            & (F.col("o_orderdate") < F.lit(datetime.datetime(hi + 1, 1, 1)))
+        store.create_table("orders_c", orders.schema)
+        store.load("orders_c", orders.filter(F.col("o_orderkey") % 3 == 0))
+        store.load("orders_c", orders.filter(F.col("o_orderkey") % 3 == 1))
+        store.alter_add_columns(
+            "orders_c",
+            [T.StructField("channel", T.StringType())],
+            defaults={"channel": "legacy"},
         )
-        store.load("orders_by_year", seg)
+        store.load(
+            "orders_c",
+            orders.filter(F.col("o_orderkey") % 3 == 2).withColumn("channel", F.lit("web")),
+        )
 
-    _BUILT[key] = path
-    return store
+        store.create_table("orders_by_year", orders.schema)
+        for lo, hi in _YEAR_BUCKETS:
+            seg = orders.filter(
+                (F.col("o_orderdate") >= F.lit(datetime.datetime(lo, 1, 1)))
+                & (F.col("o_orderdate") < F.lit(datetime.datetime(hi + 1, 1, 1)))
+            )
+            store.load("orders_by_year", seg)
+
+        return path
+
+    return CarbonStore(spark, built(spark, "storeq", build, sf_dir))
 
 
 @register(
@@ -172,7 +165,7 @@ def q_store_evolution(spark, sf_dir):
 )
 def q_complex_nested(spark, sf_dir):
     store = _orders_store(spark, sf_dir)
-    if "cust_orders_nested" not in store.tables():
+    if not store.has_table("cust_orders_nested"):
         orders = t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 300)
         nested = orders.groupBy("o_custkey").agg(
             F.collect_list(F.struct("o_orderkey", "o_totalprice")).alias("orders_arr")
@@ -219,14 +212,10 @@ def q_complex_nested(spark, sf_dir):
     "order breaks the hash.",
 )
 def q_complex_sql_load(spark, sf_dir):
-    import os
-
     from carbondata_spark.sql import CarbonSession
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId, "complex_sql")
-    if key not in _BUILT:
-        base = mkdtemp(prefix="carbondata_complexsql_")
+    def build(base: str) -> str:
         csv_dir = os.path.join(base, "csv")
         orders = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
         # route = "1:<price>$2:<price*0.5>" — double→string→double
@@ -254,17 +243,16 @@ def q_complex_sql_load(spark, sf_dir):
             " 'fileheader'='o_orderkey,o_orderstatus,route',"
             " 'complex_delimiter_level_1'='$', 'complex_delimiter_level_2'=':')"
         )
-        _BUILT[key] = os.path.join(base, "store")
-    from carbondata_spark.store import CarbonStore
+        return os.path.join(base, "store")
 
-    store = CarbonStore(spark, _BUILT[key])
+    store = CarbonStore(spark, built(spark, "complexsql", build, sf_dir))
     legs = store.table("complex_orders").select(
         "o_orderstatus", F.explode("route").alias("r")
     )
     # DECIMAL(18,4) sums on BOTH sides: the leg distances have ≤3 decimal
     # digits, so the cast is exact, both engines sum exactly (no
     # order-dependent double drift), and round(...,2) never sits on an
-    # engine-dependent half-cent boundary (r3 root cause: 1400-term double
+    # engine-dependent half-cent boundary (1400-term double
     # sums at 2.5e8 drift ~1e-4 across engines vs 3.8e-5 boundary margin).
     return legs.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_legs"),
@@ -302,9 +290,7 @@ def q_cube_ddl(spark, sf_dir):
     from carbondata_spark.sql import CarbonSession
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId, "cube_ddl")
-    if key not in _BUILT:
-        base = mkdtemp(prefix="carbondata_cubeddl_")
+    def build(base: str) -> str:
         cs = CarbonSession(spark, CarbonStore(spark, base))
         cs.sql(
             "CREATE CUBE orders_cube"
@@ -315,8 +301,9 @@ def q_cube_ddl(spark, sf_dir):
             f"LOAD DATA INPATH '{table_path(sf_dir, 'orders')}'"
             " INTO TABLE orders_cube OPTIONS('format'='parquet')"
         )
-        _BUILT[key] = base
-    cs = CarbonSession(spark, CarbonStore(spark, _BUILT[key]))
+        return base
+
+    cs = CarbonSession(spark, CarbonStore(spark, built(spark, "cubeddl", build, sf_dir)))
     return cs.sql(
         "SELECT o_orderstatus, o_orderpriority,"
         " count(*) AS cnt,"
@@ -350,9 +337,7 @@ def q_store_time_travel(spark, sf_dir):
 
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId, "time_travel")
-    if key not in _BUILT:
-        base = mkdtemp(prefix="carbondata_timetravel_")
+    def build(base: str) -> tuple[str, float]:
         store = CarbonStore(spark, base)
         orders = t(spark, sf_dir, "orders")
         store.create_table("orders_tt", orders.schema)
@@ -360,8 +345,9 @@ def q_store_time_travel(spark, sf_dir):
         mid_ts = _time.time()
         _time.sleep(0.01)
         store.load("orders_tt", orders.filter(F.col("o_orderkey") % 2 == 1))
-        _BUILT[key] = (base, mid_ts)
-    base, mid_ts = _BUILT[key]
+        return base, mid_ts
+
+    base, mid_ts = built(spark, "timetravel", build, sf_dir)
     store = CarbonStore(spark, base)
     return (
         store.table("orders_tt", as_of_ts=mid_ts)
@@ -398,35 +384,28 @@ def q_store_pruned(spark, sf_dir):
     )
 
 
-# (sf_dir, app_id) -> store_path for the z-order clustered build.
-_BUILT_Z: dict[tuple[str, str], str] = {}
-
-
 def _zorder_store(spark: SparkSession, sf_dir: str):
-    """Build (once per process+session) ``lineitem_z``: lineitem loaded
+    """``lineitem_z``, built once per (sf_dir, Spark app): lineitem loaded
     in two segments into a ``clustering='zorder'`` table clustered on
     (l_suppkey, l_partkey) — every load Morton-orders its rows
     (zorder.py), the analogue of the reference's per-load MDKey sort
     (MDKeyGenStep.java) with trailing-column pruning power."""
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key in _BUILT_Z:
-        return CarbonStore(spark, _BUILT_Z[key])
+    def build(path: str) -> str:
+        store = CarbonStore(spark, path)
+        li = t(spark, sf_dir, "lineitem")
+        store.create_table(
+            "lineitem_z",
+            li.schema,
+            sort_columns=["l_suppkey", "l_partkey"],
+            properties={"clustering": "zorder"},
+        )
+        store.load("lineitem_z", li.filter(F.col("l_orderkey") % 2 == 0), partitions=4)
+        store.load("lineitem_z", li.filter(F.col("l_orderkey") % 2 == 1), partitions=4)
+        return path
 
-    path = mkdtemp(prefix="carbondata_zorder_")
-    store = CarbonStore(spark, path)
-    li = t(spark, sf_dir, "lineitem")
-    store.create_table(
-        "lineitem_z",
-        li.schema,
-        sort_columns=["l_suppkey", "l_partkey"],
-        properties={"clustering": "zorder"},
-    )
-    store.load("lineitem_z", li.filter(F.col("l_orderkey") % 2 == 0), partitions=4)
-    store.load("lineitem_z", li.filter(F.col("l_orderkey") % 2 == 1), partitions=4)
-    _BUILT_Z[key] = path
-    return store
+    return CarbonStore(spark, built(spark, "zorder", build, sf_dir))
 
 
 @register(
@@ -460,12 +439,8 @@ def q_store_zorder(spark, sf_dir):
     )
 
 
-# (sf_dir, app_id) -> store_path for the bloom point-lookup build.
-_BUILT_B: dict[tuple[str, str], str] = {}
-
-
 def _bloom_store(spark: SparkSession, sf_dir: str):
-    """Build (once per process+session) ``orders_r``: orders split into
+    """``orders_r``, built once per (sf_dir, Spark app): orders split into
     4 segments by o_orderkey RESIDUE with ``bloom_columns=o_orderkey`` —
     every segment's zone map spans the whole key domain (range pruning
     keeps all four), but each key lives in exactly one segment, which
@@ -474,20 +449,17 @@ def _bloom_store(spark: SparkSession, sf_dir: str):
     query/filter/executer/IncludeFilterExecuterImpl.java)."""
     from carbondata_spark.store import CarbonStore
 
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key in _BUILT_B:
-        return CarbonStore(spark, _BUILT_B[key])
+    def build(path: str) -> str:
+        store = CarbonStore(spark, path)
+        orders = t(spark, sf_dir, "orders")
+        store.create_table(
+            "orders_r", orders.schema, properties={"bloom_columns": "o_orderkey"}
+        )
+        for r in range(4):
+            store.load("orders_r", orders.filter(F.col("o_orderkey") % 4 == r))
+        return path
 
-    path = mkdtemp(prefix="carbondata_bloom_")
-    store = CarbonStore(spark, path)
-    orders = t(spark, sf_dir, "orders")
-    store.create_table(
-        "orders_r", orders.schema, properties={"bloom_columns": "o_orderkey"}
-    )
-    for r in range(4):
-        store.load("orders_r", orders.filter(F.col("o_orderkey") % 4 == r))
-    _BUILT_B[key] = path
-    return store
+    return CarbonStore(spark, built(spark, "bloom", build, sf_dir))
 
 
 @register(

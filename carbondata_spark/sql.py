@@ -81,6 +81,7 @@ import glob
 import itertools
 import os
 import re
+import tempfile
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
@@ -838,6 +839,7 @@ class CarbonSession:
                 "ignore a load-shaping option"
             )
         fmt = opts.get("format", "csv").lower()
+        staging = None
         if fmt == "parquet":
             df = self.spark.read.parquet(path)
         elif fmt == "json":
@@ -1082,7 +1084,12 @@ class CarbonSession:
                 bad_records_action=opts.get("bad_records_action", "drop"),
                 header_in_file=file_has_header,
             )
-            df, _bad = split_bad_records(df)
+            # capture mode stages the parsed input; the segment holds its
+            # own copy once store.load returns, so the staging tree goes
+            # then (or when the object is dropped, if anything before the
+            # load raises)
+            staging = tempfile.TemporaryDirectory(prefix="carbondata_badrecords_")
+            df, _bad = split_bad_records(df, staging.name)
             for c in ts_cols:
                 # coalesce mirrors Spark's own CSV fallback (pattern
                 # first, then the general timestamp cast), so an ISO
@@ -1113,7 +1120,11 @@ class CarbonSession:
                     delim1=opts.get("complex_delimiter_level_1", "$"),
                     delim2=opts.get("complex_delimiter_level_2", ":"),
                 )
-        return self.store.load(table, df, mode=mode)
+        try:
+            return self.store.load(table, df, mode=mode)
+        finally:
+            if staging is not None:
+                staging.cleanup()
 
     # -- Hive-syntax CREATE TABLE ... STORED BY ------------------------------
 

@@ -459,11 +459,11 @@ class CarbonStore:
         shutil.rmtree(self._table_dir(table), ignore_errors=True)
 
     def tables(self) -> list[str]:
-        out = []
-        for name in sorted(os.listdir(self.store_path)):
-            if os.path.exists(self._schema_path(name)):
-                out.append(name)
-        return out
+        return [n for n in sorted(os.listdir(self.store_path)) if self.has_table(n)]
+
+    def has_table(self, table: str) -> bool:
+        """One stat of ``table``'s schema.json; ``tables()`` stats every table."""
+        return os.path.exists(self._schema_path(table))
 
     def describe(self, table: str) -> dict[str, Any]:
         meta = self._read_schema(table)
@@ -616,7 +616,7 @@ class CarbonStore:
     ) -> dict[int, dict[str, Any]]:
         """{segment id -> {file -> parquet FileMetaData}} for MANY segment
         dirs through ONE flat thread pool. Footer reads are tiny I/O-bound
-        requests (pyarrow releases the GIL); the r16 scaling matrix showed
+        requests (pyarrow releases the GIL); a segment-count scaling matrix showed
         a super-linear 16→32-segment step in broad-UPDATE wall time partly
         because the promotion loop walked each new segment's footers
         SERIALLY (one pool per segment — useless when a segment holds 1-2
@@ -1023,9 +1023,9 @@ class CarbonStore:
                 # push into every scan, so pruning is unaffected). The tag
                 # is a per-read LITERAL here — the segment id is known at
                 # plan time, and `_metadata` does not resolve through the
-                # Union a multi-segment read becomes (r15: a multi-
-                # candidate tagged detection on a partitioned table hit
-                # exactly that)
+                # Union a multi-segment read becomes (a multi-candidate
+                # tagged detection on a partitioned table hits exactly
+                # that)
                 raws = [self._read_segments([p]) for p in paths]
                 if _tag_col is not None:
                     raws = [

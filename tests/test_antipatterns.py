@@ -22,11 +22,11 @@ PKG_DIR = os.path.join(
 # demo query. Everything else must stay JVM-side codegen.
 ARROW_BATCH_ALLOWED = {
     "operators/multimodal.py",
-    # r15: the REAL codec-free decoders (PPM/WAV) — decode is inherently
+    # the REAL codec-free decoders (PPM/WAV) — decode is inherently
     # per-payload Python, Arrow-batched through the same mapInPandas
     # plumbing as multimodal.py; embarrassingly parallel, no shuffle
     "operators/media_codecs.py",
-    # r17: the RLE8 BMP kernel — same class: decode is
+    # the RLE8 BMP kernel — same class: decode is
     # inherently per-payload sequential, Arrow-batched, no shuffle
     "operators/media_rle.py",
     "streaming/ingest.py",
@@ -47,7 +47,7 @@ COLLECT_ALLOWED = {
     # metadata regardless of row count (same class as the footer min/max
     # reads feeding the manifest zone maps).
     "query_defs/jdbc_q.py",
-    # store.py's sole collect is the r13 IUD detection aggregate: one
+    # store.py's sole collect is the IUD detection aggregate: one
     # (segment_id, match_count) row per affected segment — bounded by
     # the manifest's segment count, never by data size (same class as a
     # SHOW LOADS listing); it's what replaced the per-segment serial
@@ -63,6 +63,15 @@ COLLECT_ALLOWED = {
 RDD_ALLOWED = {"functions/__init__.py"}
 
 BATCH_METHODS = {"mapInPandas", "applyInPandas", "applyInPandasWithState"}
+
+# A tempfile.mkdtemp tree outlives the process; package code takes its
+# temp dirs from query_defs/_tmpdirs.py, which removes them at exit.
+MKDTEMP_ALLOWED = {
+    "query_defs/_tmpdirs.py",
+    # split_bad_records' default staging dir serves direct callers; the
+    # SQL LOAD path passes its own and removes it once the load returns
+    "sources/csv.py",
+}
 
 
 def _py_files():
@@ -166,4 +175,29 @@ def test_no_rdd_or_cartesian_escapes():
     )
     assert not hits["crossJoin"], (
         f"crossJoin outside the broadcast-scalar idiom: {hits['crossJoin']}"
+    )
+
+
+def test_no_unmanaged_mkdtemp_in_package():
+    hits = []
+    for rel, path in _py_files():
+        if rel in MKDTEMP_ALLOWED:
+            continue
+        with open(path, "rb") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "mkdtemp"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "tempfile"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "tempfile"
+                and any(a.name == "mkdtemp" for a in node.names)
+            ):
+                hits.append((rel, node.lineno))
+    assert not hits, (
+        f"tempfile.mkdtemp outside query_defs/_tmpdirs.py: {hits} — "
+        "use _tmpdirs.mkdtemp or _tmpdirs.built so the tree is removed"
     )

@@ -210,7 +210,7 @@ def test_dimension_from_rejected_loudly(cs):
         )
 
 
-# --- r14 review hardening -------------------------------------------------
+# --- header and option-placement hardening ----------------------------------
 
 
 def test_headerless_file_without_fileheader_raises(cs):
@@ -263,7 +263,7 @@ def test_decimal_sort_column_is_excluded_everywhere(cs, spark):
     assert cs.sql("select count(*) c from t_dec_hive").collect()[0][0] == 2
 
 
-# --- r15: option VALUE semantics sweep (spellings, defaults, collisions) --
+# --- option VALUE semantics sweep (spellings, defaults, collisions) -------
 
 
 def test_delimiter_tab_spelling(cs):
@@ -348,7 +348,7 @@ def test_delimiter_complex_collision_rejected(cs):
 
 
 def test_delimiter_complex_collision_raw_spelling(cs):
-    """r16 (ADVICE): the reference compares RAW option spellings
+    """The reference compares RAW option spellings
     (cubeSchema.scala:1881-1885) — DELIMITER '\\t' (backslash-t, later
     unescaped to a tab) against COMPLEX_DELIMITER_LEVEL_1 '\\t' (kept
     raw) must collide, even though the unescaped byte differs from the
@@ -372,7 +372,7 @@ def test_delimiter_complex_collision_raw_spelling(cs):
 
 
 def test_header_peek_skips_compressed_members(cs):
-    """r16 (ADVICE): a .csv.gz member is decompressed transparently by
+    """A .csv.gz member is decompressed transparently by
     Spark's reader, but the per-file header validation's raw readline
     would see gzip bytes and spuriously reject the load — compressed
     members keep the documented uniform-header assumption instead."""
@@ -389,7 +389,7 @@ def test_header_peek_skips_compressed_members(cs):
 
 
 def test_file_uri_conflicting_headers_rejected(cs):
-    """r16: the per-file header validation also covers file:// URIs —
+    """The per-file header validation also covers file:// URIs —
     a two-file directory whose members carry DIFFERENT headers would
     silently mis-project every non-peeked file and must raise."""
     d = mkdtemp(prefix="loadopts_conflict_")
@@ -403,7 +403,7 @@ def test_file_uri_conflicting_headers_rejected(cs):
 
 
 def test_glob_load_is_local_and_header_validated(cs):
-    """r17 (r16 driver advice): a LOAD path containing a Spark glob
+    """A LOAD path containing a Spark glob
     ('/dir/part-*.csv') fails os.path.exists but IS local — it must be
     expanded and per-file header-validated, not misclassified as a
     non-local URI that silently skips validation."""
@@ -445,7 +445,7 @@ def test_local_load_members_scheme_classification():
 
 
 def test_nonlocal_header_carried_load_warns(cs, monkeypatch):
-    """r16: a non-local URI (hdfs://, s3a://, ...) with a file-carried
+    """A non-local URI (hdfs://, s3a://, ...) with a file-carried
     header cannot be per-file validated driver-side — the load proceeds
     under the documented uniform-header assumption but WARNS, so a
     directory mixing header orders is at least diagnosable."""
@@ -464,10 +464,9 @@ def test_nonlocal_header_carried_load_warns(cs, monkeypatch):
 
 
 def test_empty_local_member_set_warns(cs, monkeypatch):
-    """r18 (r17 driver advice): a LOCAL path whose member expansion is
-    EMPTY (mistyped path, a Spark-only glob Python cannot expand like
-    '{a,b}.csv', or directory-only matches) used to skip per-file header
-    validation with neither an error nor the non-local warning. It must
+    """A LOCAL path whose member expansion is EMPTY (mistyped path, a
+    Spark-only glob Python cannot expand like '{a,b}.csv', or
+    directory-only matches) skips per-file header validation. It must
     warn, so a load that validated nothing is diagnosable."""
     import warnings
 
@@ -485,3 +484,19 @@ def test_empty_local_member_set_warns(cs, monkeypatch):
         "matched no plain files" in str(x.message) for x in w
     ), [str(x.message) for x in w]
     assert _rows(cs, "t_emptymembers") == {(1, "bonn", 2.5)}
+
+
+def test_capture_load_removes_its_staging_copy(cs, monkeypatch, tmp_path):
+    # capture mode stages the parsed input as parquet before the load;
+    # once the segment is committed the staging copy must be gone
+    import tempfile
+
+    path = _write(["id,city,amt", "1,x,2.5", "2,y,oops", "3,z,4.5"])
+    _mk(cs, "t_capture")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cs.sql(
+        f"LOAD DATA INPATH '{path}' INTO TABLE t_capture"
+        " OPTIONS('bad_records_action'='capture')"
+    )
+    assert _rows(cs, "t_capture") == {(1, "x", 2.5), (3, "z", 4.5)}
+    assert not list(tmp_path.glob("carbondata_badrecords_*"))

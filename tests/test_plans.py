@@ -65,7 +65,7 @@ def test_cosine_pairs_no_cartesian(spark, sf_dir):
 
 def test_tfidf_no_forced_vocab_broadcast(spark, sf_dir):
     """No VOCABULARY-sized subtree may carry a broadcast hint: a 100-TB
-    corpus vocabulary cannot fit a broadcast. The v2 plan (r13) has no
+    corpus vocabulary cannot fit a broadcast. The tf-idf plan has no
     dfreq side at all; its ONLY hint is the deliberate broadcast of the
     one-row n_docs count aggregate — pin exactly that, so a future edit
     hinting a data-scale side trips this."""
@@ -222,15 +222,13 @@ def test_decontaminate_no_cartesian(spark, sf_dir):
 
 
 def test_tfidf_corpus_exploded_once(spark, sf_dir):
-    """r3 flagged +11% from the corpus being exploded+aggregated twice
-    (once for tf, once for dfreq); v1 fixed it with a persist, v2 (live
-    since r13) eliminates the second consumer entirely — the optimized
-    plan must contain exactly ONE explode Generate and no persist
-    read-back (nothing left to share)."""
-    # other tests run the v1 oracle, whose repersist of the tf subtree
-    # Spark would cache-substitute into v2's IDENTICAL logical subtree
-    # (InMemoryRelation by plan equality) — clear so the pin sees v2's
-    # own shape, not a neighbor test's cache
+    """Exploding and aggregating the corpus twice (once for tf, once for
+    dfreq) costs 11%; the tf-idf plan has no second consumer of tf — the
+    optimized plan must contain exactly ONE explode Generate and no
+    persist read-back (nothing left to share)."""
+    # a neighbor test's persisted frame with an IDENTICAL logical
+    # subtree would be cache-substituted into this plan (InMemoryRelation
+    # by plan equality) — clear so the pin sees the operator's own shape
     spark.catalog.clearCache()
     df = registry()["p_text_tfidf"].fn(spark, sf_dir)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
@@ -241,7 +239,7 @@ def test_tfidf_corpus_exploded_once(spark, sf_dir):
 
 
 def test_new_pipeline_queries_plan_shapes(spark, sf_dir):
-    """Plan pins for the round-4 additions: no cartesian anywhere, the
+    """Plan pins for three pipeline queries: no cartesian anywhere, the
     packing query runs exactly one Window (the per-shard cumsum), and the
     funnel is pure aggregation (no join, no window)."""
     for name in ["q_retention_cohorts", "p_text_unigram_nll", "q_funnel"]:

@@ -14,8 +14,6 @@ def test_registered_form_and_restructure_semantics(spark, sf_dir):
     import carbondata_spark.query_defs.restructure_q as rq
     from carbondata_spark.oracle import compare, duckdb_connection
     from carbondata_spark.queries import registry
-    from carbondata_spark.sql import CarbonSession
-    from carbondata_spark.store import CarbonStore
 
     sf = os.path.join(os.path.dirname(sf_dir), "sf0.001")
     q = registry()["q_alter_cube_restructure"]
@@ -29,8 +27,7 @@ def test_registered_form_and_restructure_semantics(spark, sf_dir):
     # restructure semantics on the SAME built cube: the dropped measure
     # must be gone from reads of every segment (pre- and post-ALTER
     # alike)...
-    key = (sf, spark.sparkContext.applicationId, "alter_cube")
-    cs = CarbonSession(spark, CarbonStore(spark, rq._BUILT[key]))
+    cs = rq._cube_session(spark, sf)
     cols = cs.store.table("cust_cube").columns
     assert "c_acctbal" not in cols, cols
     # ...and the added measure is double-typed (int_measures_as_double

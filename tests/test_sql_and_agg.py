@@ -361,6 +361,42 @@ def test_sql_create_aggregatetable_and_transparent_routing(cs, spark):
     assert {r["region"]: r["s"] for r in no_route.collect()} == pytest.approx(want_m)
 
 
+def test_rollup_route_lists_the_store_once(cs, spark, monkeypatch):
+    """A routed GROUP BY lists the store once, for the statement's table
+    names; each candidate rollup's existence is one stat, not a listing.
+    Both rollups can answer the query and the wider one is listed first
+    (aggregate tables list by name), so both reach the coverage check."""
+    cs.sql("CREATE TABLE fact (region string, product string, amount double)")
+    df = spark.createDataFrame(
+        [(["east", "west"][i % 2], f"p{i % 3}", float(i)) for i in range(60)],
+        "region string, product string, amount double",
+    )
+    cs.store.load("fact", df)
+    cs.sql(
+        "CREATE AGGREGATETABLE a_wide FROM TABLE fact "
+        "GROUP BY (region, product) AGGREGATES (sum(amount))"
+    )
+    cs.sql(
+        "CREATE AGGREGATETABLE b_narrow FROM TABLE fact "
+        "GROUP BY (region) AGGREGATES (sum(amount))"
+    )
+    calls = []
+    listing = CarbonStore.tables
+
+    def counted(self):
+        calls.append(1)
+        return listing(self)
+
+    monkeypatch.setattr(CarbonStore, "tables", counted)
+    routed = cs.sql("SELECT region, sum(amount) AS s FROM fact GROUP BY region")
+    assert len(calls) == 1
+    assert any("_agg_b_narrow" in f for f in routed.inputFiles())
+    assert {r["region"]: r["s"] for r in routed.collect()} == {
+        "east": float(sum(range(0, 60, 2))),
+        "west": float(sum(range(1, 60, 2))),
+    }
+
+
 def test_sql_mixed_case_identifiers_and_literals(cs, spark):
     cs.sql("CREATE TABLE MixedCase (Id bigint, CityName string)")
     assert "MixedCase" in cs.store.tables()

@@ -488,17 +488,18 @@ def test_scan_composes_with_time_travel(spark, tmp_path):
 
 
 def test_fact_store_cache_invalidates_on_mutation(spark, monkeypatch):
-    """r6 verdict: the fact-table cache assumed immutability with no
-    enforcement — a load/compact/delete on the same store path after a
-    table was cached would be silently invisible. The cache entry is now
-    keyed on the manifest's stat stamp (every commit os.replace's
-    tablestatus.json), so any mutation surfaces as a re-resolution while
-    the unchanged path still skips the ~25 ms locked manifest re-read."""
+    """A load/compact/delete on the fact store after a table was read
+    must not be silently invisible. fact_table reads through
+    CarbonStore.table, whose cached resolution is keyed on the
+    manifest's stat stamp (every commit os.replace's tablestatus.json),
+    so any mutation surfaces as a re-resolution while the unchanged path
+    still skips the locked manifest re-read."""
     from carbondata_spark import fact_store as fs
+    from carbondata_spark.query_defs import _tmpdirs
 
-    # isolate from the process-level cache other tests/bench share
-    monkeypatch.setattr(fs, "_BUILT", {})
-    monkeypatch.setattr(fs, "_TABLES", {})
+    # a fresh fact store, so the load below never reaches the one that
+    # other tests and the bench share
+    monkeypatch.setattr(_tmpdirs, "_BUILT", {})
     sf = "/root/testdata/sf0.001"
 
     df1 = fs.fact_table(spark, sf, "orders")
@@ -592,12 +593,12 @@ def test_rollup_routing_self_disables_on_stale_coverage(spark, tmp_path):
 
 
 def test_compact_summary_table_preserves_coverage_tags(spark, tmp_path):
-    """ADVICE r8 (medium): compacting a rollup SUMMARY table used to
-    erase the merged segment's fact_segments provenance — the next
-    refresh saw covered = ∅ ⊆ current and appended full partials on top
-    of the merged rows, double-counting every group while the coverage
-    guard reported covered == live. compact() now unions the merged
-    segments' tags, so refresh stays a no-op and routing stays sound."""
+    """Compacting a rollup SUMMARY table must keep the merged segment's
+    fact_segments provenance: without it the next refresh sees
+    covered = ∅ ⊆ current and appends full partials on top of the merged
+    rows, double-counting every group while the coverage guard reports
+    covered == live. compact() unions the merged segments' tags, so
+    refresh stays a no-op and routing stays sound."""
     from carbondata_spark.plans import agg_table as at
 
     store = CarbonStore(spark, str(tmp_path / "store"))

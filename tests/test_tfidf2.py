@@ -1,30 +1,62 @@
-"""Equivalence + plan pins for the v2 TF-IDF plan (operators/tfidf2.py),
-which is LIVE behind the p_text_tfidf headline query since round 13.
-text.tfidf_top_terms (v1) is kept as the independent row-identity oracle
-here: the two implementations must stay bit-identical."""
+"""Equivalence + plan pins for the TF-IDF top-terms plan
+(operators/tfidf2.py), the operator behind the p_text_tfidf registry
+row. A driver-side Python oracle pins its rows: whitespace tokens of the
+lowercased, space-trimmed text, tf * ln(N/df) with N counted from the
+input, DuckDB-style rounding to 4 places, ties broken by term."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import math
+import re
+from collections import Counter
 
 from carbondata_spark.catalog import load_table
-from carbondata_spark.operators.text import tfidf_top_terms
 from carbondata_spark.operators.tfidf2 import tfidf_top_terms_v2
+
+
+def _round4(x: float) -> float:
+    # half away from zero on the scaled binary value, as DuckDB rounds
+    scaled = math.floor(abs(x) * 10000.0 + 0.5) / 10000.0
+    return -scaled if x < 0 else scaled
+
+
+def _tfidf_oracle(rows, k: int = 3) -> list[tuple]:
+    """(doc_id, term, tfidf, rank) rows ordered by doc_id, rank."""
+    n_docs = len(rows)
+    tf: dict = {}
+    for doc_id, text in rows:
+        if text is None:
+            continue
+        # split(trim(lower(text)), '\s+'): Spark's trim strips spaces
+        # only, Java's \s is ASCII whitespace, and a leading or trailing
+        # separator yields an empty token, as re.split does
+        words = re.split(r"\s+", text.lower().strip(" "), flags=re.ASCII)
+        tf.setdefault(doc_id, Counter()).update(words)
+    df = Counter(w for counts in tf.values() for w in counts)
+    out = []
+    for doc_id in sorted(tf):
+        vals = {w: _round4(c * math.log(n_docs / df[w])) for w, c in tf[doc_id].items()}
+        top = sorted(vals, key=lambda w: (-vals[w], w))[:k]
+        out += [(doc_id, w, vals[w], r) for r, w in enumerate(top, 1)]
+    return out
+
+
+def _rows(df) -> list[tuple]:
+    return [tuple(r) for r in df.orderBy("doc_id", "rank").collect()]
 
 
 def test_v2_is_row_identical_to_current(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(400)
-    a = tfidf_top_terms(docs).orderBy("doc_id", "rank").collect()
-    b = tfidf_top_terms_v2(docs).orderBy("doc_id", "rank").collect()
+    a = _tfidf_oracle(docs.select("doc_id", "text").collect())
+    b = _rows(tfidf_top_terms_v2(docs))
     assert a == b
     assert len(a) > 0
 
 
 def test_v2_edge_docs_match(spark):
     # empty text, single word, all-same-word, ties on tfidf. The empty
-    # doc also pins the n_docs contract: doc 1 contributes no tf rows
-    # but MUST count toward N (n_docs comes from the input frame, not
-    # the tf frame).
+    # doc also pins the n_docs contract: N counts every input row (n_docs
+    # comes from the input frame, not the tf frame).
     docs = spark.createDataFrame(
         [
             (1, ""),
@@ -35,8 +67,8 @@ def test_v2_edge_docs_match(spark):
         ],
         "doc_id long, text string",
     )
-    a = tfidf_top_terms(docs).orderBy("doc_id", "rank").collect()
-    b = tfidf_top_terms_v2(docs).orderBy("doc_id", "rank").collect()
+    a = _tfidf_oracle(docs.collect())
+    b = _rows(tfidf_top_terms_v2(docs))
     assert a == b
 
 
